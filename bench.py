@@ -20,7 +20,7 @@ from rialto_airflow_spark.session import get_spark  # noqa: E402
 queries()  # load extension registries
 
 
-def _steal_ticks() -> int:
+def steal_ticks() -> int:
     """Cumulative hypervisor steal ticks (/proc/stat cpu line, field 8
     after the 'cpu' tag). This box takes multi-minute steal bursts
     (round-12 verdict: a whole driver bench was contaminated and
@@ -32,6 +32,18 @@ def _steal_ticks() -> int:
         return int(parts[8])
     except Exception:  # noqa: BLE001 — non-Linux / sandboxed
         return 0
+
+
+def query_kwargs(fn) -> dict:
+    """Call kwargs for a registered query function. Queries exposing a
+    ``self_check`` knob (q34's built-in-vs-manual twin) run WITHOUT it
+    in every harness: they measure the operator, not its verification
+    — the correctness run keeps the check."""
+    import inspect
+
+    if "self_check" in inspect.signature(fn).parameters:
+        return {"self_check": False}
+    return {}
 
 
 def main() -> None:
@@ -51,10 +63,6 @@ def main() -> None:
     # Failure-isolated (round-3 verdict #2): one query that throws at
     # plan or execution time records null + its error and the rest of
     # the bench still produces numbers — BENCH must never be empty.
-    # queries exposing a `self_check` knob (q34's built-in-vs-manual
-    # twin) run WITHOUT it here: the bench measures the operator, not
-    # its verification — the driver's correctness run keeps the check.
-    import inspect
     import statistics
 
     from pyspark.sql import functions as F
@@ -95,19 +103,15 @@ def main() -> None:
     steal_samples: dict[str, list[int]] = {}
     timings: dict[str, float | None] = {}
     errors: dict[str, str] = {}
-    steal_bench_start = _steal_ticks()
+    steal_bench_start = steal_ticks()
     for _ in range(runs):
         for name in sorted(REGISTRY):
             if name in errors:
                 continue
             fn = REGISTRY[name].fn
-            kwargs = (
-                {"self_check": False}
-                if "self_check" in inspect.signature(fn).parameters
-                else {}
-            )
+            kwargs = query_kwargs(fn)
             sink = checksum_sink if name in CHECKSUM_SINK else collect_sink
-            s0 = _steal_ticks()
+            s0 = steal_ticks()
             t0 = time.perf_counter()
             try:
                 sink(fn(spark, sf_dir, **kwargs))
@@ -119,7 +123,7 @@ def main() -> None:
                 continue
             dt = round(time.perf_counter() - t0, 3)
             samples.setdefault(name, []).append(dt)
-            steal_samples.setdefault(name, []).append(_steal_ticks() - s0)
+            steal_samples.setdefault(name, []).append(steal_ticks() - s0)
             if timings.get(name) is None or dt < timings[name]:
                 timings[name] = dt
 
@@ -152,11 +156,7 @@ def main() -> None:
         # must isolate the SINK cost, so both numbers need the same
         # (verification-free) plan or the delta stops meaning
         # "driver-serialization cost"
-        kwargs = (
-            {"self_check": False}
-            if "self_check" in inspect.signature(fn).parameters
-            else {}
-        )
+        kwargs = query_kwargs(fn)
         try:
             cmp_entry = {}
             for sink_name, sink in (("collect", collect_sink), ("checksum", checksum_sink)):
@@ -168,7 +168,7 @@ def main() -> None:
             pass
 
     total = round(sum(t for t in timings.values() if t is not None), 3)
-    steal_total = _steal_ticks() - steal_bench_start
+    steal_total = steal_ticks() - steal_bench_start
 
     # q38 build-vs-probe split (round-12 verdict item 5): the main
     # q38 number amortizes the persisted IVF index across runs (the

@@ -490,12 +490,14 @@ def build_harvest_dag() -> Dag:
     return dag
 
 
-def _recorded_columns(store, info) -> set[str] | None:
-    """Column names the stored head's commit payload records — a
-    METADATA schema check (no data read). None when the payload
-    predates schema tracking."""
+def _stored_columns(store, spark, table, info) -> set[str]:
+    """Column names of the stored head: the commit payload's recorded
+    schema (a METADATA check, no data read), or the read's schema for
+    a payload that predates schema tracking."""
     st = store._schema_of(info)
-    return None if st is None else set(st.fieldNames())
+    if st is None:
+        return set(store.read(spark, table).columns)
+    return set(st.fieldNames())
 
 
 def _fragment_for(new, key, changed):
@@ -516,29 +518,30 @@ def _fragment_for(new, key, changed):
     )
 
 
-def _persist_keyed_table(
-    store, spark, table, new, key, *,
-    n_buckets, compare_cols, is_full,
-    sort_cols=None, max_file_rows=None, changed_keys=None,
+def _persist_table(
+    store, spark, table, new, key, fallback_diff, *,
+    n_buckets, is_full, sort_cols=None, max_file_rows=None,
+    changed_keys=None,
 ) -> None:
-    """O(changes) persistence for a key-unique run table (see
-    ``complete``). Bootstrap / full-harvest / schema-change runs take
-    ``write_manifest``; incremental runs apply a keyed REPLACE.
+    """O(changes) persistence of run table ``new`` into manifest table
+    ``table`` bucketed by ``key`` (see ``complete``). Bootstrap,
+    full-harvest and schema-change runs take ``write_manifest``; the
+    first uses the caller's layout, the re-bootstraps PRESERVE the
+    stored table's recorded layout (bucket sizing may have grown via
+    split_buckets; sort_cols/max_file_rows carry the file-COW
+    behavior — ctx defaults here would silently degrade every later
+    incremental run to whole-bucket rewrites). A schema change must
+    re-bootstrap: a keyed replace would leave rows whose shared
+    columns are unchanged out of the dirty set while the write widened
+    the schema.
 
-    ``changed_keys`` (a one-column ``key`` DataFrame — the run's own
-    touched-key set, threaded from the DAG's tracking) makes the
-    persist O(changes) in READS too: the stored head is never scanned
-    at all — the replace rewrites only the files containing those
-    keys. Deletes need no special casing (a changed key absent from
-    ``new`` simply has no fragment row). Without it, the fallback
-    diffs the stored head via ``snapshot_diff`` — an O(table) read
-    per run, the round-11 verdict's one remaining table-sized curve.
-    The changed-set joins carry NO broadcast hint on the fallback —
-    AQE picks the strategy from the measured size (round-10 ADVICE:
-    an unconditional hint turned corpus-sized changed sets into
-    driver-OOM broadcasts)."""
-    from rialto_airflow_spark.operators.merge import snapshot_diff
-
+    Incremental runs apply a keyed REPLACE. ``changed_keys`` (one
+    ``key`` column — the run's own touched-key set, threaded from the
+    DAG's tracking) makes the persist O(changes) in READS too: the
+    stored head is never scanned, and deletes need no special casing
+    (a changed key absent from ``new`` simply has no fragment row).
+    Without it, ``fallback_diff(stored)`` returns the ``(affected
+    keys, fragment)`` pair from an O(table) read of the stored head."""
     info = store.current_info(table)
     if info is None or "manifest" not in info:
         store.write_manifest(
@@ -546,25 +549,9 @@ def _persist_keyed_table(
             sort_cols=sort_cols, max_file_rows=max_file_rows,
         )
         return
-    if is_full:
-        # full harvest re-bootstraps, PRESERVING the stored table's
-        # recorded layout (bucket sizing may have grown via
-        # split_buckets; sort_cols/max_file_rows carry the file-COW
-        # behavior) — taking the ctx defaults here would silently
-        # degrade every later incremental run to whole-bucket rewrites
-        store.write_manifest(
-            new, table, key, n_buckets=info["n_buckets"],
-            sort_cols=info.get("sort_cols"),
-            max_file_rows=info.get("max_file_rows"),
-        )
-        return
-    old_cols = _recorded_columns(store, info)
-    if old_cols is None:
-        old_cols = set(store.read(spark, table).columns)
-    if old_cols != set(new.columns):
-        # schema evolved: a keyed replace would leave rows whose
-        # shared columns are unchanged out of the dirty set while the
-        # write widened the schema — re-bootstrap instead
+    if is_full or _stored_columns(store, spark, table, info) != set(
+        new.columns
+    ):
         store.write_manifest(
             new, table, key, n_buckets=info["n_buckets"],
             sort_cols=info.get("sort_cols"),
@@ -572,73 +559,40 @@ def _persist_keyed_table(
         )
         return
     if changed_keys is not None:
-        changed = changed_keys.select(key).distinct()
-        if not changed.limit(1).count():
+        affected = changed_keys.select(key).distinct()
+        if not affected.limit(1).count():
             return  # nothing touched — no version churn
-        store.replace_keys_manifest(
-            spark, table, changed, _fragment_for(new, key, changed)
-        )
-        return
-    old = store.read(spark, table)
+        fragment = _fragment_for(new, key, affected)
+    else:
+        affected, fragment = fallback_diff(store.read(spark, table))
+    store.replace_keys_manifest(spark, table, affected, fragment)
+
+
+def _keyed_diff(old, new, key, compare_cols):
+    """A key-unique table's fallback diff: ``snapshot_diff`` against
+    the stored head. The changed-set joins carry NO broadcast hint —
+    AQE picks the strategy from the measured size (round-10 ADVICE:
+    an unconditional hint turned corpus-sized changed sets into
+    out-of-memory broadcasts)."""
+    from rialto_airflow_spark.operators.merge import snapshot_diff
+
     changed = (
         snapshot_diff(old, new, key, compare_cols=compare_cols)
         .select(key)
         .distinct()
     )
-    fragment = new.join(changed, key, "left_semi")
-    store.replace_keys_manifest(spark, table, changed, fragment)
+    return changed, new.join(changed, key, "left_semi")
 
 
-def _persist_edge_table(
-    store, spark, table, new, *, fan_key, key_cols, n_buckets, is_full,
-    changed_keys=None,
-) -> None:
-    """O(changes) persistence for an association table (M4 shape):
-    bucketed by the publication-side key and applied as a keyed
-    REPLACE of the affected publications' whole edge groups.
-
-    ``changed_keys`` (one ``fan_key`` column — the run's touched pub
-    ids) skips the stored-head read entirely, like
-    :func:`_persist_keyed_table`. The fallback diffs by PRESENCE
-    (edges are insert/delete-only and carry no stamp) with ONE
-    null-safe full-outer join over the stored table — one read, and
-    identical null-key edges match instead of churning through
-    affected every run; the fragment semi-join is null-safe too, so a
-    null-pub edge group round-trips instead of being silently dropped
-    (round-11 ADVICE). Full-harvest runs re-bootstrap: M5 resets the
-    edge table wholesale, the presence diff would BE the table."""
+def _edge_presence_diff(old, new, fan_key, key_cols):
+    """An association table's fallback diff, by PRESENCE (edges are
+    insert/delete-only and carry no stamp): ONE null-safe full-outer
+    join over the stored table — one read, and identical null-key
+    edges match instead of churning through affected every run; the
+    fragment semi-join is null-safe too, so a null-pub edge group
+    round-trips instead of being silently dropped (round-11 ADVICE)."""
     from pyspark.sql import functions as F
 
-    info = store.current_info(table)
-    if info is None or "manifest" not in info:
-        store.write_manifest(new, table, fan_key, n_buckets=n_buckets)
-        return
-    if is_full:
-        store.write_manifest(
-            new, table, fan_key, n_buckets=info["n_buckets"],
-            sort_cols=info.get("sort_cols"),
-            max_file_rows=info.get("max_file_rows"),
-        )
-        return
-    old_cols = _recorded_columns(store, info)
-    if old_cols is None:
-        old_cols = set(store.read(spark, table).columns)
-    if old_cols != set(new.columns):
-        store.write_manifest(
-            new, table, fan_key, n_buckets=info["n_buckets"],
-            sort_cols=info.get("sort_cols"),
-            max_file_rows=info.get("max_file_rows"),
-        )
-        return
-    if changed_keys is not None:
-        affected = changed_keys.select(fan_key).distinct()
-        if not affected.limit(1).count():
-            return
-        store.replace_keys_manifest(
-            spark, table, affected, _fragment_for(new, fan_key, affected)
-        )
-        return
-    old = store.read(spark, table)
     o = old.select(*key_cols).withColumn("__o", F.lit(True)).alias("o")
     nn = new.select(*key_cols).withColumn("__n", F.lit(True)).alias("n")
     cond = F.lit(True)
@@ -654,8 +608,38 @@ def _persist_edge_table(
         )
         .distinct()
     )
-    store.replace_keys_manifest(
-        spark, table, affected, _fragment_for(new, fan_key, affected)
+    return affected, _fragment_for(new, fan_key, affected)
+
+
+def _persist_keyed_table(
+    store, spark, table, new, key, *,
+    n_buckets, compare_cols, is_full,
+    sort_cols=None, max_file_rows=None, changed_keys=None,
+) -> None:
+    """Persist a key-unique run table (:func:`_persist_table`; the
+    fallback is :func:`_keyed_diff`)."""
+    _persist_table(
+        store, spark, table, new, key,
+        lambda old: _keyed_diff(old, new, key, compare_cols),
+        n_buckets=n_buckets, is_full=is_full, sort_cols=sort_cols,
+        max_file_rows=max_file_rows, changed_keys=changed_keys,
+    )
+
+
+def _persist_edge_table(
+    store, spark, table, new, *, fan_key, key_cols, n_buckets, is_full,
+    changed_keys=None,
+) -> None:
+    """Persist an association table (M4 shape) bucketed by the
+    publication-side ``fan_key``, as a keyed REPLACE of the affected
+    publications' whole edge groups (:func:`_persist_table`; the
+    fallback is :func:`_edge_presence_diff`). Full-harvest runs
+    re-bootstrap: M5 resets the edge table wholesale, the presence
+    diff would BE the table."""
+    _persist_table(
+        store, spark, table, new, fan_key,
+        lambda old: _edge_presence_diff(old, new, fan_key, key_cols),
+        n_buckets=n_buckets, is_full=is_full, changed_keys=changed_keys,
     )
 
 

@@ -77,11 +77,6 @@ def piped(col: Column | str) -> Column:
     )
 
 
-def join_keys(*cols: Column | str) -> Column:
-    """N6 — utils.py:185-197: space-join of present values in arg order."""
-    return F.concat_ws(" ", *[_c(c) for c in cols])
-
-
 def to_boolean(col: Column | str) -> Column:
     """N7a — authors.py:167-169: strict {'true','false'} map (trimmed,
     case-insensitive); anything else is null (reference raises)."""
@@ -95,15 +90,6 @@ def to_array(col: Column | str) -> Column:
     return F.when(c.isNull() | (c == ""), F.array().cast("array<string>")).otherwise(
         F.split(c, r"\|")
     )
-
-
-def days_since(start: Column | str, end: Column | str | None = None) -> Column:
-    """N8 — utils.py:208-223: whole days between UTC timestamps
-    (end defaults to now). Truncates toward zero like timedelta.days
-    for positive spans."""
-    s = _c(start)
-    e = F.current_timestamp() if end is None else _c(end)
-    return F.floor((e.cast("long") - s.cast("long")) / F.lit(86400)).cast("int")
 
 
 def normalize_funder_name(col: Column | str) -> Column:

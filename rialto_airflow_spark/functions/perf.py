@@ -166,3 +166,19 @@ def hold_alive(result: DataFrame, *deps: DataFrame) -> DataFrame:
     DataFrame instances accept ad-hoc attributes."""
     result._rialto_hold = deps
     return result
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir that is removed at interpreter exit — for the
+    functions whose RETURNED plan reads the dir lazily (streaming
+    checkpoints and sinks, a query-local table store): they cannot
+    reclaim it themselves, because their caller collects only
+    after they return, so the dir lives as long as the process instead of
+    outliving it."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

@@ -185,21 +185,6 @@ def winnow_fingerprint(
     return bind_once(hashes, body)
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass per-document profile: token counts, ratios, quality,
-    language guess, fingerprint. No shuffle; scales with partitions."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        F.round(stopword_ratio(text_col), 4).alias("stop_ratio"),
-        F.round(punct_ratio(text_col), 4).alias("punct_ratio"),
-        F.round(quality_score(text_col), 4).alias("quality"),
-        lang_id(text_col).alias("lang_guess"),
-        fingerprint(text_col).alias("fp"),
-    )
-
-
 def char_ngrams(col: Column | str, n: int = 3) -> Column:
     """Sliding character n-grams as an array column — pure Column
     algebra (sequence + substr), no UDF. Texts shorter than ``n``

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rialto_airflow_spark.functions.perf import hold_alive
+from rialto_airflow_spark.functions.perf import hold_alive, scratch_dir
 from rialto_airflow_spark.operators import dedup as D
 from rialto_airflow_spark.operators import similarity as S
 from rialto_airflow_spark.operators import text as T
@@ -530,7 +530,6 @@ def q31_streaming_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The watermarked append-mode variant (whose emitted-window set
     depends on micro-batch boundaries, hence is not oracle-stable) is
     exercised in tests/test_multimodal_streaming.py instead."""
-    import tempfile
     import uuid
 
     from rialto_airflow_spark.streaming import events as SE
@@ -547,7 +546,7 @@ def q31_streaming_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = SE.read_event_stream(spark, inp)
         SE.run_available_now_memory(
             SE.windowed_counts(stream, late=None),
-            tempfile.mkdtemp(prefix="rspark_q31_") + "/ckpt",
+            scratch_dir("rspark_q31_") + "/ckpt",
             name,
             mode="complete",
         )

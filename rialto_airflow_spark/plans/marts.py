@@ -308,20 +308,6 @@ def format_for_download(df: DataFrame) -> DataFrame:
     return out
 
 
-def write_mart(df: DataFrame, path: str) -> None:
-    """K2 — TRUNCATE+insert as a plain-path overwrite, for flows
-    where readers are sequenced AFTER the writer (a batch export dir
-    the next task consumes). ``mode("overwrite")`` deletes then
-    rewrites the directory, so a CONCURRENT reader can list a
-    partial or empty dir — when readers overlap writers (the
-    reports-DB situation the reference guards with SERIALIZABLE
-    transactions, publish/publication.py:91-95), publish through
-    ``storage.TableStore`` instead: per-table commits are atomic and
-    ``publish_snapshot`` makes all four marts flip together (the
-    publish DAG's ``publish_to_store`` task)."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def write_download_csv(df: DataFrame, path: str) -> None:
     """K3 — single-file CSV with header."""
     format_for_download(df).coalesce(1).write.mode("overwrite").csv(

@@ -80,9 +80,3 @@ def orcid_adoption(
         F.count(F.lit(1)).alias("n"),
         F.round(F.avg(ind.cast("double")) * 100, 1).alias("percent"),
     )
-
-
-def author_orcids_mart(active_authors: DataFrame) -> DataFrame:
-    """author_orcids report table (publish/orcid.py:17-52;
-    reports.py:105-121, PK sunetid)."""
-    return active_authors.dropDuplicates(["sunetid"])

@@ -15,7 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rialto_airflow_spark.functions.perf import local_df, release_on_gc
+from rialto_airflow_spark.functions.perf import (
+    local_df,
+    release_on_gc,
+    scratch_dir,
+)
 from rialto_airflow_spark.operators import curation as CUR
 from rialto_airflow_spark.operators import dedup as D
 from rialto_airflow_spark.operators import events as E
@@ -606,7 +610,12 @@ def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-13 interleaved A/B: 0.58 s split vs 1.06 s combined, and
     # at scale the value payload crossing the network once instead of
     # twice is the dominant term (guide §2.3). n_exact and approx_ok
-    # are value-identical (exact distinct count, same arithmetic).
+    # are value-identical to the one-agg form under NULLs too:
+    # countDistinct skips a NULL user_id, so the distinct branch drops
+    # them; a NULL event_type is a group of its own, so the join back
+    # is null-safe; and a group whose users are all NULL has no
+    # distinct-branch row, so it keeps its percentiles with
+    # n_exact = 0 (an exact zero estimate is within any bound).
     pcts = ev.groupBy("event_type").agg(
         F.round(F.percentile("value", 0.5), 4).alias("p50"),
         F.round(F.percentile("value", 0.9), 4).alias("p90"),
@@ -614,20 +623,24 @@ def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("user_id").alias("__a"),
     )
     dist = (
-        ev.select("event_type", "user_id")
+        ev.where(F.col("user_id").isNotNull())
+        .select(F.col("event_type").alias("__et"), "user_id")
         .distinct()
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
+        .groupBy("__et")
+        .agg(F.count(F.lit(1)).alias("__n"))
     )
-    return pcts.join(dist, "event_type").select(
+    n_exact = F.coalesce(F.col("__n"), F.lit(0))
+    return pcts.join(
+        dist, pcts["event_type"].eqNullSafe(dist["__et"]), "left"
+    ).select(
         "event_type",
         "p50",
         "p90",
         "p99",
-        "n_exact",
-        (
-            F.abs(F.col("__a") - F.col("n_exact")) / F.col("n_exact") < 0.15
-        ).alias("approx_ok"),
+        n_exact.alias("n_exact"),
+        F.when(n_exact == 0, F.col("__a") == 0)
+        .otherwise(F.abs(F.col("__a") - n_exact) / n_exact < 0.15)
+        .alias("approx_ok"),
     )
 
 
@@ -758,8 +771,6 @@ def q42_merge_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer COALESCE, so one wrong row through the store (a missed
     rewrite, a stale carried file, an undeleted tombstone, a
     mis-covered remnant, a mis-pruned point read) breaks the hash."""
-    import tempfile
-
     from rialto_airflow_spark.operators.merge import merge_status_counts
     from rialto_airflow_spark.storage import TableStore
 
@@ -784,10 +795,9 @@ def q42_merge_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Built FRESH per invocation: the round-12 verdict flagged the
     # previous per-dataset memo as gaming (bench runs 2-3 skipped the
     # declared store work), so every call now pays the full
-    # bootstrap + upsert + shrink it declares. The scratch dir leaks
-    # like q43's (driver-temp, MBs): the returned plan lazily reads
-    # the store, so the function cannot reclaim it.
-    root = tempfile.mkdtemp(prefix="rspark_q42_store_")
+    # bootstrap + upsert + shrink it declares. The returned plan
+    # lazily reads the store, so its dir is reclaimed at exit.
+    root = scratch_dir("rspark_q42_store_")
     store = TableStore(root)
     store.write_manifest(
         existing.where(F.col("o_orderkey") % 20 == 0),
@@ -833,11 +843,9 @@ def q43_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at-least-once redelivery); watermarked dropDuplicates state emits
     each exactly once, so the drained output equals the original
     table — which IS the oracle."""
-    import tempfile
-
     from rialto_airflow_spark.streaming import events as SE
 
-    workdir = tempfile.mkdtemp(prefix="rspark_q43_")
+    workdir = scratch_dir("rspark_q43_")
     inp = SE.stage_events_input(spark, sf_dir, copies=2)  # redelivery
     with SE.few_state_partitions(spark):
         stream = SE.read_event_stream(spark, inp)
@@ -864,12 +872,11 @@ def q44_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained availableNow into a memory sink. The single-batch drain
     makes the final state equal the batch group-by, which IS the
     oracle."""
-    import tempfile
     import uuid
 
     from rialto_airflow_spark.streaming import events as SE
 
-    workdir = tempfile.mkdtemp(prefix="rspark_q44_")
+    workdir = scratch_dir("rspark_q44_")
     name = f"q44_counts_{uuid.uuid4().hex[:8]}"
     inp = SE.stage_events_input(spark, sf_dir)
     with SE.few_state_partitions(spark):

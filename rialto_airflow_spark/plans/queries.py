@@ -632,8 +632,3 @@ def oracle_sql() -> dict[str, str]:
         for name in sorted(REGISTRY)
         if REGISTRY[name].oracle
     }
-
-
-def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _load_extensions()
-    return {n: s.fn for n, s in REGISTRY.items() if s.headline}

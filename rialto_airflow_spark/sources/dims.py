@@ -10,7 +10,7 @@ link stages shuffle-free on the dimension side at any corpus scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -41,10 +41,6 @@ def apc_lookup(apc_raw: DataFrame) -> DataFrame:
         F.col("issn_2").alias("issn"), "apc_year", "apc_usd", "ds_idx"
     )
     return one.unionByName(two)
-
-
-def load_apc_lookup(spark: SparkSession, path: str) -> DataFrame:
-    return apc_lookup(spark.read.csv(path, header=True, sep="\t"))
 
 
 def federal_funders(raw: DataFrame) -> DataFrame:

@@ -241,15 +241,13 @@ class TableStore:
         if vp and "manifest" in vp:
             # adopted manifest member: resolve its bucket references
             # (vacuum keeps them pinned while this snapshot is retained)
-            for k, e in vp["manifest"].items():
-                for pth in self._entry_paths(e, k):
-                    if not self._backend().data_exists(pth):
-                        raise FileNotFoundError(
-                            f"snapshot {seq}'s version of {name!r} "
-                            f"references bucket {k} in a vacuumed carrier "
-                            "— raise table retention above snapshot "
-                            "lookback"
-                        )
+            k = self._vacuumed_entry(vp)
+            if k is not None:
+                raise FileNotFoundError(
+                    f"snapshot {seq}'s version of {name!r} references "
+                    f"bucket {k} in a vacuumed carrier — raise table "
+                    "retention above snapshot lookback"
+                )
             return self._read_manifest(spark, vp)
         self._assert_not_carrier(name, p)
         return spark.read.parquet(p)
@@ -283,15 +281,12 @@ class TableStore:
             # any reference the bucket-granular vacuum reclaimed makes
             # this version gone, loudly (same contract as a vacuumed
             # whole-dir version)
-            backend = self._backend()
-            for k, e in payload["manifest"].items():
-                for pth in self._entry_paths(e, k):
-                    if not backend.data_exists(pth):
-                        raise FileNotFoundError(
-                            f"table {name} version {version!r} references "
-                            f"bucket {k} in a vacuumed version — time "
-                            "travel to it is gone"
-                        )
+            k = self._vacuumed_entry(payload)
+            if k is not None:
+                raise FileNotFoundError(
+                    f"table {name} version {version!r} references bucket "
+                    f"{k} in a vacuumed version — time travel to it is gone"
+                )
             return self._read_manifest(spark, payload)
         self._assert_not_carrier(name, p)
         return spark.read.parquet(p)
@@ -349,23 +344,17 @@ class TableStore:
             # a restore re-points, never rewrites — a carried bucket
             # the bucket-granular vacuum already reclaimed makes the
             # target version GONE, same contract as time travel to it
-            for k, e in payload["manifest"].items():
-                for pth in self._entry_paths(e, k):
-                    if not self._backend().data_exists(pth):
-                        raise FileNotFoundError(
-                            f"table {name} version {version!r} references "
-                            f"bucket {k} in a vacuumed carrier — it can "
-                            "no longer be restored"
-                        )
-            # carry the FULL creating payload (schema, provenance
-            # fields like built_from) — dropping any of it would make
-            # the restored head lie about the data it points at
-            carried = {
-                k: v
-                for k, v in payload.items()
-                if k not in ("path", "committed_at")
-            }
-            self._store(name).commit(p, extra=dict(carried, restored=True))
+            k = self._vacuumed_entry(payload)
+            if k is not None:
+                raise FileNotFoundError(
+                    f"table {name} version {version!r} references bucket "
+                    f"{k} in a vacuumed carrier — it can no longer be "
+                    "restored"
+                )
+            # carry the FULL creating payload (schema, provenance)
+            self._store(name).commit(
+                p, extra=dict(self._carried(payload), restored=True)
+            )
             return p
         self._assert_not_carrier(name, p)
         try:
@@ -683,7 +672,9 @@ class TableStore:
                 "the pass stays correct but exceeds its size budget — "
                 "finish the outstanding migration (factor=1 calls) "
                 "before starting another",
-                stacklevel=3,
+                # the caller of the public writer (through its CAS
+                # attempt and _cas_manifest)
+                stacklevel=5,
             )
         return closed
 
@@ -837,17 +828,9 @@ class TableStore:
             # hit (whole-bucket rewrite — correct, coarse)
             return {p for _b, fs in file_entries for p, _mn, _mx in fs}
         cast_t = self._range_cast(dtype)
-        rngs = [
-            (p, b, None if mn is None else str(mn),
-             None if mx is None else str(mx))
-            for b, files in file_entries
-            for p, mn, mx in files
-        ]
-        if not rngs:
+        rdf = self._ranges_df(spark, file_entries)
+        if rdf is None:
             return set()
-        rdf = _local_df(
-            spark, rngs, "f string, b int, mn string, mx string"
-        )
         probe = keys_df.where(F.col(key).isNotNull()).select(
             F.col(key).alias("k"),
             self._bucket_expr(key, n_buckets).alias("b"),
@@ -869,6 +852,21 @@ class TableStore:
         # shuffle-wide distinct exchange the old plan paid (round-12)
         return {r["f"] for r in hits}
 
+    @staticmethod
+    def _ranges_df(spark: SparkSession, file_entries) -> DataFrame | None:
+        """The (path, bucket, min, max) local frame of ``file_entries``
+        the file-pruning joins run against; None when no file is
+        listed."""
+        rngs = [
+            (p, b, None if mn is None else str(mn),
+             None if mx is None else str(mx))
+            for b, files in file_entries
+            for p, mn, mx in files
+        ]
+        if not rngs:
+            return None
+        return _local_df(spark, rngs, "f string, b int, mn string, mx string")
+
     def _present_buckets(self, vdir: str) -> list[int]:
         pre = f"{self._BUCKET_COL}="
         return sorted(
@@ -876,6 +874,206 @@ class TableStore:
             for d in self._backend().list_data(vdir)
             if d.startswith(pre)
         )
+
+    def _landed(self, spark: SparkSession, info: dict, vdir: str) -> dict:
+        """Manifest entries for the buckets a write just landed in
+        ``vdir``, in the entry form the table's layout config
+        (``info``) selects: per-file key ranges under file-granular
+        COW, else the whole leaf dir."""
+        if self._file_cow_active(info):
+            stats = self._file_stats(spark, vdir, info["bucket_key"])
+            return {b: {"files": fs} for b, fs in stats.items()}
+        return {b: vdir for b in self._present_buckets(vdir)}
+
+    def _relanded(
+        self,
+        manifest: dict,
+        n: int,
+        n2: int,
+        drop,
+        landed: dict,
+        dirty=(),
+        carried: dict | None = None,
+    ) -> dict:
+        """The manifest after a rewrite landed ``landed`` (bucket id →
+        entry, at modulus ``n2``): entries in ``drop`` dissolve and the
+        rest carry by reference, re-keyed against ``n2`` (they were
+        keyed against ``n``). Each ``dirty`` bucket takes its
+        ``carried`` files plus what landed for it, and drops out when
+        neither exists (the write emptied it); every other landed
+        bucket (a dissolved remnant's rows re-landing at ``n2``) takes
+        its new entry. Carried entries keep their manifest order."""
+        out: dict = {}
+        for k, e in manifest.items():
+            if k in drop:
+                continue
+            b, m = self._parse_entry_key(k)
+            m = m if m is not None else n
+            out[str(b) if m == n2 else f"{b}@{m}"] = e
+        carried = carried or {}
+        for b in dirty:
+            e = landed.get(b)
+            if b in carried:
+                e = {"files": carried[b] + (e["files"] if e else [])}
+            if e:
+                out[str(b)] = e
+            else:
+                out.pop(str(b), None)
+        for b, e in landed.items():
+            if b not in dirty:
+                out[str(b)] = e
+        return out
+
+    # the recorded layout config every manifest writer preserves
+    _CONFIG = ("sort_cols", "max_file_rows", "auto_compact_files")
+    # payload fields a layout rewrite recomputes instead of carrying
+    _LAYOUT = ("manifest", "n_buckets", "bucket_key", "compacted")
+
+    @classmethod
+    def _config_of(cls, src: dict) -> dict:
+        return {c: src[c] for c in cls._CONFIG if src.get(c)}
+
+    @staticmethod
+    def _carried(info: dict, *drop: str) -> dict:
+        """``info``'s payload fields minus the per-commit ones and
+        ``drop``: what a rewrite that keeps the table's meaning carries
+        forward (provenance such as a mart's ``built_from``, the
+        recorded schema and config) — dropping any of it would make
+        the new head lie about the data it points at, or demote the
+        next incremental refresh to a full repair."""
+        skip = ("path", "committed_at", *drop)
+        return {k: v for k, v in info.items() if k not in skip}
+
+    def _manifest_head(self, name: str) -> dict:
+        """The head payload of a manifest table — what every O(changes)
+        writer and bucket-id helper starts from. A missing or plain
+        ``write()`` head has no bucket metadata to work with."""
+        info = self.current_info(name)
+        if info is None or "manifest" not in info:
+            raise FileNotFoundError(
+                f"table {name} has no manifest version at head — "
+                "bootstrap with write_manifest (a plain write() head "
+                "can't take O(changes) writes)"
+            )
+        return info
+
+    def _manifest_version(self, name: str, version: str | None = None) -> dict:
+        """The payload of a manifest version (default: the head) for a
+        bucket-pruned read. A vacuumed version raises like
+        :meth:`read_version`; a plain version raises ValueError — it
+        has no bucket metadata to prune with."""
+        if version is None:
+            payload = self.current_info(name)
+            if payload is None:
+                raise FileNotFoundError(
+                    f"table {name} has no committed version"
+                )
+        else:
+            p = os.path.join(self.root, name, version)
+            if not self._backend().data_exists(p):
+                raise FileNotFoundError(
+                    f"table {name} has no retained version {version!r}"
+                )
+            payload = self._payload_for(name, p)
+        if payload is None or "manifest" not in payload:
+            raise ValueError(
+                f"table {name}: the requested version is not a manifest "
+                "version — there is no bucket metadata to prune with; "
+                "use read(...).where(key.isin(...)) there"
+            )
+        return payload
+
+    def _vacuumed_entry(self, payload: dict) -> str | None:
+        """The first manifest entry of ``payload`` whose data the
+        bucket-granular vacuum already reclaimed, or None when the
+        version still resolves whole."""
+        backend = self._backend()
+        for k, e in payload["manifest"].items():
+            if not all(backend.data_exists(p) for p in self._entry_paths(e, k)):
+                return k
+        return None
+
+    def _key_col(self, info: dict) -> Column:
+        """The bucket key cast to its RECORDED type: xxhash64(int) !=
+        xxhash64(bigint), so a sibling-typed probe would name buckets
+        the stored rows don't live in (and union coercion widens
+        written rows to the recorded type anyway)."""
+        key = info["bucket_key"]
+        st = self._schema_of(info)
+        if st is not None and key in st.fieldNames():
+            return F.col(key).cast(st[key].dataType)
+        return F.col(key)
+
+    @staticmethod
+    def _null_bucket_id(spark: SparkSession, ktype, n_buckets: int) -> int:
+        """The bucket a NULL key of type ``ktype`` hashes into —
+        xxhash64 of a typed NULL, run through Spark so it matches the
+        writers bit-for-bit."""
+        lit = F.lit(None).cast(ktype) if ktype is not None else F.lit(None)
+        return (
+            spark.range(1)
+            .select(
+                F.pmod(F.xxhash64(lit), F.lit(n_buckets)).cast("int").alias("b")
+            )
+            .collect()[0]["b"]
+        )
+
+    def _covering_slice(self, manifest: dict, buckets, n: int):
+        """Resolve ``buckets`` (ids at modulus ``n``) to the entries
+        holding their rows: ``(paths, file_entries, remnants)`` —
+        the paths of every rebucketing remnant (coarse or finer, read
+        whole, each once) and of fine dir-form leaves; the fine
+        file-form entries as ``(bucket, files)`` for file pruning; the
+        remnant entry keys."""
+        moduli = self._moduli(manifest)
+        paths: list[str] = []
+        file_entries: list[tuple[int, list[list]]] = []
+        remnants: set[str] = set()
+        for b in buckets:
+            for ck in self._covering_keys(manifest, moduli, b, n):
+                e = manifest[ck]
+                if ck != str(b):
+                    if ck not in remnants:
+                        remnants.add(ck)
+                        paths.extend(self._entry_paths(e, ck))
+                elif isinstance(e, str):
+                    paths.append(self._manifest_leaf(e, b))
+                else:
+                    file_entries.append((b, e["files"]))
+        return paths, file_entries, remnants
+
+    @staticmethod
+    def _read_paths(spark: SparkSession, st, paths: list[str]) -> DataFrame:
+        """Read parquet ``paths`` under the commit-recorded schema
+        ``st`` — carriers written before a column was added read it as
+        null (see :meth:`_read_manifest`); footer inference only for
+        pre-schema-tracking commits."""
+        reader = spark.read.schema(st) if st is not None else spark.read
+        return reader.parquet(*paths)
+
+    def _cas_manifest(self, name: str, attempt):
+        """Run one manifest read-modify-write and commit it CAS against
+        the head it read: ``attempt(store, info)`` rewrites against
+        head payload ``info`` and returns ``(vdir, payload, ...)``, or
+        None when there is nothing to commit. A concurrent manifest
+        writer's commit (CommitConflict) re-runs the attempt against
+        the new head — an unconditional commit would silently re-point
+        the loser's clean buckets at data the winner superseded. The
+        loser's orphaned dir is vacuumable. Returns the attempt's
+        result."""
+        from .commitlog import CommitConflict
+
+        store = self._store(name)
+        while True:
+            seq0 = store.current_seq()
+            res = attempt(store, self._manifest_head(name))
+            if res is None:
+                return None
+            try:
+                store.commit(res[0], extra=res[1], expected=seq0)
+                return res
+            except CommitConflict:
+                continue  # concurrent manifest writer won; redo on new head
 
     def _payload_for(self, name: str, path: str) -> dict | None:
         """The payload of the FIRST commit naming ``path`` (its
@@ -962,8 +1160,7 @@ class TableStore:
                 "manifest version holds no buckets (empty table with no "
                 "recorded schema)"
             )
-        reader = spark.read.schema(st) if st is not None else spark.read
-        return reader.parquet(*paths)
+        return self._read_paths(spark, st, paths)
 
     def _write_buckets(
         self,
@@ -1043,22 +1240,16 @@ class TableStore:
             n_buckets=n_buckets,
             bucket_key=key,
             schema=df.schema.json(),
+            **self._config_of(
+                dict(
+                    sort_cols=list(sort_cols or []),
+                    max_file_rows=max_file_rows,
+                    auto_compact_files=auto_compact_files,
+                )
+            ),
         )
-        if sort_cols:
-            payload["sort_cols"] = list(sort_cols)
-        if max_file_rows:
-            payload["max_file_rows"] = max_file_rows
-        if auto_compact_files:
-            payload["auto_compact_files"] = auto_compact_files
-        if self._file_cow_active(payload):
-            stats = self._file_stats(df.sparkSession, vdir, key)
-            payload["manifest"] = {
-                str(b): {"files": fs} for b, fs in sorted(stats.items())
-            }
-        else:
-            payload["manifest"] = {
-                str(k): vdir for k in self._present_buckets(vdir)
-            }
+        landed = self._landed(df.sparkSession, payload, vdir)
+        payload["manifest"] = {str(b): e for b, e in sorted(landed.items())}
         store.commit(vdir, extra=payload)
         return vdir
 
@@ -1089,17 +1280,14 @@ class TableStore:
             )
         if "manifest" in info:
             return info["path"]
-        carried = {
-            k: v
-            for k, v in info.items()
-            if k not in ("path", "committed_at", "restored")
-        }
         return self.write_manifest(
             spark.read.parquet(info["path"]),
             name,
             key,
             n_buckets=n_buckets,
-            extra=dict(carried, migrated_from=info["path"]),
+            extra=dict(
+                self._carried(info, "restored"), migrated_from=info["path"]
+            ),
             sort_cols=sort_cols,
             max_file_rows=max_file_rows,
             auto_compact_files=auto_compact_files,
@@ -1124,15 +1312,7 @@ class TableStore:
         plain (non-manifest) head raises: it has no bucket metadata
         to prune with — use ``read(...).where(isin)`` there."""
         vals = list(values)
-        info = self.current_info(name)
-        if info is None:
-            raise FileNotFoundError(f"table {name} has no committed version")
-        if "manifest" not in info:
-            raise ValueError(
-                f"table {name}'s head is not a manifest version — a plain "
-                "head has no bucket metadata to prune with; use "
-                "read(...).where(key.isin(...)) there"
-            )
+        info = self._manifest_version(name)
         manifest, n, key = (
             info["manifest"], info["n_buckets"], info["bucket_key"]
         )
@@ -1156,25 +1336,10 @@ class TableStore:
                 ).collect()
             }
         )
-        paths: list[str] = []
-        file_entries: list[tuple[int, list[list]]] = []
-        moduli = self._moduli(manifest)
-        seen_coarse: set[str] = set()
-        for b in buckets:
-            for ck in self._covering_keys(manifest, moduli, b, n):
-                e = manifest[ck]
-                if ck != str(b):
-                    # coarse or finer rebucketing remnant: read it
-                    # whole (the value filter below keeps the result
-                    # exact); file-range pruning resumes once the
-                    # entry re-lands at the current modulus
-                    if ck not in seen_coarse:
-                        seen_coarse.add(ck)
-                        paths.extend(self._entry_paths(e, ck))
-                elif isinstance(e, str):
-                    paths.append(self._manifest_leaf(e, b))
-                else:
-                    file_entries.append((b, e["files"]))
+        # rebucketing remnants read whole (the value filter below keeps
+        # the result exact); file-range pruning resumes once an entry
+        # re-lands at the current modulus
+        paths, file_entries, _rem = self._covering_slice(manifest, buckets, n)
         if file_entries:
             # file-granular point read: inside each matched bucket,
             # touch only the files whose key range can hold a
@@ -1201,8 +1366,7 @@ class TableStore:
                 paths.extend(sorted(hit))
         if not paths:
             return spark.createDataFrame([], st)
-        df = spark.read.schema(st).parquet(*paths)
-        return self._filter_keys(df, key, vals)
+        return self._filter_keys(self._read_paths(spark, st, paths), key, vals)
 
     # literal-probe types whose Python → Spark literal round-trip is
     # trivially exact (no timezone / precision semantics involved) —
@@ -1239,13 +1403,8 @@ class TableStore:
         # every _POINT_PROBE_TYPES member has a range domain
         # (_range_proj only lacks one for binary), so no None check
         cast_t = self._range_cast(dtype)
-        rngs = [
-            (p, b, None if mn is None else str(mn),
-             None if mx is None else str(mx))
-            for b, files in file_entries
-            for p, mn, mx in files
-        ]
-        if not rngs:
+        rdf = self._ranges_df(spark, file_entries)
+        if rdf is None:
             return set()
         # Build the probe-array literal in as few py4j round-trips as
         # possible: the old per-value F.lit(v).cast(...) chain cost
@@ -1267,9 +1426,6 @@ class TableStore:
             probe_arr = F.lit(_np.array(nn, dtype=np_t)).cast(
                 ArrayType(ktype)
             )
-        rdf = _local_df(
-            spark, rngs, "f string, b int, mn string, mx string"
-        )
 
         def hits_row(v):
             b = F.pmod(F.xxhash64(v), F.lit(n_buckets)).cast("int")
@@ -1298,20 +1454,15 @@ class TableStore:
         CURRENT manifest parameters — the bounded collect (≤ n_buckets
         BY CONSTRUCTION) every O(changes) consumer starts from. One
         tiny distinct job over the batch's key column."""
-        info = self.current_info(name)
-        if info is None or "manifest" not in info:
-            raise FileNotFoundError(
-                f"table {name} has no manifest version at head"
-            )
+        info = self._manifest_head(name)
         key = info["bucket_key"]
-        st = self._schema_of(info)
-        if st is not None and key in st.fieldNames():
-            # recorded-type cast: xxhash64(int) != xxhash64(bigint) —
-            # a sibling-typed probe would silently name wrong buckets
-            batch = batch.select(F.col(key).cast(st[key].dataType).alias(key))
         bexpr = self._bucket_expr(key, info["n_buckets"])
         return sorted(
-            r["b"] for r in batch.select(bexpr.alias("b")).distinct().collect()
+            r["b"]
+            for r in batch.select(self._key_col(info).alias(key))
+            .select(bexpr.alias("b"))
+            .distinct()
+            .collect()
         )
 
     def null_bucket(self, spark: SparkSession, name: str) -> int:
@@ -1321,24 +1472,10 @@ class TableStore:
         a manifest table live ONLY here, so a consumer that needs
         them (e.g. the streaming mart's null-group re-fold) reads one
         bucket, never the table."""
-        info = self.current_info(name)
-        if info is None or "manifest" not in info:
-            raise FileNotFoundError(
-                f"table {name} has no manifest version at head"
-            )
+        info = self._manifest_head(name)
         st = self._schema_of(info)
-        key = info["bucket_key"]
-        ktype = st[key].dataType if st is not None else None
-        lit = F.lit(None).cast(ktype) if ktype is not None else F.lit(None)
-        return (
-            spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(lit), F.lit(info["n_buckets"]))
-                .cast("int")
-                .alias("b")
-            )
-            .collect()[0]["b"]
-        )
+        ktype = st[info["bucket_key"]].dataType if st is not None else None
+        return self._null_bucket_id(spark, ktype, info["n_buckets"])
 
     def read_buckets(
         self,
@@ -1384,29 +1521,11 @@ class TableStore:
         honored: file ranges never cover a null, so the null bucket's
         files are read WHOLE in that case (mirroring ``read_keys``)
         instead of silently returning an incomplete slice."""
-        if version is None:
-            payload = self.current_info(name)
-            if payload is None:
-                raise FileNotFoundError(
-                    f"table {name} has no committed version"
-                )
-        else:
-            p = os.path.join(self.root, name, version)
-            if not self._backend().data_exists(p):
-                raise FileNotFoundError(
-                    f"table {name} has no retained version {version!r}"
-                )
-            payload = self._payload_for(name, p)
-        if payload is None or "manifest" not in payload:
-            raise ValueError(
-                f"table {name}: the requested version is not a manifest "
-                "version — there is no bucket metadata to prune with"
-            )
+        payload = self._manifest_version(name, version)
         manifest = payload["manifest"]
         n_v = payload["n_buckets"]
+        kcol = payload["bucket_key"]
         st = self._schema_of(payload)
-        backend = self._backend()
-        moduli = self._moduli(manifest)
         want = sorted(set(int(x) for x in buckets))
         of_n = of_n_buckets or n_v
         if of_n == n_v:
@@ -1428,68 +1547,35 @@ class TableStore:
         )
         if lookup is None:
             out = self._read_manifest(spark, payload)
-            return out.where(
-                self._bucket_expr(payload["bucket_key"], of_n).isin(want)
-            )
-        paths = []
-        seen: set[str] = set()
-        prune_entries: list[tuple[int, list[list]]] = []
-        prune_null_b = None
-        if prune_keys is not None and st is not None:
-            kcol0 = payload["bucket_key"]
-            if prune_keys.where(F.col(kcol0).isNull()).limit(1).count():
-                # a requested NULL key: file ranges never cover a
-                # null, so its bucket's files must read whole
-                prune_null_b = (
-                    spark.range(1)
-                    .select(
-                        F.pmod(
-                            F.xxhash64(
-                                F.lit(None).cast(st[kcol0].dataType)
-                            ),
-                            F.lit(n_v),
-                        ).cast("int").alias("b")
-                    )
-                    .collect()[0]["b"]
-                )
-        for b in lookup:
-            for ck in self._covering_keys(manifest, moduli, b, n_v):
-                if ck in seen:
-                    continue
-                seen.add(ck)
-                e = manifest[ck]
-                if (
-                    prune_keys is not None
-                    and ck == str(b)
-                    and b != prune_null_b
-                    and not isinstance(e, str)
-                    and st is not None
-                ):
-                    # fine file-form entry + a key set: file-prune below
-                    prune_entries.append((b, e["files"]))
-                    continue
-                for leaf in self._entry_paths(e, ck):
-                    if not backend.data_exists(leaf):
-                        raise FileNotFoundError(
-                            f"table {name}: bucket {b} of the requested "
-                            "version was vacuumed — its carrier data is gone"
-                        )
-                    paths.append(leaf)
-        if prune_entries:
-            kcol = payload["bucket_key"]
+            return out.where(self._bucket_expr(kcol, of_n).isin(want))
+        paths, file_entries, _rem = self._covering_slice(manifest, lookup, n_v)
+        # fine file-form entries + a key set: read only the files whose
+        # range can hold one of the keys. A requested NULL key is never
+        # inside a range, so its bucket's files read whole.
+        prune = prune_keys is not None and st is not None
+        null_b = None
+        if prune and prune_keys.where(F.col(kcol).isNull()).limit(1).count():
+            null_b = self._null_bucket_id(spark, st[kcol].dataType, n_v)
+        pruned = {b for b, _fs in file_entries if prune and b != null_b}
+        hit = set()
+        if pruned:
             hit = self._rewrite_files(
                 spark, prune_keys, kcol, st[kcol].dataType, n_v,
-                prune_entries,
+                [(b, fs) for b, fs in file_entries if b in pruned],
             )
-            for _b, fs in prune_entries:
-                for p, _mn, _mx in fs:
-                    if p in hit:
-                        if not backend.data_exists(p):
-                            raise FileNotFoundError(
-                                f"table {name}: a requested file of the "
-                                "version was vacuumed"
-                            )
-                        paths.append(p)
+        paths.extend(
+            p
+            for b, fs in file_entries
+            for p, _mn, _mx in fs
+            if b not in pruned or p in hit
+        )
+        backend = self._backend()
+        for p in paths:
+            if not backend.data_exists(p):
+                raise FileNotFoundError(
+                    f"table {name}: {p} of the requested version was "
+                    "vacuumed — its carrier data is gone"
+                )
         if not paths:
             if st is not None:
                 return spark.createDataFrame([], st)
@@ -1497,15 +1583,12 @@ class TableStore:
                 f"table {name}: none of the requested buckets exist and "
                 "the version records no schema"
             )
-        reader = spark.read.schema(st) if st is not None else spark.read
-        out = reader.parquet(*paths)
+        out = self._read_paths(spark, st, paths)
         if exact_filter:
             # coarse remnants / modulus translation pull in neighbor
             # buckets — keep the contract exact with a cheap JVM-side
             # hash filter at the CALLER's modulus
-            out = out.where(
-                self._bucket_expr(payload["bucket_key"], of_n).isin(want)
-            )
+            out = out.where(self._bucket_expr(kcol, of_n).isin(want))
         return out
 
     def upsert_manifest(
@@ -1549,32 +1632,9 @@ class TableStore:
         final word — callers collapse duplicates before the call)."""
         from rialto_airflow_spark.operators.merge import merge_on_key
 
-        from .commitlog import CommitConflict
-
-        store = self._store(name)
-        while True:
-            seq0 = store.current_seq()
-            info = self.current_info(name)
-            if info is None or "manifest" not in info:
-                raise FileNotFoundError(
-                    f"table {name} has no manifest version at head — "
-                    "bootstrap with write_manifest (a plain write() head "
-                    "can't take O(changes) upserts)"
-                )
-            manifest, n, key = (
-                info["manifest"], info["n_buckets"], info["bucket_key"]
-            )
-            bexpr = self._bucket_expr(key, n)
-            st = self._schema_of(info)
-            file_cow = self._file_cow_active(info)
-            # probe in the RECORDED key type: xxhash64(int) !=
-            # xxhash64(bigint), and union coercion would widen the
-            # MERGED rows to the recorded type anyway — an uncast
-            # sibling-typed probe names buckets the written rows
-            # don't land in (their files would miss the manifest)
-            kc = F.col(key)
-            if st is not None and key in st.fieldNames():
-                kc = kc.cast(st[key].dataType)
+        def attempt(store, info):
+            key, n = info["bucket_key"], info["n_buckets"]
+            kc = self._key_col(info)
             probe = batch.select(kc.alias(key))
             if delete_keys is not None:
                 probe = probe.unionByName(
@@ -1584,172 +1644,78 @@ class TableStore:
                 )
             dirty = sorted(
                 r["b"]
-                for r in probe.select(bexpr.alias("b")).distinct().collect()
+                for r in probe.select(self._bucket_expr(key, n).alias("b"))
+                .distinct()
+                .collect()
             )
-            # the slice to READ and rewrite: whole leaf dirs for
-            # dir-form entries; for file-form entries only the files
-            # whose key range intersects the batch (file-granular COW
-            # — the round-11 write-amplification fix: a dirty 6 GB
-            # bucket with one matched key rewrites ~one file, not 6 GB).
-            # A COARSE entry (b@m — a not-yet-split rebucketing
-            # remnant) rewrites and DISSOLVES whole: its rows land
-            # under the current fine modulus, an opportunistic split.
-            moduli = self._moduli(manifest)
-            read_paths: list[str] = []
-            carried_files: dict[int, list[list]] = {}
-            file_entries: list[tuple[int, list[list]]] = []
-            dissolved: set[str] = set()
-            for k in dirty:
-                for ck in self._covering_keys(manifest, moduli, k, n):
-                    e = manifest[ck]
-                    if ck != str(k):
-                        # coarse OR finer rebucketing remnant: rewrite
-                        # + dissolve whole (rows re-land at the current
-                        # modulus — an opportunistic split/merge)
-                        if ck not in dissolved:
-                            dissolved.add(ck)
-                            read_paths.extend(self._entry_paths(e, ck))
-                    elif isinstance(e, str):
-                        read_paths.append(self._manifest_leaf(e, k))
-                    else:
-                        file_entries.append((k, e["files"]))
-            if file_entries:
-                ktype = st[key].dataType if st is not None else None
-                if ktype is None or not file_cow:
-                    # no recorded schema to cast ranges through (or the
-                    # table config dropped file COW): read the dirty
-                    # buckets whole — correct, coarser, self-healing
-                    # back to the config's entry form
-                    read_paths.extend(
-                        p for _b, fs in file_entries for p, _mn, _mx in fs
+
+            def rebuild(existing):
+                if existing is None:
+                    # legacy manifest with no recorded schema: an empty
+                    # slice shaped like the table (or, for an empty
+                    # table, the batch)
+                    existing = (
+                        self._read_manifest(spark, info).limit(0)
+                        if info["manifest"]
+                        else batch.limit(0)
                     )
-                else:
-                    hit = self._rewrite_files(
-                        spark, probe, key, ktype, n, file_entries
-                    )
-                    for b, fs in file_entries:
-                        keep = [f for f in fs if f[0] not in hit]
-                        read_paths.extend(f[0] for f in fs if f[0] in hit)
-                        if keep:
-                            carried_files[b] = keep
-            if read_paths:
-                # recorded-schema read: dirty carriers may predate a
-                # column the table has since gained (see _read_manifest)
-                reader = spark.read.schema(st) if st is not None else spark.read
-                existing = reader.parquet(*read_paths)
-            elif st is not None:
-                # brand-new buckets only (or an empty bootstrap —
-                # e.g. a stream whose first micro-batch was empty):
-                # empty slice with the recorded table schema
-                existing = spark.createDataFrame([], st)
-            elif manifest:
-                existing = self._read_manifest(spark, info).limit(0)
-            else:
-                # legacy empty manifest with no recorded schema: the
-                # table holds nothing, so the batch defines the shape
-                existing = batch.limit(0)
-            merged = merge_on_key(
-                existing,
-                batch,
-                key,
-                update_cols=update_cols,
-                updated_at_col=updated_at_col,
-                broadcast_batch=True,
-            )
-            if delete_keys is not None:
-                merged = merged.join(
+                merged = merge_on_key(
+                    existing,
+                    batch,
+                    key,
+                    update_cols=update_cols,
+                    updated_at_col=updated_at_col,
+                    broadcast_batch=True,
+                )
+                if delete_keys is None:
+                    return merged
+                return merged.join(
                     F.broadcast(
                         delete_keys.select(key).where(F.col(key).isNotNull())
                     ),
                     key,
                     "left_anti",
                 )
-            self._check_schema_evolution(st, merged.schema, name)
-            vdir = store.new_version_path()
-            self._write_buckets(
-                merged, bexpr, vdir, info.get("sort_cols"),
-                info.get("max_file_rows"),
+
+            vdir, payload = self._rewrite_dirty(
+                spark, name, store, info, dirty,
+                lambda fe, kt: self._rewrite_files(spark, probe, key, kt, n, fe),
+                rebuild,
             )
-            new_manifest = dict(manifest)
-            for ck in dissolved:
-                new_manifest.pop(ck, None)
-            if file_cow:
-                stats = self._file_stats(spark, vdir, key)
-                for k in dirty:
-                    fs = carried_files.get(k, []) + stats.get(k, [])
-                    if fs:
-                        new_manifest[str(k)] = {"files": fs}
-                    else:
-                        new_manifest.pop(str(k), None)
-                # buckets beyond `dirty` appear only when a dissolved
-                # coarse entry's neighbor rows re-land under the fine
-                # modulus — give each its fine entry
-                for k in stats:
-                    if k not in dirty:
-                        new_manifest[str(k)] = {"files": stats[k]}
-            else:
-                present = set(self._present_buckets(vdir))
-                for k in dirty:
-                    if k in present:
-                        new_manifest[str(k)] = vdir
-                    else:
-                        # the deletes emptied this bucket entirely (a
-                        # pure upsert always re-lands its dirty
-                        # buckets; only a tombstone can vacate one)
-                        new_manifest.pop(str(k), None)
-                for k in present:
-                    if k not in dirty:
-                        new_manifest[str(k)] = vdir
-            payload = {
-                "manifest": new_manifest,
-                "n_buckets": n,
-                "bucket_key": key,
-                "schema": merged.schema.json(),
-            }
-            for cfg in (
-                "sort_cols", "max_file_rows", "auto_compact_files",
-            ):
-                if info.get(cfg):
-                    payload[cfg] = info[cfg]
-            floor = self._carry_floor(info, new_manifest)
-            if floor:
-                payload["auto_compact_floor"] = floor
-            try:
-                store.commit(vdir, extra=payload, expected=seq0)
-            except CommitConflict:
-                continue  # concurrent manifest writer won; redo on new head
-            # file-tail pressure release (recorded table policy, see
-            # write_manifest): when this upsert left a dirty bucket
-            # listing more than `thresh` files BEYOND its recorded
-            # post-compaction floor, fold the tail NOW — a targeted
-            # compact_buckets, so a stream with no compact_every
-            # cadence still bounds what it accretes. The floor map
-            # (written by compact_buckets for buckets whose row count
-            # legitimately needs more than `thresh` full files) keeps
-            # the trigger self-limiting: such a bucket re-fires only
-            # after `thresh` NEW tail files accrete — one fold per
-            # `thresh` upserts, amortized O(changes) — instead of a
-            # whole-bucket rewrite on every later upsert. Runs after
-            # the commit (the upsert's version is complete either
-            # way) and never consolidates carriers (max_carriers
-            # huge) — only the file-count axis.
-            thresh = info.get("auto_compact_files")
-            if thresh and file_cow:
-                floor = floor or {}  # the revalidated carry above
+            return vdir, payload, dirty
 
-                def _over(k) -> bool:
-                    e = new_manifest.get(str(k))
-                    if isinstance(e, (str, type(None))):
-                        return False
-                    return len(e["files"]) > thresh + floor.get(str(k), 0)
+        vdir, payload, dirty = self._cas_manifest(name, attempt)
+        # file-tail pressure release (recorded table policy, see
+        # write_manifest): when this upsert left a dirty bucket listing
+        # more than `thresh` files BEYOND its recorded post-compaction
+        # floor, fold the tail NOW — a targeted compact_buckets, so a
+        # stream with no compact_every cadence still bounds what it
+        # accretes. The floor map (written by compact_buckets for
+        # buckets whose row count legitimately needs more than `thresh`
+        # full files) keeps the trigger self-limiting: such a bucket
+        # re-fires only after `thresh` NEW tail files accrete — one fold
+        # per `thresh` upserts, amortized O(changes) — instead of a
+        # whole-bucket rewrite on every later upsert. Runs after the
+        # commit (the upsert's version is complete either way) and
+        # never consolidates carriers (max_carriers huge) — only the
+        # file-count axis.
+        thresh = payload.get("auto_compact_files")
+        if thresh and self._file_cow_active(payload):
+            floor = payload.get("auto_compact_floor") or {}
 
-                if any(_over(k) for k in dirty):
-                    self.compact_buckets(
-                        spark, name,
-                        max_carriers=1 << 30,
-                        max_files_per_bucket=thresh,
-                    )
-            return vdir
+            def _over(k) -> bool:
+                e = payload["manifest"].get(str(k))
+                return isinstance(e, dict) and (
+                    len(e["files"]) > thresh + floor.get(str(k), 0)
+                )
+
+            if any(_over(k) for k in dirty):
+                self.compact_buckets(
+                    spark, name,
+                    max_carriers=1 << 30,
+                    max_files_per_bucket=thresh,
+                )
+        return vdir
 
     def replace_keys_manifest(
         self,
@@ -1771,36 +1737,17 @@ class TableStore:
         named like the table's bucket key; it is O(changes) and
         broadcasts into the slice anti-join. Commit CASes + retries on
         a concurrent manifest writer (see :meth:`upsert_manifest`)."""
-        from .commitlog import CommitConflict
 
-        store = self._store(name)
-        while True:
-            seq0 = store.current_seq()
-            info = self.current_info(name)
-            if info is None or "manifest" not in info:
-                raise FileNotFoundError(
-                    f"table {name} has no manifest version at head — "
-                    "bootstrap with write_manifest"
-                )
-            manifest, n, key = (
-                info["manifest"], info["n_buckets"], info["bucket_key"]
-            )
+        def attempt(store, info):
+            key, n = info["bucket_key"], info["n_buckets"]
             bexpr = self._bucket_expr(key, n)
-            st = self._schema_of(info)
-            file_cow = self._file_cow_active(info)
-            # cast the probe to the RECORDED key type: xxhash64 hashes
-            # int and bigint differently, so a caller-supplied key
-            # frame of a sibling type would silently resolve to the
-            # wrong buckets (rows "replaced" elsewhere than they live)
-            kc = F.col(key)
-            if st is not None and key in st.fieldNames():
-                kc = kc.cast(st[key].dataType)
+            kc = self._key_col(info)
             keys = affected_keys.select(kc.alias(key)).distinct()
             # the fragment probe casts too: the union with kept rows
             # widens the fragment's key to the recorded type, so the
             # LANDING buckets hash the recorded type — an uncast probe
-            # would miss them and the stats-not-in-dirty rebuild below
-            # would replace those buckets' entries wholesale
+            # would miss them and the landed-beyond-dirty entries would
+            # replace those buckets' entries wholesale
             dirty = sorted(
                 {
                     r["b"]
@@ -1818,140 +1765,132 @@ class TableStore:
             # file need only rewrite when an affected key's range test
             # hits it — fragment-side keys count too (their files gain
             # neighbors in the in-file sort order, so the write must
-            # merge them; a missed fragment key would be mere file
-            # overlap, but we keep ranges disjoint by construction)
-            moduli = self._moduli(manifest)
-            read_paths: list[str] = []
-            carried_files: dict[int, list[list]] = {}
-            file_entries: list[tuple[int, list[list]]] = []
-            dissolved: set[str] = set()
-            for k in dirty:
-                for ck in self._covering_keys(manifest, moduli, k, n):
-                    e = manifest[ck]
-                    if ck != str(k):
-                        # coarse OR finer rebucketing remnant: rewrite
-                        # + dissolve whole (rows re-land at the current
-                        # modulus — an opportunistic split/merge)
-                        if ck not in dissolved:
-                            dissolved.add(ck)
-                            read_paths.extend(self._entry_paths(e, ck))
-                    elif isinstance(e, str):
-                        read_paths.append(self._manifest_leaf(e, k))
-                    else:
-                        file_entries.append((k, e["files"]))
-            if file_entries:
-                ktype = st[key].dataType if st is not None else None
-                if ktype is None or not file_cow:
-                    read_paths.extend(
-                        p for _b, fs in file_entries for p, _mn, _mx in fs
-                    )
-                else:
-                    probe = keys.unionByName(
-                        fragment.select(F.col(key))
-                    ).distinct()
-                    hit = self._rewrite_files(
-                        spark, probe, key, ktype, n, file_entries
-                    )
-                    # REPLACE deletes null-GROUP rows too (eqNullSafe
-                    # anti-join), but file ranges ignore nulls — a
-                    # null affected key would silently carry the old
-                    # null rows past the delete. Rewrite the null
-                    # bucket whole whenever the probe contains a null.
-                    if probe.where(F.col(key).isNull()).limit(1).count():
-                        null_b = (
-                            spark.range(1)
-                            .select(
-                                F.pmod(
-                                    F.xxhash64(
-                                        F.lit(None).cast(ktype)
-                                    ),
-                                    F.lit(n),
-                                ).cast("int").alias("b")
-                            )
-                            .collect()[0]["b"]
-                        )
-                        hit = hit | {
-                            f[0]
-                            for b, fs in file_entries
-                            if b == null_b
-                            for f in fs
-                        }
-                    for b, fs in file_entries:
-                        keep = [f for f in fs if f[0] not in hit]
-                        read_paths.extend(f[0] for f in fs if f[0] in hit)
-                        if keep:
-                            carried_files[b] = keep
-            if read_paths:
-                reader = spark.read.schema(st) if st is not None else spark.read
-                slice_df = reader.parquet(*read_paths)
-            elif st is not None:
-                slice_df = spark.createDataFrame([], st)
+            # merge them; ranges stay disjoint by construction)
+            probe = keys.unionByName(fragment.select(F.col(key))).distinct()
+
+            def file_hits(file_entries, ktype):
+                hit = self._rewrite_files(
+                    spark, probe, key, ktype, n, file_entries
+                )
+                # REPLACE deletes null-GROUP rows too (eqNullSafe
+                # anti-join), but file ranges ignore nulls — a null
+                # affected key would silently carry the old null rows
+                # past the delete. Rewrite the null bucket whole
+                # whenever the probe contains a null.
+                if probe.where(F.col(key).isNull()).limit(1).count():
+                    null_b = self._null_bucket_id(spark, ktype, n)
+                    hit |= {
+                        f[0] for b, fs in file_entries if b == null_b for f in fs
+                    }
+                return hit
+
+            def rebuild(slice_df):
+                if slice_df is None:
+                    slice_df = fragment.limit(0)
+                kept = slice_df.join(
+                    F.broadcast(keys.withColumnRenamed(key, "__rk")),
+                    slice_df[key].eqNullSafe(F.col("__rk")),
+                    "left_anti",
+                )
+                # allowMissingColumns: a fragment gaining a column (mart
+                # definition evolved) nulls it on kept rows instead of
+                # silently DROPPING it from the fragment; the recorded
+                # schema widens with the commit
+                return kept.unionByName(fragment, allowMissingColumns=True)
+
+            return self._rewrite_dirty(
+                spark, name, store, info, dirty, file_hits, rebuild, extra
+            )
+
+        return self._cas_manifest(name, attempt)[0]
+
+    def _dirty_slice(self, info: dict, dirty: list[int], file_hits):
+        """The slice a keyed rewrite of the ``dirty`` buckets must read:
+        ``(read_paths, carried_files, remnants)``. Dir-form entries
+        read whole leaf dirs; a rebucketing remnant (b@m) reads whole
+        and DISSOLVES, its rows re-landing at the current modulus (an
+        opportunistic split/merge); for a fine file-form entry only the
+        files ``file_hits(file_entries, key_type)`` names rewrite
+        (file-granular COW — a dirty 6 GB bucket with one matched key
+        rewrites ~one file, not 6 GB) and the rest carry by reference
+        as ``carried_files[bucket]``."""
+        paths, file_entries, remnants = self._covering_slice(
+            info["manifest"], dirty, info["n_buckets"]
+        )
+        carried: dict[int, list[list]] = {}
+        if file_entries:
+            st = self._schema_of(info)
+            ktype = st[info["bucket_key"]].dataType if st is not None else None
+            if ktype is None or not self._file_cow_active(info):
+                # no recorded schema to cast ranges through (or the
+                # table config dropped file COW): read the dirty
+                # buckets whole — correct, coarser, self-healing back
+                # to the config's entry form
+                hit = {p for _b, fs in file_entries for p, _mn, _mx in fs}
             else:
-                slice_df = fragment.limit(0)
-            kept = slice_df.join(
-                F.broadcast(keys.withColumnRenamed(key, "__rk")),
-                slice_df[key].eqNullSafe(F.col("__rk")),
-                "left_anti",
-            )
-            # allowMissingColumns: a fragment gaining a column (mart
-            # definition evolved) nulls it on kept rows instead of
-            # silently DROPPING it from the fragment; the recorded
-            # schema widens with the commit below
-            out = kept.unionByName(fragment, allowMissingColumns=True)
-            self._check_schema_evolution(st, out.schema, name)
-            vdir = store.new_version_path()
-            self._write_buckets(
-                out, bexpr, vdir, info.get("sort_cols"),
-                info.get("max_file_rows"),
-            )
-            new_manifest = dict(manifest)
-            for ck in dissolved:
-                new_manifest.pop(ck, None)
-            if file_cow:
-                stats = self._file_stats(spark, vdir, key)
-                for k in dirty:
-                    fs = carried_files.get(k, []) + stats.get(k, [])
-                    if fs:
-                        new_manifest[str(k)] = {"files": fs}
-                    else:
-                        # the replace emptied this bucket entirely
-                        new_manifest.pop(str(k), None)
-                # dissolved coarse neighbors re-land under the fine
-                # modulus beyond `dirty`
-                for k in stats:
-                    if k not in dirty:
-                        new_manifest[str(k)] = {"files": stats[k]}
-            else:
-                present = set(self._present_buckets(vdir))
-                for k in dirty:
-                    if k in present:
-                        new_manifest[str(k)] = vdir
-                    else:
-                        # the replace emptied this bucket entirely
-                        new_manifest.pop(str(k), None)
-                for k in present:
-                    if k not in dirty:
-                        new_manifest[str(k)] = vdir
-            payload = dict(
-                extra or {},
-                manifest=new_manifest,
-                n_buckets=n,
-                bucket_key=key,
-                schema=out.schema.json(),
-            )
-            for cfg in (
-                "sort_cols", "max_file_rows", "auto_compact_files",
-            ):
-                if info.get(cfg):
-                    payload[cfg] = info[cfg]
-            floor = self._carry_floor(info, new_manifest)
-            if floor:
-                payload["auto_compact_floor"] = floor
-            try:
-                store.commit(vdir, extra=payload, expected=seq0)
-                return vdir
-            except CommitConflict:
-                continue  # concurrent manifest writer won; redo on new head
+                hit = file_hits(file_entries, ktype)
+            for b, fs in file_entries:
+                paths.extend(f[0] for f in fs if f[0] in hit)
+                keep = [f for f in fs if f[0] not in hit]
+                if keep:
+                    carried[b] = keep
+        return paths, carried, remnants
+
+    def _rewrite_dirty(
+        self,
+        spark: SparkSession,
+        name: str,
+        store: VersionedStore,
+        info: dict,
+        dirty: list[int],
+        file_hits,
+        rebuild,
+        extra: dict | None = None,
+    ) -> tuple[str, dict]:
+        """One keyed O(changes) rewrite against head ``info``: read the
+        ``dirty`` buckets' slice (:meth:`_dirty_slice`), ``rebuild`` it
+        into those buckets' new rows (it gets None for a legacy
+        schema-less table with nothing to read), write them into a
+        fresh version dir, and return ``(vdir, payload)`` for the CAS
+        commit. Clean buckets are never read or written — they carry
+        into the new manifest by reference."""
+        st = self._schema_of(info)
+        n = info["n_buckets"]
+        paths, carried, remnants = self._dirty_slice(info, dirty, file_hits)
+        if paths:
+            existing = self._read_paths(spark, st, paths)
+        elif st is not None:
+            # brand-new buckets only (or an empty bootstrap — e.g. a
+            # stream whose first micro-batch was empty): empty slice
+            # with the recorded table schema
+            existing = spark.createDataFrame([], st)
+        else:
+            existing = None
+        out = rebuild(existing)
+        self._check_schema_evolution(st, out.schema, name)
+        vdir = store.new_version_path()
+        self._write_buckets(
+            out, self._bucket_expr(info["bucket_key"], n), vdir,
+            info.get("sort_cols"), info.get("max_file_rows"),
+        )
+        # a dirty bucket nothing landed in and nothing carried was
+        # emptied (only deletes can vacate one)
+        new_manifest = self._relanded(
+            info["manifest"], n, n, remnants,
+            self._landed(spark, info, vdir), dirty, carried,
+        )
+        payload = dict(
+            extra or {},
+            manifest=new_manifest,
+            n_buckets=n,
+            bucket_key=info["bucket_key"],
+            schema=out.schema.json(),
+            **self._config_of(info),
+        )
+        floor = self._carry_floor(info, new_manifest)
+        if floor:
+            payload["auto_compact_floor"] = floor
+        return vdir, payload
 
     def _carry_floor(
         self, info: dict, new_manifest: dict
@@ -2016,19 +1955,9 @@ class TableStore:
         new version dir, or None when nothing exceeds the thresholds
         (no commit made). Commit CASes + retries on a concurrent
         manifest writer (see :meth:`upsert_manifest`)."""
-        from .commitlog import CommitConflict
 
-        store = self._store(name)
-        while True:
-            seq0 = store.current_seq()
-            info = self.current_info(name)
-            if info is None or "manifest" not in info:
-                raise FileNotFoundError(
-                    f"table {name} has no manifest version at head"
-                )
-            manifest, n, key = (
-                info["manifest"], info["n_buckets"], info["bucket_key"]
-            )
+        def attempt(store, info):
+            manifest, n = info["manifest"], info["n_buckets"]
             by_carrier: dict[str, list[str]] = {}
             for k, e in manifest.items():
                 for vd in self._entry_carriers(e):
@@ -2073,56 +2002,17 @@ class TableStore:
             # entry holding rows of a touched bucket must move in the
             # same pass — after merge_buckets a fine entry and finer
             # remnants legitimately share a bucket, and moving one
-            # without the others would shadow the carried rows
-            moved_keys = sorted(
-                self._dissolve_closure(manifest, set(moved_keys), n, n)
+            # without the others would shadow the carried rows. Every
+            # moved entry is re-homed whole (a moved COARSE remnant
+            # dissolves into fine entries).
+            moved_keys = self._dissolve_closure(manifest, moved_keys, n, n)
+            vdir, new_manifest, landed = self._rehome(
+                spark, store, info, moved_keys, n
             )
-            st = self._schema_of(info)
-            # recorded-schema read: a consolidated carrier predating a
-            # column addition must REWRITE with the column (as nulls) —
-            # footer inference here would physically drop it from the
-            # compacted files
-            reader = spark.read.schema(st) if st is not None else spark.read
-            rows = reader.parquet(
-                *[
-                    p
-                    for k in moved_keys
-                    for p in self._entry_paths(manifest[k], k)
-                ]
-            )
-            vdir = store.new_version_path()
-            self._write_buckets(
-                rows, self._bucket_expr(key, n), vdir,
-                info.get("sort_cols"), info.get("max_file_rows"),
-            )
-            # every moved entry is re-homed whole (a moved COARSE
-            # rebucketing remnant dissolves into fine entries — the
-            # rewrite partitions at the current modulus either way)
-            new_manifest = dict(manifest)
-            for k in moved_keys:
-                new_manifest.pop(k, None)
-            if self._file_cow_active(info):
-                stats = self._file_stats(spark, vdir, key)
-                for k, fs in stats.items():
-                    new_manifest[str(k)] = {"files": fs}
-            else:
-                stats = {}
-                for k in self._present_buckets(vdir):
-                    new_manifest[str(k)] = vdir
-            # carry informational payload fields (e.g. the streaming
-            # mart's built_from provenance) — compaction changes the
-            # layout, not the table's meaning, and dropping them would
-            # silently demote the next incremental refresh to a full
-            # repair
-            carried = {
-                k: v
-                for k, v in info.items()
-                if k
-                not in (
-                    "path", "committed_at", "manifest", "n_buckets",
-                    "bucket_key", "compacted",
-                )
-            }
+            # informational payload fields (e.g. the streaming mart's
+            # built_from provenance) carry: compaction changes the
+            # layout, not the table's meaning
+            carried = self._carried(info, *self._LAYOUT)
             # post-compaction FLOOR map for the auto-compaction
             # trigger: a rewritten bucket that still exceeds the
             # threshold is at its legitimate row-count floor — record
@@ -2131,29 +2021,25 @@ class TableStore:
             thresh0 = info.get("auto_compact_files")
             if thresh0:
                 floor = dict(info.get("auto_compact_floor") or {})
-                for k, fs in stats.items():
-                    floor.pop(str(k), None)
-                    if len(fs) > thresh0:
-                        floor[str(k)] = len(fs)
+                for k, e in landed.items():
+                    if not isinstance(e, str):
+                        floor.pop(str(k), None)
+                        if len(e["files"]) > thresh0:
+                            floor[str(k)] = len(e["files"])
                 if floor:
                     carried["auto_compact_floor"] = floor
                 else:
                     carried.pop("auto_compact_floor", None)
-            try:
-                store.commit(
-                    vdir,
-                    extra=dict(
-                        carried,
-                        manifest=new_manifest,
-                        n_buckets=n,
-                        bucket_key=key,
-                        compacted=True,
-                    ),
-                    expected=seq0,
-                )
-                return vdir
-            except CommitConflict:
-                continue  # concurrent manifest writer won; redo on new head
+            return vdir, dict(
+                carried,
+                manifest=new_manifest,
+                n_buckets=n,
+                bucket_key=info["bucket_key"],
+                compacted=True,
+            )
+
+        res = self._cas_manifest(name, attempt)
+        return res and res[0]
 
     def split_buckets(
         self,
@@ -2195,31 +2081,11 @@ class TableStore:
         writer."""
         if factor < 1:
             raise ValueError("factor must be >= 1")
-        from .commitlog import CommitConflict
 
-        store = self._store(name)
-        while True:
-            seq0 = store.current_seq()
-            info = self.current_info(name)
-            if info is None or "manifest" not in info:
-                raise FileNotFoundError(
-                    f"table {name} has no manifest version at head"
-                )
-            manifest, n, key = (
-                info["manifest"], info["n_buckets"], info["bucket_key"]
-            )
+        def attempt(store, info):
+            manifest, n = info["manifest"], info["n_buckets"]
             n2 = n * factor
-            for k in manifest:
-                _b, m = self._parse_entry_key(k)
-                m = m if m is not None else n
-                if m % n2 and n2 % m:
-                    raise ValueError(
-                        f"table {name}: entry {k} at modulus {m} is "
-                        f"incompatible with target modulus {n2} — "
-                        "finish the outstanding migration "
-                        "(split_buckets/merge_buckets with factor=1) "
-                        "before re-sharding"
-                    )
+            self._check_modulus(name, manifest, n, n2)
             backend = self._backend()
 
             def _size(k, e) -> int:
@@ -2246,60 +2112,10 @@ class TableStore:
             chosen_keys = self._dissolve_closure(
                 manifest, {k for _m, k, _e in chosen}, n, n2
             )
-            st = self._schema_of(info)
-            reader = spark.read.schema(st) if st is not None else spark.read
-            rows = reader.parquet(
-                *[
-                    p
-                    for k in sorted(chosen_keys)
-                    for p in self._entry_paths(manifest[k], k)
-                ]
-            )
-            vdir = store.new_version_path()
-            self._write_buckets(
-                rows, self._bucket_expr(key, n2), vdir,
-                info.get("sort_cols"), info.get("max_file_rows"),
-            )
-            new_manifest: dict = {}
-            for k, e in manifest.items():
-                if k in chosen_keys:
-                    continue
-                b, m = self._parse_entry_key(k)
-                m = m if m is not None else n
-                # re-key carried entries against the NEW modulus
-                new_manifest[str(b) if m == n2 else f"{b}@{m}"] = e
-            if self._file_cow_active(info):
-                stats = self._file_stats(spark, vdir, key)
-                for k, fs in stats.items():
-                    new_manifest[str(k)] = {"files": fs}
-            else:
-                for k in self._present_buckets(vdir):
-                    new_manifest[str(k)] = vdir
-            carried = {
-                k: v
-                for k, v in info.items()
-                if k
-                not in (
-                    "path", "committed_at", "manifest", "n_buckets",
-                    "bucket_key", "compacted",
-                    # bucket-id-keyed: stale across a modulus change
-                    "auto_compact_floor",
-                )
-            }
-            try:
-                store.commit(
-                    vdir,
-                    extra=dict(
-                        carried,
-                        manifest=new_manifest,
-                        n_buckets=n2,
-                        bucket_key=key,
-                    ),
-                    expected=seq0,
-                )
-                return vdir
-            except CommitConflict:
-                continue  # concurrent manifest writer won; redo on new head
+            return self._rebucketed(spark, store, info, chosen_keys, n2)
+
+        res = self._cas_manifest(name, attempt)
+        return res and res[0]
 
     def merge_buckets(
         self,
@@ -2339,35 +2155,15 @@ class TableStore:
         + retries like every manifest writer."""
         if factor < 1:
             raise ValueError("factor must be >= 1")
-        from .commitlog import CommitConflict
 
-        store = self._store(name)
-        while True:
-            seq0 = store.current_seq()
-            info = self.current_info(name)
-            if info is None or "manifest" not in info:
-                raise FileNotFoundError(
-                    f"table {name} has no manifest version at head"
-                )
-            manifest, n, key = (
-                info["manifest"], info["n_buckets"], info["bucket_key"]
-            )
+        def attempt(store, info):
+            manifest, n = info["manifest"], info["n_buckets"]
             if n % factor:
                 raise ValueError(
                     f"factor {factor} does not divide n_buckets {n}"
                 )
             n2 = n // factor
-            for k in manifest:
-                _b, m = self._parse_entry_key(k)
-                m = m if m is not None else n
-                if m % n2 and n2 % m:
-                    raise ValueError(
-                        f"table {name}: entry {k} at modulus {m} is "
-                        f"incompatible with target modulus {n2} — "
-                        "finish the outstanding migration "
-                        "(split_buckets/merge_buckets with factor=1) "
-                        "before re-sharding"
-                    )
+            self._check_modulus(name, manifest, n, n2)
             # finer entries grouped by the coarse bucket they refine
             # onto
             groups: dict[int, list[str]] = {}
@@ -2389,65 +2185,87 @@ class TableStore:
             chosen_keys = self._dissolve_closure(
                 manifest, {k for _j, ks in chosen for k in ks}, n, n2
             )
-            st = self._schema_of(info)
-            reader = spark.read.schema(st) if st is not None else spark.read
-            vdir = store.new_version_path()
-            if chosen_keys:
-                rows = reader.parquet(
-                    *[
-                        p
-                        for k in sorted(chosen_keys)
-                        for p in self._entry_paths(manifest[k], k)
-                    ]
-                )
-            elif st is not None:
-                rows = spark.createDataFrame([], st)
-            else:
+            if not chosen_keys and self._schema_of(info) is None:
                 return None  # nothing to move, no schema to stamp
-            self._write_buckets(
-                rows, self._bucket_expr(key, n2), vdir,
-                info.get("sort_cols"), info.get("max_file_rows"),
-            )
-            new_manifest: dict = {}
-            for k, e in manifest.items():
-                if k in chosen_keys:
-                    continue
-                b, m = self._parse_entry_key(k)
-                m = m if m is not None else n
-                # re-key carried entries against the NEW modulus
-                new_manifest[str(b) if m == n2 else f"{b}@{m}"] = e
-            if self._file_cow_active(info):
-                stats = self._file_stats(spark, vdir, key)
-                for k, fs in stats.items():
-                    new_manifest[str(k)] = {"files": fs}
-            else:
-                for k in self._present_buckets(vdir):
-                    new_manifest[str(k)] = vdir
-            carried = {
-                k: v
-                for k, v in info.items()
-                if k
-                not in (
-                    "path", "committed_at", "manifest", "n_buckets",
-                    "bucket_key", "compacted",
-                    # bucket-id-keyed: stale across a modulus change
-                    "auto_compact_floor",
+            return self._rebucketed(spark, store, info, chosen_keys, n2)
+
+        res = self._cas_manifest(name, attempt)
+        return res and res[0]
+
+    def _check_modulus(
+        self, name: str, manifest: dict, n: int, n2: int
+    ) -> None:
+        """Re-sharding to modulus ``n2`` needs every entry's modulus to
+        divide or be divided by it — a remnant whose rows straddle two
+        target buckets could not serve pruned reads correctly."""
+        for k in manifest:
+            _b, m = self._parse_entry_key(k)
+            m = m if m is not None else n
+            if m % n2 and n2 % m:
+                raise ValueError(
+                    f"table {name}: entry {k} at modulus {m} is "
+                    f"incompatible with target modulus {n2} — "
+                    "finish the outstanding migration "
+                    "(split_buckets/merge_buckets with factor=1) "
+                    "before re-sharding"
                 )
-            }
-            try:
-                store.commit(
-                    vdir,
-                    extra=dict(
-                        carried,
-                        manifest=new_manifest,
-                        n_buckets=n2,
-                        bucket_key=key,
-                    ),
-                    expected=seq0,
-                )
-                return vdir
-            except CommitConflict:
-                continue  # concurrent manifest writer won; redo on new head
+
+    def _rehome(
+        self,
+        spark: SparkSession,
+        store: VersionedStore,
+        info: dict,
+        keys,
+        n2: int,
+    ) -> tuple[str, dict, dict]:
+        """Rewrite the entries ``keys`` of head ``info`` together into
+        one fresh version dir, bucketed at modulus ``n2``; every other
+        entry carries by reference, re-keyed against ``n2``. Returns
+        ``(vdir, new manifest, landed entries)``. The read is
+        recorded-schema: a rewritten carrier predating a column
+        addition re-lands WITH the column (as nulls)."""
+        manifest = info["manifest"]
+        st = self._schema_of(info)
+        paths = [
+            p for k in sorted(keys) for p in self._entry_paths(manifest[k], k)
+        ]
+        if paths:
+            rows = self._read_paths(spark, st, paths)
+        else:
+            rows = spark.createDataFrame([], st)
+        vdir = store.new_version_path()
+        self._write_buckets(
+            rows, self._bucket_expr(info["bucket_key"], n2), vdir,
+            info.get("sort_cols"), info.get("max_file_rows"),
+        )
+        landed = self._landed(spark, info, vdir)
+        new_manifest = self._relanded(
+            manifest, info["n_buckets"], n2, keys, landed
+        )
+        return vdir, new_manifest, landed
+
+    def _rebucketed(
+        self,
+        spark: SparkSession,
+        store: VersionedStore,
+        info: dict,
+        keys,
+        n2: int,
+    ) -> tuple[str, dict]:
+        """:meth:`_rehome` ``keys`` at the new modulus ``n2`` and build
+        the re-sharded payload: informational fields carry; the
+        bucket-id-keyed auto-compaction floor does not (stale across a
+        modulus change)."""
+        vdir, new_manifest, _ = self._rehome(
+            spark, store, info, keys, n2
+        )
+        carried = self._carried(info, *self._LAYOUT, "auto_compact_floor")
+        return vdir, dict(
+            carried,
+            manifest=new_manifest,
+            n_buckets=n2,
+            bucket_key=info["bucket_key"],
+        )
 
     def _vacuum_manifest(
         self,

@@ -13,10 +13,11 @@ replacement for the harvest bookkeeping at scale.
 from __future__ import annotations
 
 import contextlib
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rialto_airflow_spark.functions.perf import scratch_dir
 
 EVENTS_DDL = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -45,12 +46,6 @@ def _source_fingerprint(sf_dir: str) -> tuple:
     )
 
 
-def clear_staged() -> None:
-    """Drop the staging memo (scratch dirs are left for the OS tempdir
-    reaper) — a test/fixture hook for dataset rebuilds."""
-    _STAGED.clear()
-
-
 def stage_events_input(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
     """Write the events table to a scratch directory `copies` times
     (copies=2 simulates at-least-once redelivery) and memoize per
@@ -60,7 +55,7 @@ def stage_events_input(spark: SparkSession, sf_dir: str, copies: int = 1) -> str
     if key not in _STAGED:
         from rialto_airflow_spark.session import load_tables
 
-        path = tempfile.mkdtemp(prefix="rspark_stream_in_") + "/in"
+        path = scratch_dir("rspark_stream_in_") + "/in"
         ev = load_tables(spark, sf_dir, "events")["events"]
         ev.write.mode("overwrite").parquet(path)
         for _ in range(copies - 1):

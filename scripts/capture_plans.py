@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
+from bench import query_kwargs  # noqa: E402
 
 queries()
 
@@ -30,17 +31,12 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("rialto-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
-    import inspect
 
     for name in sorted(REGISTRY):
         if only and name not in only:
             continue
         fn = REGISTRY[name].fn
-        kwargs = (
-            {"self_check": False}
-            if "self_check" in inspect.signature(fn).parameters
-            else {}
-        )
+        kwargs = query_kwargs(fn)
         try:
             df = fn(spark, sf_dir, **kwargs)
             buf = io.StringIO()

@@ -27,14 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
+from bench import query_kwargs, steal_ticks  # noqa: E402
 
 queries()
-
-
-def steal_ticks() -> int:
-    with open("/proc/stat") as fh:
-        parts = fh.readline().split()
-    return int(parts[8])
 
 
 def main() -> None:
@@ -50,14 +45,9 @@ def main() -> None:
     spark = get_spark("probe-ab")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["q01_pricing_summary"].fn(spark, sf_dir).collect()
-    import inspect
 
     fn = REGISTRY[name].fn
-    kwargs = (
-        {"self_check": False}
-        if "self_check" in inspect.signature(fn).parameters
-        else {}
-    )
+    kwargs = query_kwargs(fn)
     # low-steal cutoff is env-tunable (PROBE_AB_STEAL_MAX, ticks):
     # 100 suits this box's HZ/burst profile; a box where every sample
     # exceeds it would otherwise print nan for lowsteal_min

@@ -18,14 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
+from bench import query_kwargs, steal_ticks  # noqa: E402
 
 queries()
-
-
-def steal_ticks() -> int:
-    with open("/proc/stat") as fh:
-        parts = fh.readline().split()
-    return int(parts[8])
 
 
 def main() -> None:
@@ -35,14 +30,9 @@ def main() -> None:
     spark = get_spark("probe")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["q01_pricing_summary"].fn(spark, sf_dir).collect()  # warm
-    import inspect
 
     fn = REGISTRY[name].fn
-    kwargs = (
-        {"self_check": False}
-        if "self_check" in inspect.signature(fn).parameters
-        else {}
-    )
+    kwargs = query_kwargs(fn)
     best = None
     for i in range(n):
         s0, t0 = steal_ticks(), time.perf_counter()

@@ -5,7 +5,6 @@ to the executor-side checksum instead of a driver collect()."""
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import sys
@@ -14,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
+from bench import query_kwargs  # noqa: E402
 
 queries()
 
@@ -25,11 +25,7 @@ def main() -> None:
     out = {}
     for name in sorted(REGISTRY):
         fn = REGISTRY[name].fn
-        kwargs = (
-            {"self_check": False}
-            if "self_check" in inspect.signature(fn).parameters
-            else {}
-        )
+        kwargs = query_kwargs(fn)
         try:
             df = fn(spark, sf_dir, **kwargs)
             ncols = len(df.columns)

@@ -12,7 +12,6 @@ Default scales: sf0.01, sf0.1, sf1.0x10tile=/tmp/rspark_scaled_x10.
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import sys
@@ -22,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries
 from rialto_airflow_spark.session import get_spark
+from bench import query_kwargs
 
 queries()
 
@@ -66,11 +66,7 @@ def main() -> None:
             # JIT + codegen + parquet footers, untimed
             for name in headline:
                 fn = REGISTRY[name].fn
-                kw = (
-                    {"self_check": False}
-                    if "self_check" in inspect.signature(fn).parameters
-                    else {}
-                )
+                kw = query_kwargs(fn)
                 fn(spark, d, **kw).collect()
             warmed = True
         REGISTRY[headline[0]].fn(spark, d).collect()  # warm footers
@@ -78,13 +74,7 @@ def main() -> None:
         for _ in range(RUNS):
             for name in headline:
                 fn = REGISTRY[name].fn
-                # same rule as bench.py: measure the operator, not its
-                # self-verification twin
-                kwargs = (
-                    {"self_check": False}
-                    if "self_check" in inspect.signature(fn).parameters
-                    else {}
-                )
+                kwargs = query_kwargs(fn)
                 t0 = time.perf_counter()
                 fn(spark, d, **kwargs).collect()
                 dt = round(time.perf_counter() - t0, 3)
