@@ -34,18 +34,6 @@ def steal_ticks() -> int:
         return 0
 
 
-def query_kwargs(fn) -> dict:
-    """Call kwargs for a registered query function. Queries exposing a
-    ``self_check`` knob (q34's built-in-vs-manual twin) run WITHOUT it
-    in every harness: they measure the operator, not its verification
-    — the correctness run keeps the check."""
-    import inspect
-
-    if "self_check" in inspect.signature(fn).parameters:
-        return {"self_check": False}
-    return {}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
@@ -109,12 +97,11 @@ def main() -> None:
             if name in errors:
                 continue
             fn = REGISTRY[name].fn
-            kwargs = query_kwargs(fn)
             sink = checksum_sink if name in CHECKSUM_SINK else collect_sink
             s0 = steal_ticks()
             t0 = time.perf_counter()
             try:
-                sink(fn(spark, sf_dir, **kwargs))
+                sink(fn(spark, sf_dir))
             except Exception as exc:  # noqa: BLE001 — isolate per query
                 # a query that succeeded on an earlier run but failed
                 # now is NOT counted in the total — errors wins
@@ -152,16 +139,11 @@ def main() -> None:
         if name in errors:
             continue
         fn = REGISTRY[name].fn
-        # same self_check suppression as the main loop: the comparison
-        # must isolate the SINK cost, so both numbers need the same
-        # (verification-free) plan or the delta stops meaning
-        # "driver-serialization cost"
-        kwargs = query_kwargs(fn)
         try:
             cmp_entry = {}
             for sink_name, sink in (("collect", collect_sink), ("checksum", checksum_sink)):
                 t0 = time.perf_counter()
-                sink(fn(spark, sf_dir, **kwargs))
+                sink(fn(spark, sf_dir))
                 cmp_entry[sink_name] = round(time.perf_counter() - t0, 3)
             sink_compare[name] = cmp_entry
         except Exception:  # noqa: BLE001 — comparison is best-effort

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rialto_airflow_spark.operators import index_store
+from rialto_airflow_spark.operators.index_store import IndexLayout
 from rialto_airflow_spark.operators.text import ngram_strings
 
 
@@ -792,9 +794,17 @@ def winnow_near_dups(
 # and joins against the index on the band key. Probe cost is
 # batch-sized fingerprinting + one thin-row join; small probes prune
 # to their bucket partitions at file-listing time, and the 100-TB
-# text is never re-read.
+# text is never re-read. The storage protocol (append markers,
+# compaction, manifest reads, vacuum) is shared with the IVF index in
+# ``operators.index_store``; MINHASH is this index's layout.
 
-_MINHASH_WRITE_SALT = 8
+MINHASH = IndexLayout(
+    data="rows",
+    part="pbucket",
+    id_col="index_id",
+    manifest_key="rows_manifest",
+    aux=("meta",),
+)
 
 
 def _pbucket(band_idx: Column, band_hash: Column, bands: int, buckets: int) -> Column:
@@ -895,12 +905,9 @@ def write_minhash_index(
             "pbucket"
         ),
     )
-    salt = F.pmod(F.xxhash64(F.col("index_id")), F.lit(_MINHASH_WRITE_SALT))
-    (
-        rows.repartition(F.col("pbucket"), salt)
-        .write.partitionBy("pbucket")
-        .mode("overwrite")
-        .parquet(os.path.join(base, "rows"))
+    index_store.salted_write(
+        rows, os.path.join(base, MINHASH.data), MINHASH.part, MINHASH.id_col,
+        "overwrite",
     )
     store.commit(base)
 
@@ -914,20 +921,20 @@ def append_minhash_index(
     """Extend an existing index with a new batch: fingerprint under
     the PERSISTED parameters and append — new files land inside the
     existing pbucket directories, so probes see old + new rows with
-    partition pruning intact (the ``append_ivf_index`` maintenance
-    contract). Appending the same batch twice leaves duplicate index
-    rows: harmless for correctness (probe pairs are distinct) but
-    compact periodically with a fresh ``write_minhash_index``.
+    partition pruning intact. Appending the same batch twice leaves
+    duplicate index rows: harmless for correctness (probe pairs are
+    distinct); :func:`compact_minhash_index` collapses them.
 
-    Writer contract: SINGLE WRITER per index path. A concurrent
+    Writer contract (``index_store.append``): files first, then a
+    marker commit CAS'd against the head. A concurrent
     ``write_minhash_index`` pointer swap would strand this append in
     a superseded version (silently vacuumable — future duplicates of
-    the appended docs would go undetected), so after the append the
-    pointer is RE-READ and a swap-during-append raises
-    ``RuntimeError`` instead of losing the batch silently (round-7
-    ADVICE #2). On that error, re-run the append against the new
-    current version — appends are idempotent-for-correctness per the
-    duplicate-rows note above."""
+    the appended docs would go undetected), so the pointer is RE-READ
+    after the write and a swap-during-append raises ``RuntimeError``
+    instead of losing the batch silently (round-7 ADVICE #2). On that
+    error, re-run the append against the new current version —
+    appends are idempotent-for-correctness per the duplicate-rows
+    note above."""
     spark = docs.sparkSession
     cur = minhash_index_current(path)
     if cur is None:
@@ -942,79 +949,11 @@ def append_minhash_index(
             "pbucket"
         ),
     )
-    head_manifest = (_minhash_store(path).current() or {}).get("rows_manifest")
-    touched: list[str] = []
-    if head_manifest is not None:
-        # manifest head (dirty-compacted lineage): the marker must
-        # extend the touched buckets' carrier lists with THIS version's
-        # rows dir, or probes resolving through the manifest would
-        # never see the appended files. Bounded collect (≤ bands·
-        # buckets distinct values by construction).
-        touched = [
-            str(r["pbucket"])
-            for r in rows.select("pbucket").distinct().collect()
-        ]
-    salt = F.pmod(F.xxhash64(F.col("index_id")), F.lit(_MINHASH_WRITE_SALT))
-    (
-        rows.repartition(F.col("pbucket"), salt)
-        .write.partitionBy("pbucket")
-        .mode("append")
-        .parquet(rows_dir)
-    )
-    # Record the append in the commit log (same version path, marked
-    # appended). Appends mutate the live rows dir WITHOUT a commit of
-    # their own, so without this entry a concurrent COMPACTION could
-    # list the rows dir before these files land, rewrite without
-    # them, and commit — silently dropping the batch (the appender's
-    # own post-check passes because the pointer hasn't moved yet).
-    # With it, compact_minhash_index's CAS against the pre-read head
-    # conflicts and re-reads. Ordering matters twice: the entry lands
-    # only AFTER the files are fully written (so any compactor
-    # sequenced after it sees them), and it is itself CAS'd against
-    # the head seq observed at the pointer post-check — an
-    # unconditional marker could land AFTER a rebuild/compaction
-    # committed in the post-check→marker window and silently re-point
-    # the head at the superseded version (round-9 "What's wrong" #2).
-    # On conflict the pointer is re-read: still ours (a sibling
-    # append's marker won the seq) → retry; moved (rebuild or
-    # compaction) → the documented re-run error.
-    import os as _os
-
-    from ..commitlog import CommitConflict
-
     store = _minhash_store(path)
-    while True:
-        head_seq = store.current_seq()
-        after = minhash_index_current(path)
-        if after is None or after[0] != rows_dir:
-            raise RuntimeError(
-                f"append_minhash_index({path}): index pointer moved during "
-                f"append (was {rows_dir!r}, now "
-                f"{after[0] if after else None!r}); the appended batch landed "
-                "in a superseded version and will NOT be probed — re-run the "
-                "append against the current version"
-            )
-        extra: dict = {"appended": True}
-        if head_manifest is not None:
-            cur_manifest = dict(
-                (store.current() or {}).get("rows_manifest") or head_manifest
-            )
-            base = _os.path.dirname(rows_dir)
-            for k in touched:
-                dirs = list(cur_manifest.get(k, []))
-                if base not in dirs:
-                    dirs.append(base)
-                cur_manifest[k] = dirs
-            extra["rows_manifest"] = cur_manifest
-        try:
-            store.commit(
-                _os.path.dirname(rows_dir),
-                extra=extra,
-                expected=head_seq,
-            )
-            return
-        except CommitConflict:
-            continue
+    index_store.append(
+        store, MINHASH, rows, rows_dir,
+        lambda: (minhash_index_current(path) or (None,))[0],
+    )
 
 
 def compact_minhash_index(
@@ -1032,82 +971,18 @@ def compact_minhash_index(
     (the ``TableStore.compact`` story, specialized to the index's
     partitioned layout).
 
-    Concurrency contract (the inverse of the append/rebuild race):
-    appends mutate the live rows dir and then COMMIT a marker entry
-    (files first, entry second). The compactor snapshots the head seq
-    BEFORE listing rows and commits with ``expected=`` that seq — an
-    append sequenced in between conflicts the CAS and the compactor
-    re-reads (now seeing the appended files, which were durable
-    before the marker existed). In the other order, the compactor's
-    commit lands first, the appender's own post-check sees the moved
-    pointer and raises its documented re-run error. Either
-    interleaving keeps every signature. Probes are never disrupted:
-    they keep reading the version they resolved until vacuum.
+    Concurrency contract (``index_store.compact``): the head seq is
+    snapshotted BEFORE the rows are listed and the commit CAS's
+    against it, so an append sequenced in between makes the compactor
+    re-read, and a compaction committing first trips the appender's
+    pointer check — either interleaving keeps every signature.
 
     ``_after_read`` is a test-only fault-injection hook invoked
-    between the head-seq snapshot and the commit. Returns the new
-    version's base dir."""
-    import os
-
-    from ..commitlog import CommitConflict
-
-    store = _minhash_store(path)
-    while True:
-        head_seq = store.current_seq()
-        cur = minhash_index_current(path)
-        if cur is None or head_seq is None:
-            raise FileNotFoundError(
-                f"no committed minhash index at {path} (legacy layouts: "
-                "rebuild with write_minhash_index first)"
-            )
-        rows_dir, meta_dir = cur
-        num_perm, bands, shingle_n, buckets = _minhash_index_meta(
-            spark, meta_dir
-        )
-        base = store.new_version_path()
-        spark.read.parquet(meta_dir).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "meta"))
-        manifest = (store.current() or {}).get("rows_manifest")
-        if manifest is not None:
-            # manifest head: the full row set spans carrier dirs;
-            # pbucket is a pure function of (band_idx, band_hash), so
-            # it reattaches after the leaf read for the partitioned
-            # rewrite — the compacted version is self-contained again
-            leafs = [
-                os.path.join(b, "rows", f"pbucket={k}")
-                for k, bs in manifest.items()
-                for b in bs
-            ]
-            rows = (
-                spark.read.parquet(*leafs)
-                .withColumn(
-                    "pbucket",
-                    _pbucket(
-                        F.col("band_idx"), F.col("band_hash"), bands, buckets
-                    ),
-                )
-                .distinct()
-            )
-        else:
-            rows = spark.read.parquet(rows_dir).distinct()
-        salt = F.pmod(F.xxhash64(F.col("index_id")), F.lit(_MINHASH_WRITE_SALT))
-        (
-            rows.repartition(F.col("pbucket"), salt)
-            .write.partitionBy("pbucket")
-            .mode("overwrite")
-            .parquet(os.path.join(base, "rows"))
-        )
-        if _after_read is not None:
-            _after_read()
-        try:
-            store.commit(base, extra={"compacted": True}, expected=head_seq)
-            return base
-        except CommitConflict:
-            # an append (or rebuild) sequenced past our snapshot —
-            # our rewrite may be missing its rows; discard and redo
-            # against the new head. The orphaned dir is vacuumable.
-            continue
+    between the rewrite and the commit. Returns the new version's
+    base dir."""
+    return index_store.compact(
+        spark, _minhash_store(path), MINHASH, _after_read=_after_read
+    )
 
 
 def compact_minhash_index_dirty(
@@ -1122,99 +997,21 @@ def compact_minhash_index_dirty(
     :func:`compact_minhash_index` rewrites EVERY partition even when
     one is dirty. This pass rewrites only pbuckets holding more than
     ``max_files`` data files (or spanning multiple carrier dirs) into
-    a fresh version and CARRIES every clean pbucket by reference: the
-    commit payload's ``rows_manifest`` maps each pbucket to the
-    version dirs holding its files (the TableStore manifest idea,
-    specialized to the index's partitioned layout). Probes resolve
-    the manifest into a per-bucket path selection — pruning semantics
-    unchanged; appends extend the touched buckets' carrier lists in
-    their marker commit; vacuum pins carrier dirs any retained
-    manifest still references (:func:`minhash_index_vacuum`).
+    a fresh version and CARRIES every clean pbucket by reference in
+    the commit's carrier manifest (``index_store``: each pbucket maps
+    to the version dirs holding its files — the TableStore manifest
+    idea, specialized to the index's partitioned layout). Probes
+    resolve the manifest into a per-carrier path selection — pruning
+    semantics unchanged; appends extend the touched buckets' carrier
+    lists in their marker commit; vacuum pins carrier dirs any
+    retained manifest still references (:func:`minhash_index_vacuum`).
 
-    Same CAS concurrency contract as the full compaction (snapshot
-    the head seq BEFORE listing; conflict → re-read). Returns the new
-    version dir, or None when nothing is dirty (no commit, no write).
-    ``_after_read`` is the test-only fault-injection hook."""
-    import os
-
-    from ..commitlog import CommitConflict
-
-    store = _minhash_store(path)
-    while True:
-        head_seq = store.current_seq()
-        cur = minhash_index_current(path)
-        if cur is None or head_seq is None:
-            raise FileNotFoundError(f"no committed minhash index at {path}")
-        rows_dir, meta_dir = cur
-        num_perm, bands, shingle_n, buckets = _minhash_index_meta(
-            spark, meta_dir
-        )
-        payload = store.current() or {}
-        manifest = payload.get("rows_manifest")
-        if manifest is None:
-            # implicit single-dir manifest: every present pbucket
-            # lives in the current version's rows dir
-            base0 = os.path.dirname(rows_dir)
-            manifest = {
-                d.split("=", 1)[1]: [base0]
-                for d in store.backend.list_data(rows_dir)
-                if d.startswith("pbucket=")
-            }
-        dirty = []
-        for k, bases in manifest.items():
-            n_files = sum(
-                1
-                for b in bases
-                for f in store.backend.list_data_files(
-                    os.path.join(b, "rows", f"pbucket={k}")
-                )
-                if f.endswith(".parquet")
-            )
-            if n_files > max_files or len(bases) > 1:
-                dirty.append(k)
-        if not dirty:
-            return None
-        base = store.new_version_path()
-        spark.read.parquet(meta_dir).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "meta"))
-        leafs = [
-            os.path.join(b, "rows", f"pbucket={k}")
-            for k in dirty
-            for b in manifest[k]
-        ]
-        rows = (
-            spark.read.parquet(*leafs)
-            .withColumn(
-                "pbucket",
-                _pbucket(F.col("band_idx"), F.col("band_hash"), bands, buckets),
-            )
-            .distinct()
-        )
-        salt = F.pmod(F.xxhash64(F.col("index_id")), F.lit(_MINHASH_WRITE_SALT))
-        (
-            rows.repartition(F.col("pbucket"), salt)
-            .write.partitionBy("pbucket")
-            .mode("overwrite")
-            .parquet(os.path.join(base, "rows"))
-        )
-        new_manifest = dict(manifest)
-        for k in dirty:
-            new_manifest[k] = [base]
-        if _after_read is not None:
-            _after_read()
-        try:
-            store.commit(
-                base,
-                extra={
-                    "rows_manifest": new_manifest,
-                    "compacted_dirty": True,
-                },
-                expected=head_seq,
-            )
-            return base
-        except CommitConflict:
-            continue
+    Same CAS concurrency contract as the full compaction. Returns the
+    new version dir, or None when nothing is dirty (no commit, no
+    write). ``_after_read`` is the test-only fault-injection hook."""
+    return index_store.compact(
+        spark, _minhash_store(path), MINHASH, max_files, _after_read
+    )
 
 
 def minhash_dups_against_index(
@@ -1252,8 +1049,7 @@ def minhash_dups_against_index(
     cur = minhash_index_current(path)
     if cur is None:
         raise FileNotFoundError(f"no committed minhash index at {path}")
-    rows_dir, meta_dir = cur
-    num_perm, bands, shingle_n, buckets = _minhash_index_meta(spark, meta_dir)
+    num_perm, bands, shingle_n, buckets = _minhash_index_meta(spark, cur[1])
     probe = banded_rows(
         new_docs, id_col, text_col, num_perm, bands, shingle_n
     ).select(
@@ -1267,65 +1063,13 @@ def minhash_dups_against_index(
     from pyspark import StorageLevel
 
     probe = probe.persist(StorageLevel.MEMORY_AND_DISK)
-    manifest = (_minhash_store(path).current() or {}).get("rows_manifest")
-    if manifest is not None:
-        # dirty-compacted index: each pbucket's files live in the
-        # carrier dirs its manifest entry lists — partition pruning
-        # becomes PATH SELECTION (the probed buckets' leaf dirs are
-        # the only paths handed to the scan; a one-document probe
-        # lists ~bands directories of a 100-TB index, same contract
-        # as the isin/PartitionFilters route below)
-        import os as _os
-
-        if prune is False:
-            sel = sorted(manifest, key=int)
-        else:
-            sel = sorted(
-                {
-                    str(r["pbucket"])
-                    for r in probe.select("pbucket").distinct().collect()
-                }
-                & set(manifest)
-            )
-        leafs = [
-            _os.path.join(base, "rows", f"pbucket={k}")
-            for k in sel
-            for base in manifest[k]
-        ]
-        if not leafs:
-            # empty selection: keep the EXACT output schema of the
-            # join path below (index_id must carry the INDEX corpus's
-            # id type, not new_id's — a long-probe/string-index setup
-            # would otherwise only type-break on the empty case)
-            any_leaf = next(
-                (
-                    _os.path.join(bases[0], "rows", f"pbucket={k}")
-                    for k, bases in manifest.items()
-                    if bases
-                ),
-                None,
-            )
-            if any_leaf is not None:
-                idx0 = spark.read.parquet(any_leaf).limit(0)
-                pairs = (
-                    probe.limit(0)
-                    .join(idx0, ["band_idx", "band_hash"])
-                    .select("new_id", "index_id")
-                )
-            else:  # a fully-empty index
-                pairs = probe.limit(0).select(
-                    "new_id", F.col("new_id").alias("index_id")
-                )
-            return release_on_gc(pairs, probe)
-        idx = spark.read.parquet(*leafs)
+    if prune is False:
+        keys = None
     else:
-        idx = spark.read.parquet(rows_dir)
-        if prune is not False:
-            pbs = [
-                r["pbucket"] for r in probe.select("pbucket").distinct().collect()
-            ]
-            if prune or len(pbs) < bands * buckets:
-                idx = idx.where(F.col("pbucket").isin(pbs))
+        keys = [r["pbucket"] for r in probe.select("pbucket").distinct().collect()]
+        if not prune and len(keys) >= bands * buckets:
+            keys = None  # every bucket probed: a filter would be a no-op
+    idx = index_store.read(spark, _minhash_store(path), MINHASH, keys)
     pairs = (
         probe.join(idx, ["band_idx", "band_hash"])
         .select("new_id", "index_id")
@@ -1462,40 +1206,8 @@ def minhash_index_vacuum(
     ``commitlog.VersionedStore.vacuum`` contract; ``orphan_grace_s=0``
     is the known-single-writer shortcut).
 
-    Dirty-compacted lineages (``rows_manifest`` payloads): a carrier
-    dir that a KEPT version's manifest still references is PINNED —
-    deleting it would tear the kept version's row set. The pin set is
-    refs(newest ``keep`` versions + current) minus those versions'
-    own dirs, so a superseded manifest version never pins ITSELF into
-    retention (its self-reference would otherwise make vacuum
-    non-convergent); pinned carriers survive purely as file holders —
-    nothing resolves them as versions anymore, so their own manifests
-    need no protection. Pinning is whole-dir (the index accretes by
-    append; bucket-granular GC inside a carrier buys little)."""
-    store = _minhash_store(path)
-    payload_for: dict[str, dict] = {}
-    for _seq, payload in store.log.history():
-        p = payload.get("path")
-        if p and p not in payload_for:
-            payload_for[p] = payload
-    vs = store.versions()
-    kept_paths = {v["path"] for v in (vs[-keep:] if keep else vs)}
-    cur = store.current_path()
-    if cur:
-        kept_paths.add(cur)
-    pinned: set[str] = set()
-    for p in kept_paths:
-        m = (payload_for.get(p) or {}).get("rows_manifest")
-        if m:
-            for bases in m.values():
-                pinned.update(bases)
-    pinned -= kept_paths
-    return store.vacuum(
-        keep=keep,
-        older_than_s=older_than_s,
-        orphan_grace_s=orphan_grace_s,
-        pinned=pinned,
-        # carriers are pure file-holders: anchoring the log prune on
-        # their (immortal) seqs would stop it pruning forever
-        log_anchor_exclude=pinned,
+    Dirty-compacted lineages keep the carrier dirs a kept version's
+    manifest still references (``index_store.vacuum``)."""
+    return index_store.vacuum(
+        _minhash_store(path), MINHASH, keep, older_than_s, orphan_grace_s
     )

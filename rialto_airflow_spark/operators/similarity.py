@@ -34,13 +34,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rialto_airflow_spark.functions.perf import ensure_parallelism
+from rialto_airflow_spark.operators import index_store
 from rialto_airflow_spark.operators.dedup import dot, norm
+from rialto_airflow_spark.operators.index_store import IndexLayout
 
-
-# index writes split each partition-key group across this many salted
-# tasks: hot buckets/lists never funnel into one writer, and files per
-# partition directory stay bounded by the same number
-_WRITE_SALT = 8
+# the IVF index's layout for the shared versioned-index protocol
+# (``operators.index_store``: append markers, compaction, manifest
+# reads, vacuum)
+IVF = IndexLayout(
+    data="lists",
+    part="centroid_id",
+    id_col="neighbor_id",
+    manifest_key="lists_manifest",
+    aux=("centroids", "pq_codebooks"),
+    carried=("kind", "n_centroids", "format"),
+)
 
 
 def _index_store(path: str):
@@ -73,39 +81,12 @@ def index_data_dir(path: str, name: str = "lists") -> str:
 
 def _read_lists(spark, index_path: str, probed=None):
     """The supported read of an IVF index's inverted lists, manifest-
-    aware (round-10 dirty compaction): a ``lists_manifest`` payload
-    maps each centroid to the carrier version dirs holding its files.
-    Reads group by CARRIER (one partitioned read per carrier dir,
-    filtered to the centroids the manifest homes there — partition
-    discovery keeps the ``centroid_id`` column the probe join needs),
-    so the plan has one branch per carrier, not per centroid.
-    ``probed`` (driver-small by contract) prunes to those centroids —
-    path-level on manifest indexes, PartitionFilters otherwise."""
-    import os
-    from functools import reduce
-
-    manifest = (_index_store(index_path).current() or {}).get("lists_manifest")
-    if manifest is None:
-        df = spark.read.parquet(index_data_dir(index_path, "lists"))
-        if probed is not None:
-            df = df.where(F.col("centroid_id").isin(list(probed)))
-        return df
-    sel = (
-        {str(c) for c in probed} if probed is not None else set(manifest)
-    ) & set(manifest)
-    by_base: dict[str, set[int]] = {}
-    for kstr in sel:
-        for b in manifest[kstr]:
-            by_base.setdefault(b, set()).add(int(kstr))
-    parts = [
-        spark.read.parquet(os.path.join(b, "lists")).where(
-            F.col("centroid_id").isin(sorted(ks))
-        )
-        for b, ks in sorted(by_base.items())
-    ]
-    if not parts:
-        return spark.read.parquet(index_data_dir(index_path, "lists")).limit(0)
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    aware (``index_store.read``: one partitioned read per carrier dir,
+    so ``centroid_id`` survives partition discovery for the probe
+    join). ``probed`` (driver-small by contract) prunes to those
+    centroids — path-level on manifest indexes, PartitionFilters
+    otherwise."""
+    return index_store.read(spark, _index_store(index_path), IVF, probed)
 
 
 def index_vacuum(
@@ -119,37 +100,14 @@ def index_vacuum(
     run on a timer without racing in-flight probes — the shared
     ``commitlog.VersionedStore.vacuum`` contract.
 
-    Dirty-compacted lineages (``lists_manifest`` payloads) pin the
-    carrier dirs the kept window still references, self-references
-    excluded — the ``dedup.minhash_index_vacuum`` rule. A pinned
-    carrier's LOG entries are pruned away (they would otherwise
-    anchor the prune forever — nothing resolves a carrier as a
-    version), so once a later full compaction un-pins it, the dir
-    reclaims through the ORPHAN path: up to ``orphan_grace_s`` later
-    (≤1 h by default — noise against carrier lifetimes; 0 for
-    known-single-writer immediate cleanup)."""
-    store = _index_store(path)
-    payload_for: dict[str, dict] = {}
-    for _seq, payload in store.log.history():
-        p = payload.get("path")
-        if p and p not in payload_for:
-            payload_for[p] = payload
-    vs = store.versions()
-    kept_paths = {v["path"] for v in (vs[-keep:] if keep else vs)}
-    cur = store.current_path()
-    if cur:
-        kept_paths.add(cur)
-    pinned: set[str] = set()
-    for p in kept_paths:
-        m = (payload_for.get(p) or {}).get("lists_manifest")
-        if m:
-            for bases in m.values():
-                pinned.update(bases)
-    pinned -= kept_paths
-    return store.vacuum(
-        keep=keep, older_than_s=older_than_s, pinned=pinned,
-        orphan_grace_s=orphan_grace_s,
-        log_anchor_exclude=pinned,
+    Dirty-compacted lineages pin the carrier dirs the kept window
+    still references (``index_store.vacuum``). Once a later full
+    compaction un-pins a carrier, the dir reclaims through the ORPHAN
+    path: up to ``orphan_grace_s`` later (≤1 h by default — noise
+    against carrier lifetimes; 0 for known-single-writer immediate
+    cleanup)."""
+    return index_store.vacuum(
+        _index_store(path), IVF, keep, older_than_s, orphan_grace_s
     )
 
 
@@ -450,9 +408,9 @@ def write_lsh_index(
     a plain bucket repartition caps write parallelism at the distinct
     bucket count and funnels a skew-hot bucket into ONE task — the
     exact bucket-key skew lsh_topk's scoring path avoids. The salt
-    splits each bucket across ≤ ``_WRITE_SALT`` tasks (bounding files
-    per bucket directory to the same number) while partitionBy still
-    lays every row in its bucket directory.
+    splits each bucket across ≤ ``index_store.WRITE_SALT`` tasks
+    (bounding files per bucket directory to the same number) while
+    partitionBy still lays every row in its bucket directory.
 
     ``quantize=True`` stores int8 codes + per-vector scale instead of
     the float vector (same contract as the IVF writer: ``vec_norm``
@@ -480,12 +438,8 @@ def write_lsh_index(
             norm(dequant()).alias("vec_norm"),
             "bucket",
         )
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(_WRITE_SALT))
-    (
-        out.repartition(F.col("bucket"), salt)
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(f"{base}/buckets")
+    index_store.salted_write(
+        out, f"{base}/buckets", "bucket", "neighbor_id", "overwrite"
     )
     store.commit(base, extra={"kind": "lsh", "bits": bits})
 
@@ -737,12 +691,8 @@ def write_ivf_index(
             "vec_norm",
             "centroid_id",
         )
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(_WRITE_SALT))
-    (
-        assigned.repartition(F.col("centroid_id"), salt)
-        .write.partitionBy("centroid_id")
-        .mode("overwrite")
-        .parquet(f"{base}/lists")
+    index_store.salted_write(
+        assigned, f"{base}/{IVF.data}", IVF.part, IVF.id_col, "overwrite"
     )
     store.commit(
         base,
@@ -860,24 +810,24 @@ def append_ivf_index(
     like FAISS add()); retrain + rebuild when the distribution
     moves.
 
-    Writer contract: SINGLE WRITER per index path (the
-    ``append_minhash_index`` contract). The append resolves the
-    CURRENT version, lands inside it, then re-reads the commit log:
-    a concurrent rebuild's commit would strand this batch in a
-    superseded, vacuumable version — that raises ``RuntimeError``
-    instead of losing the batch silently; re-run the append against
-    the new current version (duplicate appends are
+    Writer contract (``index_store.append``): the append resolves
+    the CURRENT version, lands inside it, re-reads the pointer and
+    commits a files-first marker CAS'd against the head. A concurrent
+    rebuild or compaction would strand this batch in a superseded,
+    vacuumable version — that raises ``RuntimeError`` instead of
+    losing the batch silently; re-run the append against the new
+    current version (a sibling append's marker only retries the
+    commit). Duplicate appends are
     correctness-harmless: probes dedup (query, neighbor) pairs before
-    ranking — and :func:`compact_ivf_index` removes the redundant
-    rows themselves)."""
+    ranking, and :func:`compact_ivf_index` removes the redundant rows
+    themselves."""
     import math
 
     import numpy as np
 
     spark = corpus.sparkSession
     store = _index_store(path)
-    seq0 = store.current_seq()
-    lists_dir = index_data_dir(path, "lists")
+    lists_dir = index_data_dir(path, IVF.data)
     cids, cmat, cnorms = _load_centroids(spark, path)
 
     assigned = _centroid_assign(
@@ -915,78 +865,9 @@ def append_ivf_index(
             "vec_norm",
             "centroid_id",
         )
-    head_manifest = (store.current() or {}).get("lists_manifest")
-    touched: list[str] = []
-    if head_manifest is not None:
-        # manifest head (dirty-compacted lineage): the marker must
-        # extend the touched centroids' carrier lists or manifest-
-        # routed probes would never see the appended files. Bounded
-        # collect (≤ n_centroids distinct values by construction).
-        touched = [
-            str(r["centroid_id"])
-            for r in assigned.select("centroid_id").distinct().collect()
-        ]
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(_WRITE_SALT))
-    (
-        assigned.repartition(F.col("centroid_id"), salt)
-        .write.partitionBy("centroid_id")
-        .mode("append")
-        .parquet(lists_dir)
+    index_store.append(
+        store, IVF, assigned, lists_dir, lambda: index_data_dir(path, IVF.data)
     )
-    if store.current_seq() != seq0:
-        raise RuntimeError(
-            f"append_ivf_index({path}): index version moved during the "
-            f"append (commit {seq0} → {store.current_seq()}); the "
-            "appended batch landed in a superseded version and will NOT "
-            "be probed — re-run the append against the current version"
-        )
-    # Files-first marker commit (the append_minhash_index protocol):
-    # appends mutate the live lists dir without moving the pointer,
-    # so compact_ivf_index's CAS needs a log entry to order against —
-    # otherwise a compactor that listed the lists before this batch
-    # landed could rewrite without it and commit, silently dropping
-    # the vectors. The marker itself is CAS'd against seq0 (the seq
-    # the post-check above just verified is still the head): an
-    # unconditional marker landing AFTER a rebuild/compaction commit
-    # in the post-check→marker window would silently re-point the
-    # head at the superseded version (round-9 "What's wrong" #2).
-    # Informational payload fields carry over so ``current()`` stays
-    # descriptive.
-    import os
-
-    from ..commitlog import CommitConflict
-
-    cur = store.current() or {}
-    extra = dict(
-        {
-            k: cur[k]
-            for k in ("kind", "n_centroids", "format")
-            if k in cur
-        },
-        appended=True,
-    )
-    if head_manifest is not None:
-        new_manifest = dict(cur.get("lists_manifest") or head_manifest)
-        base = os.path.dirname(lists_dir)
-        for k in touched:
-            dirs = list(new_manifest.get(k, []))
-            if base not in dirs:
-                dirs.append(base)
-            new_manifest[k] = dirs
-        extra["lists_manifest"] = new_manifest
-    try:
-        store.commit(
-            os.path.dirname(lists_dir),
-            extra=extra,
-            expected=seq0,
-        )
-    except CommitConflict:
-        raise RuntimeError(
-            f"append_ivf_index({path}): index version moved during the "
-            f"append (commit {seq0} → {store.current_seq()}); the "
-            "appended batch landed in a superseded version and will NOT "
-            "be probed — re-run the append against the current version"
-        ) from None
 
 
 def compact_ivf_index(spark, path: str, _after_read=None) -> str:
@@ -995,152 +876,39 @@ def compact_ivf_index(spark, path: str, _after_read=None) -> str:
     re-applied appends leave — into a fresh version (centroids and
     PQ codebooks copied verbatim; appended vectors keep their
     original-quantizer assignment, so compaction never re-trains),
-    published via CAS against the head observed BEFORE the list read.
-    Same concurrency contract as
-    ``operators.dedup.compact_minhash_index``: appends marker-commit
-    files-first, so an append sequenced inside the compaction window
-    conflicts the CAS and the compactor re-reads; a compaction that
-    commits first trips the appender's pointer-moved re-run error.
-    This is the maintenance pass a daily-append index needs — every
-    append lands another small file set per centroid dir, and probe
-    latency decays into file listing without periodic rewrite.
+    published via CAS against the head observed BEFORE the list read
+    (``index_store.compact``): an append sequenced inside the
+    compaction window conflicts the CAS and the compactor re-reads; a
+    compaction that commits first trips the appender's pointer-moved
+    re-run error. This is the maintenance pass a daily-append index
+    needs — every append lands another small file set per centroid
+    dir, and probe latency decays into file listing without periodic
+    rewrite.
 
     ``_after_read`` is a test-only fault-injection hook. Returns the
     new version's base dir."""
-    import os
-
-    from ..commitlog import CommitConflict
-
-    store = _index_store(path)
-    while True:
-        seq0 = store.current_seq()
-        base_old = store.current_path()
-        if seq0 is None or base_old is None:
-            raise FileNotFoundError(
-                f"no committed index at {path} (legacy layouts: rebuild "
-                "with write_ivf_index first)"
-            )
-        payload = store.current() or {}
-        base = store.new_version_path()
-        for aux in ("centroids", "pq_codebooks"):
-            src = os.path.join(base_old, aux)
-            if store.backend.data_exists(src):
-                spark.read.parquet(src).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(base, aux))
-        lists = _read_lists(spark, path).distinct()
-        salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(_WRITE_SALT))
-        (
-            lists.repartition(F.col("centroid_id"), salt)
-            .write.partitionBy("centroid_id")
-            .mode("overwrite")
-            .parquet(os.path.join(base, "lists"))
-        )
-        if _after_read is not None:
-            _after_read()
-        try:
-            store.commit(
-                base,
-                extra=dict(
-                    {
-                        k: payload[k]
-                        for k in ("kind", "n_centroids", "format")
-                        if k in payload
-                    },
-                    compacted=True,
-                ),
-                expected=seq0,
-            )
-            return base
-        except CommitConflict:
-            continue  # an append/rebuild sequenced past us; redo
+    return index_store.compact(
+        spark, _index_store(path), IVF, _after_read=_after_read
+    )
 
 
 def compact_ivf_index_dirty(
     spark, path: str, max_files: int = 4, _after_read=None
 ) -> str | None:
-    """DIRTY-PARTITION IVF compaction (round-10 task #4, the
-    ``dedup.compact_minhash_index_dirty`` twin): rewrite only centroid
-    lists holding more than ``max_files`` data files (or spanning
-    multiple carrier dirs — the append pattern), carrying every clean
-    list by reference in a ``lists_manifest`` commit payload.
-    Centroids and PQ codebooks copy verbatim; probes resolve the
-    manifest per-carrier (:func:`_read_lists` — centroid_id survives
-    via partition discovery, pruning becomes path selection); appends
-    extend the touched centroids' carrier lists in their marker;
-    :func:`index_vacuum` pins referenced carriers. Same CAS contract
-    as the full compaction. Returns the new base dir, or None when
-    nothing is dirty (no write, no commit)."""
-    import os
-
-    from ..commitlog import CommitConflict
-
-    store = _index_store(path)
-    while True:
-        seq0 = store.current_seq()
-        base_old = store.current_path()
-        if seq0 is None or base_old is None:
-            raise FileNotFoundError(f"no committed index at {path}")
-        payload = store.current() or {}
-        manifest = payload.get("lists_manifest")
-        if manifest is None:
-            lists_dir = os.path.join(base_old, "lists")
-            manifest = {
-                d.split("=", 1)[1]: [base_old]
-                for d in store.backend.list_data(lists_dir)
-                if d.startswith("centroid_id=")
-            }
-        dirty = []
-        for k, bases in manifest.items():
-            n_files = sum(
-                1
-                for b in bases
-                for f in store.backend.list_data_files(
-                    os.path.join(b, "lists", f"centroid_id={k}")
-                )
-                if f.endswith(".parquet")
-            )
-            if n_files > max_files or len(bases) > 1:
-                dirty.append(k)
-        if not dirty:
-            return None
-        base = store.new_version_path()
-        for aux in ("centroids", "pq_codebooks"):
-            src = os.path.join(base_old, aux)
-            if store.backend.data_exists(src):
-                spark.read.parquet(src).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(base, aux))
-        rows = _read_lists(spark, path, probed=[int(k) for k in dirty]).distinct()
-        salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(_WRITE_SALT))
-        (
-            rows.repartition(F.col("centroid_id"), salt)
-            .write.partitionBy("centroid_id")
-            .mode("overwrite")
-            .parquet(os.path.join(base, "lists"))
-        )
-        new_manifest = dict(manifest)
-        for k in dirty:
-            new_manifest[k] = [base]
-        if _after_read is not None:
-            _after_read()
-        try:
-            store.commit(
-                base,
-                extra=dict(
-                    {
-                        k: payload[k]
-                        for k in ("kind", "n_centroids", "format")
-                        if k in payload
-                    },
-                    lists_manifest=new_manifest,
-                    compacted_dirty=True,
-                ),
-                expected=seq0,
-            )
-            return base
-        except CommitConflict:
-            continue
+    """DIRTY-PARTITION IVF compaction (round-10 task #4): rewrite only
+    centroid lists holding more than ``max_files`` data files (or
+    spanning multiple carrier dirs — the append pattern), carrying
+    every clean list by reference in the commit's carrier manifest
+    (``index_store.compact``). Centroids and PQ codebooks copy
+    verbatim; probes resolve the manifest per-carrier
+    (:func:`_read_lists`); appends extend the touched centroids'
+    carrier lists in their marker; :func:`index_vacuum` pins
+    referenced carriers. Same CAS contract as the full compaction.
+    Returns the new base dir, or None when nothing is dirty (no
+    write, no commit)."""
+    return index_store.compact(
+        spark, _index_store(path), IVF, max_files, _after_read
+    )
 
 
 def ivf_pq_topk_indexed(

@@ -65,77 +65,23 @@ NUM_PERM, BANDS = 12, 4  # mirror q21 so the pair graph is identical
     """,
     headline=True,
 )
-def q34_sessionize(
-    spark: SparkSession, sf_dir: str, self_check: bool = True
-) -> DataFrame:
+def q34_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (operators.events.session_stats): 30-minute
     inactivity gap, per-user session stats. Lag + running sum +
     group-by all share one shuffle on user_id.
 
-    ``builtin_agrees`` folds the former q51 assertion into this entry
-    (round-2 verdict #3: registry must stay ≤ 50): Spark's BUILT-IN
-    ``F.session_window`` (the session operator Structured Streaming
-    uses) must produce the identical (user, session_start, n) set as a
-    manual lag+running-sum twin. The twin uses ``>=`` gap semantics on
-    exact (sub-second) timestamps because session windows are
-    half-open [start, last+gap) — q34's own output keeps the
-    reference-style strict-``>`` floor-seconds sessionization. The
-    oracle pins the flag to TRUE, so any divergence between the
-    built-in and manual paths fails the driver's value hash on every
-    row.
-
-    ``self_check=False`` (the bench variant — round-4 verdict #6)
-    skips the twin and emits ``builtin_agrees`` as a literal TRUE, so
-    the headline sessionization number measures ``session_stats``
-    alone instead of tripling the aggregation passes with its own
-    verification; the driver's correctness run keeps the default and
-    still asserts the twin on every row."""
-    from pyspark.sql.window import Window
-
+    ``builtin_agrees`` is a literal TRUE, pinned by the oracle. The
+    Spark-versus-Spark check it once carried — the built-in
+    ``F.session_window`` against a manual lag+running-sum twin — is
+    ``test_session_window_agrees_with_manual_twin`` in
+    ``tests/test_events_sampling.py``, so the query measures
+    ``session_stats`` alone."""
     ev = load_tables(spark, sf_dir, "events")["events"]
-    out = E.session_stats(
-        ev, "user_id", "ts", gap_seconds=1800, order_cols=["event_id"]
-    ).withColumn("session_seq", F.col("session_seq").cast("long"))
-    if not self_check:
-        return out.withColumn("builtin_agrees", F.lit(True))
-
-    # manual >=-semantics twin on exact timestamps. ts reads as
-    # TIMESTAMP_NTZ, which Spark refuses to cast to DOUBLE (and an
-    # NTZ->LTZ round-trip would be session-timezone/DST dependent), so
-    # the sub-second gap is micros since an NTZ epoch literal.
-    epoch_s = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    ) / 1e6
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc())
-    prev_s = F.lag(epoch_s).over(w)
-    ns = prev_s.isNull() | (epoch_s - prev_s >= 1800.0)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    twin = (
-        ev.withColumn("__sid", F.sum(ns.cast("int")).over(run))
-        .groupBy("user_id", "__sid")
-        .agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "session_start", "n")
+    return (
+        E.session_stats(ev, "user_id", "ts", gap_seconds=1800, order_cols=["event_id"])
+        .withColumn("session_seq", F.col("session_seq").cast("long"))
+        .withColumn("builtin_agrees", F.lit(True))
     )
-    builtin = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n")
-    )
-    # multiset equality via signed counts: one aggregation over the
-    # union instead of two exceptAll passes (each of those is its own
-    # aggregation over both inputs — 4 passes where 1 suffices)
-    signed = twin.withColumn("__s", F.lit(1)).unionByName(
-        builtin.withColumn("__s", F.lit(-1))
-    )
-    diff = (
-        signed.groupBy("user_id", "session_start", "n")
-        .agg(F.sum("__s").alias("__d"))
-        .where(F.col("__d") != 0)
-    )
-    agree = F.broadcast(
-        diff.agg((F.count(F.lit(1)) == 0).alias("builtin_agrees"))
-    )
-    return out.crossJoin(agree)
 
 
 @register(

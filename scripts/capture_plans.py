@@ -16,7 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
-from bench import query_kwargs  # noqa: E402
 
 queries()
 
@@ -36,9 +35,8 @@ def main() -> None:
         if only and name not in only:
             continue
         fn = REGISTRY[name].fn
-        kwargs = query_kwargs(fn)
         try:
-            df = fn(spark, sf_dir, **kwargs)
+            df = fn(spark, sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")

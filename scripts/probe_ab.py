@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
-from bench import query_kwargs, steal_ticks  # noqa: E402
+from bench import steal_ticks  # noqa: E402
 
 queries()
 
@@ -47,7 +47,6 @@ def main() -> None:
     REGISTRY["q01_pricing_summary"].fn(spark, sf_dir).collect()
 
     fn = REGISTRY[name].fn
-    kwargs = query_kwargs(fn)
     # low-steal cutoff is env-tunable (PROBE_AB_STEAL_MAX, ticks):
     # 100 suits this box's HZ/burst profile; a box where every sample
     # exceeds it would otherwise print nan for lowsteal_min
@@ -61,7 +60,7 @@ def main() -> None:
         for arm in order:
             os.environ.update(arms[arm])
             s0, t0 = steal_ticks(), time.perf_counter()
-            fn(spark, sf_dir, **kwargs).collect()
+            fn(spark, sf_dir).collect()
             dt, ds = time.perf_counter() - t0, steal_ticks() - s0
             samples[arm].append((dt, ds))
             print(f"rep {i} arm{arm} {arms[arm]}: {dt:.3f}s steal={ds}", flush=True)

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
-from bench import query_kwargs, steal_ticks  # noqa: E402
+from bench import steal_ticks  # noqa: E402
 
 queries()
 
@@ -32,11 +32,10 @@ def main() -> None:
     REGISTRY["q01_pricing_summary"].fn(spark, sf_dir).collect()  # warm
 
     fn = REGISTRY[name].fn
-    kwargs = query_kwargs(fn)
     best = None
     for i in range(n):
         s0, t0 = steal_ticks(), time.perf_counter()
-        fn(spark, sf_dir, **kwargs).collect()
+        fn(spark, sf_dir).collect()
         dt, ds = time.perf_counter() - t0, steal_ticks() - s0
         best = dt if best is None else min(best, dt)
         print(f"run {i}: {dt:.3f}s steal={ds} ticks", flush=True)

@@ -13,7 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries  # noqa: E402
 from rialto_airflow_spark.session import get_spark  # noqa: E402
-from bench import query_kwargs  # noqa: E402
 
 queries()
 
@@ -25,9 +24,8 @@ def main() -> None:
     out = {}
     for name in sorted(REGISTRY):
         fn = REGISTRY[name].fn
-        kwargs = query_kwargs(fn)
         try:
-            df = fn(spark, sf_dir, **kwargs)
+            df = fn(spark, sf_dir)
             ncols = len(df.columns)
             nrows = df.count()
             out[name] = {"rows": nrows, "cols": ncols, "cells": nrows * ncols}

@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rialto_airflow_spark.plans.queries import REGISTRY, queries
 from rialto_airflow_spark.session import get_spark
-from bench import query_kwargs
 
 queries()
 
@@ -65,18 +64,15 @@ def main() -> None:
             # full-registry warm pass at the first available scale:
             # JIT + codegen + parquet footers, untimed
             for name in headline:
-                fn = REGISTRY[name].fn
-                kw = query_kwargs(fn)
-                fn(spark, d, **kw).collect()
+                REGISTRY[name].fn(spark, d).collect()
             warmed = True
         REGISTRY[headline[0]].fn(spark, d).collect()  # warm footers
         timings: dict[str, float] = {}
         for _ in range(RUNS):
             for name in headline:
                 fn = REGISTRY[name].fn
-                kwargs = query_kwargs(fn)
                 t0 = time.perf_counter()
-                fn(spark, d, **kwargs).collect()
+                fn(spark, d).collect()
                 dt = round(time.perf_counter() - t0, 3)
                 if name not in timings or dt < timings[name]:
                     timings[name] = dt

@@ -21,3 +21,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say so when the slow lane was deselected (the default addopts),
+    so a green default run is not read as full coverage. Print only."""
+    if any(
+        item.get_closest_marker("slowlane")
+        for item in terminalreporter.stats.get("deselected", [])
+    ):
+        terminalreporter.write_line("slow lane not run: pytest tests/ -m slowlane")

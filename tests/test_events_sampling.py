@@ -37,6 +37,57 @@ def test_sessionize_gap_boundaries(spark):
     assert by_event[20].session_seq == 1
 
 
+def test_session_window_agrees_with_manual_twin(spark, sf_dir):
+    """q34's ``builtin_agrees`` pin, checked here instead of in the
+    query: on the sf0.01 events, Spark's BUILT-IN ``F.session_window``
+    (the session operator Structured Streaming uses) yields the same
+    (user, session_start, n) multiset as a manual lag+running-sum
+    twin. The twin uses ``>=`` gap semantics on exact (sub-second)
+    timestamps because session windows are half-open [start,
+    last+gap); q34's own output keeps the reference-style strict-``>``
+    floor-seconds sessionization."""
+    import os
+
+    from pyspark.sql.window import Window
+
+    from rialto_airflow_spark.session import load_tables
+
+    sf01 = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    ev = load_tables(spark, sf01, "events")["events"]
+    # ts reads as TIMESTAMP_NTZ, which Spark refuses to cast to DOUBLE
+    # (and an NTZ->LTZ round-trip would be session-timezone/DST
+    # dependent), so the sub-second gap is micros since an NTZ epoch
+    epoch_s = F.expr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+    ) / 1e6
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc())
+    prev_s = F.lag(epoch_s).over(w)
+    ns = prev_s.isNull() | (epoch_s - prev_s >= 1800.0)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    twin = (
+        ev.withColumn("__sid", F.sum(ns.cast("int")).over(run))
+        .groupBy("user_id", "__sid")
+        .agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n"))
+        .select("user_id", "session_start", "n")
+    )
+    builtin = (
+        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("user_id", F.col("w.start").alias("session_start"), "n")
+    )
+    # multiset equality via signed counts: one aggregation over the union
+    signed = twin.withColumn("__s", F.lit(1)).unionByName(
+        builtin.withColumn("__s", F.lit(-1))
+    )
+    diff = (
+        signed.groupBy("user_id", "session_start", "n")
+        .agg(F.sum("__s").alias("__d"))
+        .where(F.col("__d") != 0)
+    )
+    assert twin.count() > 0
+    assert diff.limit(5).collect() == []
+
+
 def test_session_stats_duration(spark):
     rows = [(1, _ts(0), 1), (1, _ts(10), 2), (1, _ts(50), 3)]
     df = spark.createDataFrame(rows, ["user_id", "ts", "event_id"])
@@ -1967,6 +2018,62 @@ def test_ivf_append_marker_cas_never_reverts_a_concurrent_rebuild(
     S.append_ivf_index(second, path, "vec_id", "embedding")
     n = spark.read.parquet(S.index_data_dir(path, "lists")).count()
     assert n == emb.count()
+
+
+def test_ivf_append_retries_past_a_sibling_append_marker(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A SIBLING append's marker landing between append_ivf_index's
+    pointer post-check and its marker commit wins the seq but leaves
+    the pointer where it was. The outer append must retry its marker
+    CAS instead of raising, neither batch may be lost, and the head
+    payload must keep describing the index."""
+    from rialto_airflow_spark.session import load_tables
+
+    emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
+    first = emb.where(F.col("vec_id") % 3 == 0)
+    outer = emb.where(F.col("vec_id") % 3 == 1)
+    sibling = emb.where(F.col("vec_id") % 3 == 2)
+    path = str(tmp_path / "ivf_sibling")
+    S.write_ivf_index(first, path, "vec_id", "embedding", n_centroids=4)
+
+    real_store_fn = S._index_store
+    fired = {"n": 0}
+
+    class SiblingAppendBeforeMarker:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def commit(self, *a, **kw):
+            extra = kw.get("extra") or {}
+            if extra.get("appended") and fired["n"] == 0:
+                fired["n"] += 1
+                # the sibling's marker lands after the outer append's
+                # post-check passed, before its own marker commit
+                S.append_ivf_index(sibling, path, "vec_id", "embedding")
+            return self._inner.commit(*a, **kw)
+
+    monkeypatch.setattr(
+        S, "_index_store",
+        lambda p: SiblingAppendBeforeMarker(real_store_fn(p)),
+    )
+    S.append_ivf_index(outer, path, "vec_id", "embedding")
+    assert fired["n"] == 1
+    monkeypatch.setattr(S, "_index_store", real_store_fn)
+
+    lists = S._read_lists(spark, path)
+    assert lists.count() == emb.count()
+    assert {r["neighbor_id"] for r in lists.select("neighbor_id").collect()} == {
+        r["vec_id"] for r in emb.select("vec_id").collect()
+    }
+    payload = S._index_store(path).current()
+    assert payload["appended"] is True
+    assert (payload["kind"], payload["n_centroids"], payload["format"]) == (
+        "ivf", 4, "float",
+    )
 
 
 def test_ivf_dirty_compaction_rewrites_only_appended_lists(

@@ -853,3 +853,46 @@ def test_index_vacuum_bounds_log_despite_pinned_carriers(
     # the lineage still probes correctly through its carriers
     probe = _near_batch(history, 13, 9_000_000)
     assert D.minhash_dups_against_index(probe, path).count() > 0
+
+
+def test_probe_missing_every_manifest_bucket_keeps_index_id_type(
+    spark, sf_dir, tmp_path
+):
+    """A probe whose pbuckets miss every key of a manifest head selects
+    no carrier at all. The result must be empty AND typed like the
+    non-empty case: ``index_id`` carries the INDEX corpus's id type
+    (string here), not the probe's (long) — a long-probe/string-index
+    setup would otherwise type-break only on the empty case."""
+    buckets = 1024
+    docs = _corpus(spark, sf_dir)
+    history = docs.where(F.col("doc_id") < 6).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    path = str(tmp_path / "mh")
+    D.write_minhash_index(history, path, buckets=buckets)
+    D.append_minhash_index(
+        _near_batch(docs.where(F.col("doc_id") < 6), 2, 1_000_000).select(
+            F.col("doc_id").cast("string").alias("doc_id"), "text"
+        ),
+        path,
+    )
+    assert D.compact_minhash_index_dirty(spark, path, max_files=1) is not None
+    manifest = D._minhash_store(path).current()["rows_manifest"]
+
+    # candidates: docs none of whose pbuckets the manifest holds
+    pb = D.banded_rows(docs.where(F.col("doc_id") >= 100), "doc_id", "text").select(
+        "doc_id",
+        D._pbucket(F.col("band_idx"), F.col("band_hash"), 4, buckets).alias("pb"),
+    )
+    hit = pb.where(F.col("pb").cast("string").isin(list(manifest)))
+    miss_ids = [
+        r["doc_id"]
+        for r in pb.select("doc_id").distinct().join(hit, "doc_id", "left_anti")
+        .orderBy("doc_id").limit(3).collect()
+    ]
+    assert miss_ids
+    probe = docs.where(F.col("doc_id").isin(miss_ids)).select("doc_id", "text")
+
+    got = D.minhash_dups_against_index(probe, path)
+    assert dict(got.dtypes) == {"new_id": "bigint", "index_id": "string"}
+    assert got.count() == 0
