@@ -87,8 +87,8 @@ class Dag:
 def _cut_lineage(df):
     """Bound plan growth at a chain fan-out point.
 
-    Every dedup pass / merge references its input MORE THAN ONCE
-    (scoped+anti, join+semi), so a lazily chained run's logical plan
+    The dedupe and every merge reference their input MORE THAN ONCE
+    (candidates+anti, join+semi), so a lazily chained run's logical plan
     doubles per stage — Catalyst analysis/physical planning over the
     resulting tree is exponential in chain length (measured: the tiny
     end-to-end DAG fixture spent ~6 min of pure driver CPU planning
@@ -264,14 +264,13 @@ def build_harvest_dag() -> Dag:
             ctx["pubs"], ctx["author_edges"], ctx["funder_edges"],
             return_losers=True,
         )
-        # five passes each reference their input 2-3x — cut here so
-        # distill/link/orphans/marts plan against shallow frames
-        # instead of a 2^5-fanout tree (see _cut_lineage)
+        # the three outputs plan against the already-materialized
+        # loser map; cut them anyway so distill/link/orphans/marts
+        # plan against shallow frames instead of re-planning the
+        # upstream merge chain (see _cut_lineage)
         pubs, ae, fe = _cut_lineage(pubs), _cut_lineage(ae), _cut_lineage(fe)
-        if _tracking(ctx) and losers is not None:
-            losers = _cut_lineage(losers)
         ctx["pubs"], ctx["author_edges"], ctx["funder_edges"] = pubs, ae, fe
-        if _tracking(ctx) and losers is not None:
+        if _tracking(ctx):
             # losers are the run's pub deletes; survivors gain the
             # re-pointed edges (flags + edge groups change on both)
             both = losers.select(

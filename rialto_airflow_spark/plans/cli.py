@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rialto_airflow_spark.functions.perf import local_df
+
 # cli.py:54-62 source presence order
 CLI_SOURCE_ORDER = ("sulpub", "crossref", "dim", "wos", "openalex", "pubmed")
 
@@ -67,8 +69,16 @@ def publications_for_author_from_store(
     ).select("publication_id").distinct()
     ids = [r["publication_id"] for r in pub_ids_df.collect()]
     my_pubs = store.read_keys(spark, pubs_table, ids)
+    # the collected ids feed the edge branches too, as one local
+    # slice, so the author→edge join runs once per lookup
+    pub_ids = local_df(
+        spark,
+        [(i,) for i in ids],
+        "publication_id "
+        + author_edges.schema["publication_id"].dataType.simpleString(),
+    )
     return _cli_projection(
-        my_pubs, pub_ids_df, author_edges, authors, funder_edges, funders
+        my_pubs, pub_ids, author_edges, authors, funder_edges, funders
     )
 
 
@@ -80,12 +90,15 @@ def _cli_projection(
     funder_edges: DataFrame,
     funders: DataFrame,
 ) -> DataFrame:
-    co_authors = (
-        author_edges.join(
+    def mine(edges: DataFrame) -> DataFrame:
+        return edges.join(
             F.broadcast(pub_ids.withColumnRenamed("publication_id", "__pid")),
             F.col("publication_id") == F.col("__pid"),
             "left_semi",
         )
+
+    co_authors = (
+        mine(author_edges)
         .join(
             authors.select(F.col("id").alias("__aid"), "sunet"),
             F.col("author_id") == F.col("__aid"),
@@ -94,7 +107,8 @@ def _cli_projection(
         .agg(F.concat_ws("|", F.collect_list("sunet")).alias("authors"))
     )
     pub_funders = (
-        funder_edges.join(
+        mine(funder_edges)
+        .join(
             funders.select(F.col("id").alias("__fid"), "name"),
             F.col("funder_id") == F.col("__fid"),
         )

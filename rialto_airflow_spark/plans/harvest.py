@@ -3,19 +3,24 @@ dedup with edge re-pointing, orphan removal, funder linking, and the
 author-derived flags (SURVEY.md §2.10, §2.4 A2/A3/A9, §2.3 J4/J5/J9).
 
 The reference walks duplicate groups row-by-row in Python
-(harvest_incremental/deduplicate.py, funders/linker.py); here each
-pass is one window/join plan. Sequential pass order (openalex → dim →
-sulpub → wos_id → pubmed_id — deduplicate.py:14-35) is preserved
-because each merge changes the survivor set for the next key.
+(harvest_incremental/deduplicate.py, funders/linker.py); here the
+five dedup passes are one window chain over a narrow key frame.
+Sequential pass order (openalex → dim → sulpub → wos_id → pubmed_id —
+deduplicate.py:14-35) is preserved because each merge changes the
+survivor set for the next key.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rialto_airflow_spark.functions.normalize import normalize_funder_name
+from rialto_airflow_spark.functions.perf import materialize_cut
 from rialto_airflow_spark.operators.merge import merge_on_key
 
 # the five platform-identity keys, in reference pass order
@@ -59,67 +64,6 @@ def upsert_source_batch(
     )
 
 
-def dedup_pass(
-    pubs: DataFrame,
-    author_edges: DataFrame,
-    funder_edges: DataFrame,
-    key_expr: str,
-    id_col: str = "id",
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """One platform-key dedup pass (A2 detect + A3 merge).
-
-    Scope: rows with null DOI and a non-null key (deduplicate.py:
-    43-46). Survivor = newest updated_at (merge_pubs sort,
-    deduplicate.py:195-198; ties broken by id for determinism);
-    edges of losers re-point to the survivor with ON CONFLICT DO
-    NOTHING semantics (dropDuplicates); losers are deleted.
-
-    One shuffle on the key for the window + one broadcast-able join
-    per edge table (the old->survivor map is tiny relative to edges).
-
-    Returns (pubs, author_edges, funder_edges, losers) — ``losers``
-    is the (loser_id, survivor_id) map of this pass, the run's delete
-    set plus the survivors whose edge groups it re-pointed (the
-    O(changes) persistence threads both into its changed-key set).
-    """
-    key = F.expr(key_expr)
-    scoped = pubs.where(F.col("doi").isNull() & key.isNotNull()).select(
-        F.col(id_col), key.alias("__key"), F.col("updated_at")
-    )
-    w = Window.partitionBy("__key").orderBy(
-        F.col("updated_at").desc(), F.col(id_col).asc()
-    )
-    ranked = scoped.select(
-        F.col(id_col),
-        F.col("__key"),
-        F.row_number().over(w).alias("__rn"),
-        F.first(F.col(id_col)).over(w).alias("__survivor"),
-    )
-    losers = ranked.where(F.col("__rn") > 1).select(
-        F.col(id_col).alias("__old"), F.col("__survivor")
-    )
-
-    def repoint(edges: DataFrame) -> DataFrame:
-        e = edges.join(
-            F.broadcast(losers), edges["publication_id"] == F.col("__old"), "left"
-        )
-        return e.select(
-            F.coalesce(F.col("__survivor"), F.col("publication_id")).alias(
-                "publication_id"
-            ),
-            *[c for c in edges.columns if c != "publication_id"],
-        ).dropDuplicates(edges.columns)
-
-    pubs_out = pubs.join(
-        F.broadcast(losers), pubs[id_col] == losers["__old"], "left_anti"
-    )
-    loser_map = losers.select(
-        F.col("__old").alias("loser_id"),
-        F.col("__survivor").alias("survivor_id"),
-    )
-    return pubs_out, repoint(author_edges), repoint(funder_edges), loser_map
-
-
 def remove_duplicates(
     pubs: DataFrame,
     author_edges: DataFrame,
@@ -127,19 +71,90 @@ def remove_duplicates(
     return_losers: bool = False,
 ):
     """A2/A3 — all five platform-key passes in reference order.
-    ``return_losers=True`` appends the union of every pass's
-    (loser_id, survivor_id) map as a fourth element."""
-    all_losers: DataFrame | None = None
-    for _, key_expr in PLATFORM_KEYS:
-        pubs, author_edges, funder_edges, losers = dedup_pass(
-            pubs, author_edges, funder_edges, key_expr
+
+    Scope: rows with null DOI and a non-null key (deduplicate.py:
+    43-46). Survivor = newest updated_at, NULLs last (merge_pubs sort,
+    deduplicate.py:195-198; ties broken by id for determinism); edges
+    of losers re-point to the survivor with ON CONFLICT DO NOTHING
+    semantics (dropDuplicates); losers are deleted. A pass-k survivor
+    can lose in a later pass, and the edges it gathered follow it.
+
+    The passes run once, on a narrow frame of the candidates (id,
+    updated_at, one column per key). Each row carries ``__root``, the
+    id it currently merges into (itself while alive). Per pass, one
+    window ranks the alive rows of each key; a second, partitioned on
+    ``__root``, hands every row rooted at a new loser that loser's
+    survivor. The resulting loser → (pass survivor, final survivor)
+    map is materialized once, and the three outputs plan against it:
+    pubs is one anti-join, each edge table one re-point plus one
+    dropDuplicates.
+
+    ``return_losers=True`` appends the (loser_id, survivor_id) map —
+    each loser with its own pass's survivor: the run's delete set plus
+    the survivors whose edge groups it re-pointed (the O(changes)
+    persistence threads both into its changed-key set)."""
+    keys = [f"__k{i}" for i in range(len(PLATFORM_KEYS))]
+    cand = pubs.where(F.col("doi").isNull()).select(
+        "id",
+        "updated_at",
+        *[F.expr(e).alias(k) for k, (_, e) in zip(keys, PLATFORM_KEYS)],
+    )
+    any_key = reduce(operator.or_, [F.col(k).isNotNull() for k in keys])
+    state = cand.where(any_key).select(
+        "*",
+        F.col("id").alias("__root"),
+        F.lit(None).cast(cand.schema["id"].dataType).alias("__survivor"),
+    )
+    order = (F.col("updated_at").desc(), F.col("id").asc())
+    for i, k in enumerate(keys):
+        # dead rows and NULL keys are never ranked: each sits alone in
+        # a partition keyed by its own id, so neither piles into one
+        ranked = (F.col("__root") == F.col("id")) & F.col(k).isNotNull()
+        part = F.struct(
+            F.when(ranked, F.col(k)), F.when(~ranked, F.col("id"))
         )
-        all_losers = (
-            losers if all_losers is None else all_losers.unionByName(losers)
+        top = F.first("id").over(Window.partitionBy(part).orderBy(*order))
+        state = state.withColumn("__top", top).withColumn(
+            "__survivor",
+            F.coalesce(
+                "__survivor", F.when(F.col("__top") != F.col("id"), F.col("__top"))
+            ),
         )
+        # every row moves to where its root went; before the first
+        # pass each row is its own root, so that needs no window
+        root_to = F.when(F.col("id") == F.col("__root"), F.col("__top"))
+        state = state.withColumn(
+            "__root",
+            F.col("__top")
+            if i == 0
+            else F.max(root_to).over(Window.partitionBy("__root")),
+        ).drop(k, "__top")
+    losers = materialize_cut(
+        state.where(F.col("__root") != F.col("id")).select(
+            F.col("id").alias("loser_id"),
+            F.col("__survivor").alias("survivor_id"),
+            F.col("__root").alias("final_id"),
+        )
+    )
+
+    def repoint(edges: DataFrame) -> DataFrame:
+        e = edges.join(
+            F.broadcast(losers), edges["publication_id"] == F.col("loser_id"), "left"
+        )
+        return e.select(
+            F.coalesce(F.col("final_id"), F.col("publication_id")).alias(
+                "publication_id"
+            ),
+            *[c for c in edges.columns if c != "publication_id"],
+        ).dropDuplicates(edges.columns)
+
+    pubs_out = pubs.join(
+        F.broadcast(losers), pubs["id"] == losers["loser_id"], "left_anti"
+    )
+    out = (pubs_out, repoint(author_edges), repoint(funder_edges))
     if return_losers:
-        return pubs, author_edges, funder_edges, all_losers
-    return pubs, author_edges, funder_edges
+        return (*out, losers.select("loser_id", "survivor_id"))
+    return out
 
 
 def remove_orphans(
