@@ -646,6 +646,7 @@ def build_publish_dag() -> Dag:
     """publish_to_reports task graph (publish_to_reports.py:17-61):
     check_harvest_complete (short-circuit) → the four marts →
     download files."""
+    from rialto_airflow_spark.operators.merge import apply_mart_parts
     from rialto_airflow_spark.plans import marts as M
     from rialto_airflow_spark.plans import watermark as W
 
@@ -692,42 +693,32 @@ def build_publish_dag() -> Dag:
         ctx['incremental'] = {'prev_pubs': <the pubs version the
         retained mart was built from>, 'prev_mart_by_author': <that
         mart>} switches to the change-feed consumer
-        (marts.incremental_mart_publications_by_author) — delete+
-        insert only rows whose source pubs changed, equality with the
-        full rebuild pinned by test. The caller typically reads both
-        frames from its stores' retained versions (TableStore time
-        travel / read_snapshot); 'compare_cols' in the same dict
-        narrows the version diff (["updated_at"] is the production
-        shape — M2 stamps it on every touch)."""
+        (marts.incremental_mart_publications_by_author_parts) —
+        delete+insert only rows whose source pubs changed, equality
+        with the full rebuild pinned by test. The caller typically
+        reads both frames from its stores' retained versions
+        (TableStore time travel / read_snapshot); 'compare_cols' in
+        the same dict narrows the version diff (["updated_at"] is the
+        production shape — M2 stamps it on every touch)."""
         if ctx["publish_ok"]:
             inc = ctx.get("incremental") or {}
             if "prev_pubs" in inc and "prev_mart_by_author" in inc:
-                ctx["mart_by_author"] = (
-                    M.incremental_mart_publications_by_author(
-                        inc["prev_pubs"],
-                        ctx["pubs"],
-                        inc["prev_mart_by_author"],
-                        ctx["author_edges"],
-                        ctx["authors"],
-                        ctx["funder_edges"],
-                        ctx["funders"],
-                        compare_cols=inc.get("compare_cols"),
-                    )
+                # ONE change-set plan: the (affected dois, fragment)
+                # parts feed both the mart DataFrame and, when the
+                # reports store's mart is a manifest table,
+                # publish_to_store's O(changes) keyed REPLACE
+                parts = M.incremental_mart_publications_by_author_parts(
+                    inc["prev_pubs"],
+                    ctx["pubs"],
+                    ctx["author_edges"],
+                    ctx["authors"],
+                    ctx["funder_edges"],
+                    ctx["funders"],
+                    compare_cols=inc.get("compare_cols"),
                 )
-                # the O(changes)-WRITE parts for publish_to_store:
-                # when the reports store's mart is a manifest table,
-                # the publish applies (affected dois, fragment) as a
-                # keyed REPLACE instead of re-materializing the mart
-                ctx["mart_by_author_parts"] = (
-                    M.incremental_mart_publications_by_author_parts(
-                        inc["prev_pubs"],
-                        ctx["pubs"],
-                        ctx["author_edges"],
-                        ctx["authors"],
-                        ctx["funder_edges"],
-                        ctx["funders"],
-                        compare_cols=inc.get("compare_cols"),
-                    )
+                ctx["mart_by_author_parts"] = parts
+                ctx["mart_by_author"] = apply_mart_parts(
+                    inc["prev_mart_by_author"], *parts, "doi"
                 )
             else:
                 ctx["mart_by_author"] = _cut_lineage(

@@ -273,207 +273,96 @@ def snapshot_diff(
     )
 
 
-def incremental_join_mart_parts(
+def changed_rows(
     old_tbl: DataFrame,
     new_tbl: DataFrame,
     key: str,
-    fan_key: str,
-    build,
     compare_cols: Sequence[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The (affected fan-keys, rebuilt fragment) pair behind
-    :func:`incremental_join_mart`, for writers that can apply a keyed
-    REPLACE directly (``TableStore.replace_keys_manifest``) instead of
-    materializing ``kept ∪ fragment`` — the difference between an
-    O(changes) mart WRITE and an O(mart) one. ``affected`` keeps the
-    ``fan_key`` column name."""
+    """The rows of every key that differs between two table snapshots,
+    from each side: ``(old_changed, new_changed)``, the change-set
+    input of :func:`mart_parts` for callers with no in-hand delta (the
+    batch/DAG consumers of two retained versions). One
+    :func:`snapshot_diff` on the key — narrow it with ``compare_cols``
+    (e.g. an ``updated_at`` stamp) to make the diff a thin key/stamp
+    join — then one semi-join per side."""
     changed = snapshot_diff(
         old_tbl, new_tbl, key, compare_cols=compare_cols
     ).select(key).distinct()
-    affected = (
-        old_tbl.join(changed, key, "left_semi")
-        .select(fan_key)
-        .unionByName(new_tbl.join(changed, key, "left_semi").select(fan_key))
-        .distinct()
+    return (
+        old_tbl.join(changed, key, "left_semi"),
+        new_tbl.join(changed, key, "left_semi"),
     )
-    fragment_rows = new_tbl.join(
-        F.broadcast(affected.withColumnRenamed(fan_key, "__chg_fan")),
-        new_tbl[fan_key].eqNullSafe(F.col("__chg_fan")),
-        "left_semi",
-    )
-    return affected, build(fragment_rows)
 
 
-def incremental_join_mart(
-    old_tbl: DataFrame,
-    new_tbl: DataFrame,
-    old_mart: DataFrame,
-    key: str,
+def _in_groups(
+    rows: DataFrame, groups: DataFrame, fan_key: str, how: str = "left_semi"
+) -> DataFrame:
+    """``rows`` whose ``fan_key`` is (``left_semi``) / is not
+    (``left_anti``) in the O(changes) ``groups`` set — broadcast, and
+    null-safe so a NULL group is one group, matching groupBy."""
+    return rows.join(
+        F.broadcast(groups.withColumnRenamed(fan_key, "__chg_fan")),
+        rows[fan_key].eqNullSafe(F.col("__chg_fan")),
+        how,
+    )
+
+
+def mart_parts(
+    old_changed: DataFrame,
+    new_changed: DataFrame,
+    group_rows,
     fan_key: str,
     build,
-    compare_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Incrementally maintain a JOIN-SHAPED mart over a versioned
-    table: ``build`` is the mart definition (any function from a
-    slice of the table to mart rows — typically a fan-out join into
-    dimension tables), and only the mart rows whose ``fan_key`` group
-    was touched between two snapshots are rebuilt; everything else is
-    carried. The generalization of
-    ``plans.marts.incremental_mart_publications_by_author`` (which is
-    exactly this with ``fan_key='doi'`` and ``build`` = the
-    pubs×edges×authors fan-out) — and the join-shaped twin of
-    :func:`incremental_group_agg`, so the streaming sink can maintain
-    BOTH downstream shapes a change feed serves.
+) -> tuple[DataFrame, DataFrame]:
+    """Incremental mart refresh from a change set: the (affected
+    groups, rebuilt fragment) pair. ``build`` is the mart definition
+    — any function from a slice of the table to mart rows: a fan-out
+    join into dimensions (the publications-by-author shape) or a group
+    aggregate (``lambda r: r.groupBy(g).agg(*aggs)``). Land the pair
+    with :func:`apply_mart_parts`, or as a keyed REPLACE on a manifest
+    mart (``TableStore.replace_keys_manifest`` — an O(changes) WRITE
+    instead of re-materializing the carried rows).
+
+    ``old_changed`` / ``new_changed`` are the changed keys' rows from
+    the version the mart was built from and from head (only their
+    ``fan_key`` column is read): every group either side names is
+    affected, so a row migrating between groups refreshes both, and a
+    deleted key — present only in the old rows — re-points its group.
+    Batch callers derive them with :func:`changed_rows`; the
+    streaming sink already holds the change set (the micro-batch) and
+    reads them bucket-pruned, never diffing two full versions. A
+    SUPERSET of the truly-changed keys is safe: a group rebuilt
+    without having changed reproduces its mart rows exactly.
+
+    ``group_rows`` holds (a superset of) the affected groups' head
+    rows — the whole table, or a callable from the affected set to
+    such rows (for sources that prune by it); it is narrowed to the
+    affected groups before ``build`` runs.
 
     Correctness requires ``build`` to be PER-GROUP: a mart row must
     depend only on table rows sharing its ``fan_key`` (and on
     dimension state treated as fixed — dim changes need a full
-    rebuild, the same caveat the publications mart documents). Under
-    that contract, rebuilding the affected groups from the new table
-    and carrying the rest equals a full rebuild — holistic aggregates
-    inside ``build`` included, since affected groups are recomputed
-    from scratch.
-
-    Shape: one thin :func:`snapshot_diff` (narrow it with
-    ``compare_cols``), the affected fan-key set is O(changes) and
-    broadcasts into both the fragment semi-join and the mart
-    anti-join; ``build`` runs over only the affected groups' rows.
-    Null-safe group matching keeps a NULL fan-key group whole."""
-    affected, fragment = incremental_join_mart_parts(
-        old_tbl, new_tbl, key, fan_key, build, compare_cols=compare_cols
+    rebuild). Under that contract the affected groups rebuilt from
+    head plus the carried rest equal a full rebuild — holistic
+    aggregates included, since affected groups are recomputed from
+    scratch, not patched."""
+    affected = (
+        old_changed.select(fan_key)
+        .unionByName(new_changed.select(fan_key))
+        .distinct()
     )
-    kept = old_mart.join(
-        F.broadcast(affected.withColumnRenamed(fan_key, "__chg_fan")),
-        old_mart[fan_key].eqNullSafe(F.col("__chg_fan")),
-        "left_anti",
-    )
-    return kept.unionByName(fragment)
+    if callable(group_rows):
+        group_rows = group_rows(affected)
+    return affected, build(_in_groups(group_rows, affected, fan_key))
 
 
-def incremental_group_agg(
-    old_tbl: DataFrame,
-    new_tbl: DataFrame,
-    old_mart: DataFrame,
-    key: str,
-    group_col: str,
-    agg_exprs: Sequence[Column],
-    compare_cols: Sequence[str] | None = None,
+def apply_mart_parts(
+    old_mart: DataFrame, affected: DataFrame, fragment: DataFrame, fan_key: str
 ) -> DataFrame:
-    """Incrementally maintain ``groupBy(group_col).agg(*agg_exprs)``
-    over a versioned table: recompute ONLY the groups whose membership
-    changed between two snapshots, keep every other mart row as-is.
-    The aggregate-mart analog of
-    ``plans.marts.incremental_mart_publications_by_author`` — together
-    they cover the two downstream shapes a change feed serves (joins
-    re-fanned per key, aggregates re-folded per group).
-
-    Shape: one :func:`snapshot_diff` on the key (thin when
-    ``compare_cols`` narrows it — e.g. an updated_at stamp), the
-    affected-group set is O(changes) and broadcasts, the re-aggregation
-    scans only rows of affected groups (semi-join before the groupBy,
-    so partial aggregation happens over the pruned slice), and the
-    untouched mart rows pass through an anti-join untouched. At
-    streaming cadence (one micro-batch of changes against a huge
-    table) this replaces a full-table groupBy per batch with
-    result-set-sized work.
-
-    Correct for any DISTRIBUTIVE/ALGEBRAIC aggregate expressed in
-    ``agg_exprs`` because affected groups are recomputed from the NEW
-    table from scratch (not patched) — holistic aggregates (median,
-    exact distinct) are fine too, at the cost of rescanning just the
-    affected groups' rows. Group membership via null-safe equality, so
-    a NULL group is one group, matching groupBy semantics."""
-    affected, fragment = incremental_group_agg_parts(
-        old_tbl, new_tbl, key, group_col, agg_exprs, compare_cols=compare_cols
+    """The refreshed mart as a DataFrame: ``old_mart`` minus every
+    affected group (null-safe anti-join against the broadcast
+    O(changes) set) ∪ the rebuilt ``fragment`` of :func:`mart_parts`."""
+    return _in_groups(old_mart, affected, fan_key, "left_anti").unionByName(
+        fragment
     )
-    kept = old_mart.join(
-        F.broadcast(affected.withColumnRenamed(group_col, "__chg_grp")),
-        old_mart[group_col].eqNullSafe(F.col("__chg_grp")),
-        "left_anti",
-    )
-    return kept.unionByName(fragment)
-
-
-def incremental_mart_parts_from_changes(
-    old_changed_rows: DataFrame,
-    new_changed_rows: DataFrame,
-    new_tbl: DataFrame,
-    fan_key: str,
-    build=None,
-    agg_exprs: Sequence[Column] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The (affected groups, rebuilt fragment) pair when the caller
-    ALREADY KNOWS which keys changed — the streaming sink's case: the
-    micro-batch in hand IS the change set, so deriving it again via
-    :func:`snapshot_diff` (a full-outer join of two complete table
-    versions per 10-second trigger) pays an O(table) read to discover
-    an O(batch) fact. Here the caller passes the changed keys' ROWS
-    from each version instead — on a manifest table those come from a
-    bucket-pruned read (``TableStore.read_buckets``: O(dirty buckets)
-    bytes, zero full-version scan), and the only remaining table-sized
-    input is ``new_tbl``, used once for the affected groups' re-fold
-    (a broadcast semi-join — scanned, never shuffled).
-
-    A SUPERSET of the truly-changed keys is safe: a group re-folded
-    from the new table without having changed reproduces its mart rows
-    exactly (the per-group ``build`` contract). The streaming sink
-    passes the batch's keys — no-op rows cost a redundant re-fold
-    bounded by the batch, never a wrong answer. Deletes just need
-    their keys in the changed set (the sink's ``delete_col`` path
-    does this — tombstoned keys ride in the batch): the OLD version
-    still has their rows, which is what re-points their groups, and
-    the new version simply has none.
-
-    Exactly one of ``build`` (join-shaped mart: fragment =
-    ``build(rows of affected groups)``) / ``agg_exprs`` (group
-    aggregate: fragment = ``groupBy(fan_key).agg(*agg_exprs)`` over
-    those rows) must be given — same contracts as
-    :func:`incremental_join_mart` / :func:`incremental_group_agg`."""
-    if (build is None) == (agg_exprs is None):
-        raise ValueError("pass exactly one of build= / agg_exprs=")
-    affected = (
-        old_changed_rows.select(fan_key)
-        .unionByName(new_changed_rows.select(fan_key))
-        .distinct()
-    )
-    fragment_rows = new_tbl.join(
-        F.broadcast(affected.withColumnRenamed(fan_key, "__chg_fan")),
-        new_tbl[fan_key].eqNullSafe(F.col("__chg_fan")),
-        "left_semi",
-    )
-    if build is not None:
-        return affected, build(fragment_rows)
-    return affected, fragment_rows.groupBy(fan_key).agg(*agg_exprs)
-
-
-def incremental_group_agg_parts(
-    old_tbl: DataFrame,
-    new_tbl: DataFrame,
-    key: str,
-    group_col: str,
-    agg_exprs: Sequence[Column],
-    compare_cols: Sequence[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The (affected groups, re-folded fragment) pair behind
-    :func:`incremental_group_agg` — see
-    :func:`incremental_join_mart_parts` for why writers want the
-    parts (keyed REPLACE instead of materializing the carried mart)."""
-    changed = snapshot_diff(
-        old_tbl, new_tbl, key, compare_cols=compare_cols
-    ).select(key).distinct()
-    affected = (
-        old_tbl.join(changed, key, "left_semi")
-        .select(group_col)
-        .unionByName(new_tbl.join(changed, key, "left_semi").select(group_col))
-        .distinct()
-    )
-    fragment = (
-        new_tbl.join(
-            F.broadcast(affected.withColumnRenamed(group_col, "__chg_grp")),
-            new_tbl[group_col].eqNullSafe(F.col("__chg_grp")),
-            "left_semi",
-        )
-        .groupBy(group_col)
-        .agg(*agg_exprs)
-    )
-    return affected, fragment

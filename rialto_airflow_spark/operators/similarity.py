@@ -528,10 +528,6 @@ def _pick_centroids(corpus: DataFrame, id_col: str, vec_col: str, n_centroids: i
     consumer's plan). Returns (cids, cmat, cnorms) numpy arrays in
     ascending cid order so stable argsorts tie-break on cid, exactly
     as the SQL oracles do."""
-    import math
-
-    import numpy as np
-
     cent_rows = (
         corpus.orderBy(F.col(id_col).asc())
         .limit(n_centroids)
@@ -610,6 +606,64 @@ def _centroid_assign(
     )
 
 
+def _ivf_list_rows(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids,
+    quantize: bool,
+    pq_codebooks,
+) -> DataFrame:
+    """Inverted-list rows of ``corpus`` under fixed ``centroids`` in an
+    IVF index's storage format — float vectors, int8 codes + scale
+    (``vec_norm`` from the DEQUANTIZED vector), or PQ codes + true
+    norm — shared by the build and the append so both always encode
+    alike."""
+    cids, cmat, cnorms = centroids
+    rows = _centroid_assign(
+        corpus, id_col, vec_col, "neighbor_id", 1, cids, cmat, cnorms
+    ).select(
+        "neighbor_id",
+        F.col("__v").alias("vec"),
+        F.col("__vn").alias("vec_norm"),
+        "centroid_id",
+    )
+    if quantize:
+        return quantize_embeddings(rows, "vec").select(
+            "neighbor_id",
+            "qvec",
+            "qscale",
+            norm(dequant()).alias("vec_norm"),
+            "centroid_id",
+        )
+    if pq_codebooks is not None:
+        return pq_encode(
+            rows, "neighbor_id", "vec", pq_codebooks,
+            keep_cols=("centroid_id",),
+        ).select(
+            F.col("pq_id").alias("neighbor_id"),
+            "pq_codes",
+            "vec_norm",
+            "centroid_id",
+        )
+    return rows
+
+
+def _load_pq_codebooks(spark, path: str):
+    """The persisted (m, ksub, dsub) PQ codebook tensor of an IVF-PQ
+    index (``{path}/pq_codebooks`` — m·ksub rows, driver-small)."""
+    import numpy as np
+
+    rows = spark.read.parquet(index_data_dir(path, "pq_codebooks")).collect()
+    books = np.zeros(
+        (max(r.j for r in rows) + 1, max(r.c for r in rows) + 1, len(rows[0].ctr)),
+        dtype=np.float64,
+    )
+    for r in rows:
+        books[r.j, r.c] = r.ctr
+    return books
+
+
 def write_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -656,23 +710,7 @@ def write_ivf_index(
         [(int(c), [float(x) for x in row]) for c, row in zip(cids, cmat)],
         "cid long, ctr array<double>",
     ).write.mode("overwrite").parquet(f"{base}/centroids")
-    assigned = _centroid_assign(
-        corpus, id_col, vec_col, "neighbor_id", 1, cids, cmat, cnorms
-    ).select(
-        "neighbor_id",
-        F.col("__v").alias("vec"),
-        F.col("__vn").alias("vec_norm"),
-        "centroid_id",
-    )
-    if quantize:
-        assigned = quantize_embeddings(assigned, "vec").select(
-            "neighbor_id",
-            "qvec",
-            "qscale",
-            norm(dequant()).alias("vec_norm"),
-            "centroid_id",
-        )
-    elif pq_codebooks is not None:
+    if pq_codebooks is not None:
         m, ksub, _ = pq_codebooks.shape
         spark.createDataFrame(
             [
@@ -682,15 +720,9 @@ def write_ivf_index(
             ],
             "j int, c int, ctr array<double>",
         ).write.mode("overwrite").parquet(f"{base}/pq_codebooks")
-        assigned = pq_encode(
-            assigned, "neighbor_id", "vec", pq_codebooks,
-            keep_cols=("centroid_id",),
-        ).select(
-            F.col("pq_id").alias("neighbor_id"),
-            "pq_codes",
-            "vec_norm",
-            "centroid_id",
-        )
+    assigned = _ivf_list_rows(
+        corpus, id_col, vec_col, (cids, cmat, cnorms), quantize, pq_codebooks
+    )
     index_store.salted_write(
         assigned, f"{base}/{IVF.data}", IVF.part, IVF.id_col, "overwrite"
     )
@@ -728,10 +760,6 @@ def ivf_topk_indexed(
     round-trip through Python), and scores are exact cosines of the
     reconstructed vectors, so ranking error is bounded by the
     quantizer's ≤ scale/2 elementwise reconstruction error."""
-    import math
-
-    import numpy as np
-
     cids, cmat, cnorms = _load_centroids(spark, index_path)
 
     q = F.broadcast(
@@ -821,50 +849,15 @@ def append_ivf_index(
     correctness-harmless: probes dedup (query, neighbor) pairs before
     ranking, and :func:`compact_ivf_index` removes the redundant rows
     themselves."""
-    import math
-
-    import numpy as np
-
     spark = corpus.sparkSession
     store = _index_store(path)
     lists_dir = index_data_dir(path, IVF.data)
-    cids, cmat, cnorms = _load_centroids(spark, path)
-
-    assigned = _centroid_assign(
-        corpus, id_col, vec_col, "neighbor_id", 1, cids, cmat, cnorms
-    ).select(
-        "neighbor_id",
-        F.col("__v").alias("vec"),
-        F.col("__vn").alias("vec_norm"),
-        "centroid_id",
-    )
     existing = spark.read.parquet(lists_dir).columns
-    if "qvec" in existing:
-        assigned = quantize_embeddings(assigned, "vec").select(
-            "neighbor_id",
-            "qvec",
-            "qscale",
-            norm(dequant()).alias("vec_norm"),
-            "centroid_id",
-        )
-    elif "pq_codes" in existing:
-        books_rows = spark.read.parquet(
-            index_data_dir(path, "pq_codebooks")
-        ).collect()
-        m = max(r.j for r in books_rows) + 1
-        ksub = max(r.c for r in books_rows) + 1
-        dsub = len(books_rows[0].ctr)
-        books = np.zeros((m, ksub, dsub), dtype=np.float64)
-        for r in books_rows:
-            books[r.j, r.c] = np.asarray(r.ctr, dtype=np.float64)
-        assigned = pq_encode(
-            assigned, "neighbor_id", "vec", books, keep_cols=("centroid_id",)
-        ).select(
-            F.col("pq_id").alias("neighbor_id"),
-            "pq_codes",
-            "vec_norm",
-            "centroid_id",
-        )
+    assigned = _ivf_list_rows(
+        corpus, id_col, vec_col, _load_centroids(spark, path),
+        "qvec" in existing,
+        _load_pq_codebooks(spark, path) if "pq_codes" in existing else None,
+    )
     index_store.append(
         store, IVF, assigned, lists_dir, lambda: index_data_dir(path, IVF.data)
     )
@@ -929,18 +922,7 @@ def ivf_pq_topk_indexed(
     FAISS-style read path: at 100 TB a probe touches
     nprobe/n_centroids of files that are themselves 64× smaller than
     float lists."""
-    import math
-
-    import numpy as np
-
-    books_rows = spark.read.parquet(index_data_dir(index_path, "pq_codebooks")).collect()
-    m = max(r.j for r in books_rows) + 1
-    ksub = max(r.c for r in books_rows) + 1
-    dsub = len(books_rows[0].ctr)
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in books_rows:
-        books[r.j, r.c] = np.asarray(r.ctr, dtype=np.float64)
-
+    books = _load_pq_codebooks(spark, index_path)
     cids, cmat, cnorms = _load_centroids(spark, index_path)
 
     qa = _centroid_assign(

@@ -196,22 +196,27 @@ def mart_publications_by_author(
     )
 
 
-def incremental_mart_publications_by_author(
+def incremental_mart_publications_by_author_parts(
     old_pubs: DataFrame,
     new_pubs: DataFrame,
-    old_mart: DataFrame,
     author_edges: DataFrame,
     authors: DataFrame,
     funder_edges: DataFrame,
     funders: DataFrame,
     key: str = "id",
     compare_cols: list[str] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Incremental rebuild of ``publications_by_author`` from the
     publication CHANGE FEED — the consumer side of
-    ``TableStore.changes()``: delete-then-insert only the mart rows
-    whose source pubs changed between two retained versions, instead
-    of recomputing the full pubs×edges×authors fan-out every run.
+    ``TableStore.changes()``: the (affected DOIs, rebuilt fragment)
+    pair for only the mart rows whose source pubs changed between two
+    retained versions, instead of recomputing the full
+    pubs×edges×authors fan-out every run. Land it with
+    ``operators.merge.apply_mart_parts(old_mart, affected, fragment,
+    "doi")`` (old mart minus affected DOIs ∪ fragment), or as an
+    O(changes) keyed REPLACE on a MANIFEST mart
+    (``TableStore.replace_keys_manifest`` — only dirty doi-buckets
+    land on disk).
 
     ``compare_cols`` narrows the diff's change test: the default
     (every shared column) is always correct, but in this engine a pub
@@ -227,74 +232,32 @@ def incremental_mart_publications_by_author(
     re-streams all rows); at its row counts that is fine, at 100 TB
     the full fan-out join is the single most expensive plan in the
     publish DAG while a weekly delta touches a sliver of it. Shape:
+    one thin ``snapshot_diff`` of the two versions; affected DOIs =
+    old∪new dois of the changed pub ids (O(changes), broadcast); the
+    author fan-out runs over ONLY the affected DOIs' pubs.
 
-      1. ``snapshot_diff(old_pubs, new_pubs)`` — ONE thin key-join
-         of the two retained versions (insert/update/delete rows);
-      2. affected DOIs = old∪new dois of the changed pub ids —
-         O(changes), broadcastable;
-      3. the expensive author fan-out runs over ONLY the changed
-         pubs (O(changes) rows through the join);
-      4. ``old_mart`` anti-joins the affected-DOI set (null-safe:
-         null-DOI mart rows are removable too) and the fresh
-         fragment unions in.
-
-    Equality contract (pinned by test): the result row-set equals a
+    Equality contract (pinned by test): the applied result equals a
     full ``mart_publications_by_author(new_pubs, ...)`` rebuild,
     PROVIDED edges/authors/funder dims are the same ones a full
     rebuild would use — dim-side changes are not in this feed;
     callers that mutate edges/authors must fall back to a full
     rebuild (the DAG's flags-refresh divergence note explains why
     edge deltas are the cheaper-whole-table case anyway)."""
-    # the generic engine op: fan_key='doi' — rebuild every pub group
-    # SHARING an affected doi, not just the changed ids (the mart is
-    # keyed (doi, sunet), so an unchanged pub contributing rows under
-    # an affected doi must re-enter the fragment or its rows would
-    # vanish with the anti-join; null-safe matching keeps the
-    # null-DOI group whole for the same reason)
-    from rialto_airflow_spark.operators.merge import incremental_join_mart
+    # fan_key='doi' — rebuild every pub group SHARING an affected doi,
+    # not just the changed ids (the mart is keyed (doi, sunet), so an
+    # unchanged pub contributing rows under an affected doi must
+    # re-enter the fragment or its rows would vanish with the
+    # anti-join; null-safe matching keeps the null-DOI group whole for
+    # the same reason)
+    from rialto_airflow_spark.operators.merge import changed_rows, mart_parts
 
-    return incremental_join_mart(
-        old_pubs,
+    return mart_parts(
+        *changed_rows(old_pubs, new_pubs, key, compare_cols=compare_cols),
         new_pubs,
-        old_mart,
-        key,
         "doi",
         lambda pubs: mart_publications_by_author(
             pubs, author_edges, authors, funder_edges, funders
         ),
-        compare_cols=compare_cols,
-    )
-
-
-def incremental_mart_publications_by_author_parts(
-    old_pubs: DataFrame,
-    new_pubs: DataFrame,
-    author_edges: DataFrame,
-    authors: DataFrame,
-    funder_edges: DataFrame,
-    funders: DataFrame,
-    key: str = "id",
-    compare_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The (affected DOIs, rebuilt fragment) pair behind
-    :func:`incremental_mart_publications_by_author`, for publishing
-    the mart as an O(changes) keyed REPLACE on a MANIFEST table
-    (``TableStore.replace_keys_manifest`` — only dirty doi-buckets
-    land on disk) instead of re-materializing the carried rows. Same
-    correctness contract as the full-DataFrame variant."""
-    from rialto_airflow_spark.operators.merge import (
-        incremental_join_mart_parts,
-    )
-
-    return incremental_join_mart_parts(
-        old_pubs,
-        new_pubs,
-        key,
-        "doi",
-        lambda pubs: mart_publications_by_author(
-            pubs, author_edges, authors, funder_edges, funders
-        ),
-        compare_cols=compare_cols,
     )
 
 

@@ -1729,9 +1729,9 @@ class TableStore:
         bucket key is in ``affected_keys`` (null-safe — a null group
         is replaceable too), insert ``fragment``, rewriting ONLY the
         buckets either side touches. This is the incremental-MART
-        write shape (`plans.marts.incremental_mart_publications_by_
-        author` recomputes a fragment per affected DOI and the rest
-        of the mart must carry) — where :meth:`upsert_manifest` is
+        write shape (``operators.merge.mart_parts`` recomputes a
+        fragment per affected group and the rest of the mart must
+        carry) — where :meth:`upsert_manifest` is
         keyed MERGE, this is keyed REPLACE, and together they cover
         both change-feed consumers. ``affected_keys`` is one column
         named like the table's bucket key; it is O(changes) and

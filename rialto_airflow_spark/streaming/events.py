@@ -65,14 +65,14 @@ def stage_events_input(spark: SparkSession, sf_dir: str, copies: int = 1) -> str
 
 
 @contextlib.contextmanager
-def few_state_partitions(spark: SparkSession, n: int | None = None):
+def few_state_partitions(spark: SparkSession, n: int = 8):
     """Bound streaming state-store partitions: the state store creates
     one instance (+ checkpoint files) per shuffle partition, a fixed
     per-query cost that dwarfs the data at test scale and is pinned
-    into the checkpoint at first batch. The default (8, overridable
-    via ``RIALTO_STREAM_STATE_PARTITIONS`` for deployments whose key
-    cardinality warrants more or fewer) keeps the drain parallel
-    while cutting the per-query setup ~4x vs the session's 32.
+    into the checkpoint at first batch. The default 8 keeps the drain
+    parallel while cutting the per-query setup ~4x vs the session's
+    32; pass ``n`` when the key cardinality warrants more or fewer
+    (q31's complete-mode drain passes 2).
 
     NOT concurrency-safe: this mutates the session-global
     spark.sql.shuffle.partitions for the duration of the block, so any
@@ -81,10 +81,6 @@ def few_state_partitions(spark: SparkSession, n: int | None = None):
     store's partition count — it is captured from this conf at
     checkpoint creation). Callers are the single-threaded bench/driver
     paths; hold the block only around starting the stream."""
-    if n is None:
-        import os
-
-        n = int(os.environ.get("RIALTO_STREAM_STATE_PARTITIONS", "8"))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -428,6 +424,19 @@ def run_available_now(
     q.awaitTermination()
 
 
+def _drain_foreach(df: DataFrame, apply, checkpoint: str) -> None:
+    """Drain everything currently available through a ``foreachBatch``
+    sink, then stop — every store-backed streaming sink below runs
+    its micro-batches this way."""
+    (
+        df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def enrich_stream(
     events: DataFrame, dim: DataFrame, key: str, how: str = "left"
 ) -> DataFrame:
@@ -619,8 +628,8 @@ def stream_upsert(
     changed-row slices come from bucket-pruned reads
     (``TableStore.read_buckets`` — O(dirty buckets) bytes per
     trigger at ANY table size); no ``snapshot_diff`` of two full
-    versions runs on this path
-    (``operators.merge.incremental_mart_parts_from_changes``).
+    versions runs on this path (``operators.merge.mart_parts`` — the
+    one refresh path the batch and DAG consumers share).
 
     ``delete_col`` (opt-in, round 12) makes the sink DELETE-capable
     (the CDC/tombstone shape): a boolean batch column; a key whose
@@ -700,6 +709,23 @@ def stream_upsert(
     be schema-stable (same columns/types every batch) — the normal
     streaming contract anyway.
     """
+    from rialto_airflow_spark.operators.merge import (
+        _in_groups,
+        apply_mart_parts,
+        mart_parts,
+    )
+
+    if mart:
+        # one mart definition for both shapes: a group aggregate is the
+        # build that re-folds its group column
+        if "build" in mart:
+            mkey, build = mart["fan_key"], mart["build"]
+        else:
+            mkey = mart["group_col"]
+
+            def build(rows: DataFrame) -> DataFrame:
+                return rows.groupBy(mkey).agg(*mart["agg_exprs"])
+
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
@@ -809,7 +835,6 @@ def stream_upsert(
                     # the exact cost curve this path exists to avoid,
                     # with the underlying defect masked indefinitely
                     old_changed = None
-            mkey = mart["fan_key"] if "build" in mart else mart["group_col"]
             m_buckets = mart.get("manifest_buckets")
             fan_is_key = mkey == key
             # fan_key == bucket key: the TABLE is already clustered by
@@ -825,12 +850,7 @@ def stream_upsert(
             )
             if not incremental_ok:
                 # first batch / repair: full mart build
-                if "build" in mart:
-                    refreshed = mart["build"](new_tbl)
-                else:
-                    refreshed = new_tbl.groupBy(mart["group_col"]).agg(
-                        *mart["agg_exprs"]
-                    )
+                refreshed = build(new_tbl)
                 if c_buckets is not None:
                     # bootstrap the fan-key CLUSTERED PROJECTION with
                     # the same full pass the mart build pays anyway
@@ -860,12 +880,11 @@ def stream_upsert(
                         ~F.coalesce(F.col(delete_col), F.lit(False))
                     ).drop(delete_col)
                 has_null = bool(null_batch.limit(1).count())
-                affected = old_changed.select(mkey).unionByName(
-                    new_changed.select(mkey)
-                )
+                new_groups = new_changed.select(mkey)
                 if has_null:
-                    affected = affected.unionByName(null_batch.select(mkey))
-                affected = affected.distinct()
+                    new_groups = new_groups.unionByName(
+                        null_batch.select(mkey)
+                    )
 
                 def _head_null_rows():
                     # the head's null-MERGE-key rows: on a manifest
@@ -884,9 +903,9 @@ def stream_upsert(
                     # read bucket- and file-pruned above. The null
                     # group (insert-only) re-folds from the null
                     # bucket when the batch touched it.
-                    fragment_input = new_changed
+                    group_rows = new_changed
                     if has_null:
-                        fragment_input = fragment_input.unionByName(
+                        group_rows = group_rows.unionByName(
                             _head_null_rows()
                         )
                 elif c_buckets is not None:
@@ -898,50 +917,36 @@ def stream_upsert(
                             new_tbl.where(F.col(key).isNotNull()),
                             cname, mkey, n_buckets=c_buckets,
                         )
-                    # O(affected groups) FRAGMENT RE-FOLD: without the
-                    # projection, rebuilding an affected group scans
-                    # new_tbl once per trigger (a group's rows scatter
-                    # across key-buckets whenever fan_key != key).
-                    # The cluster table holds the head's NON-NULL-key
-                    # rows bucketed BY fan_key, maintained O(changes)
-                    # by the same keyed-REPLACE machinery: the
-                    # affected groups' rows read via bucket path
-                    # selection, the new group state derives from
-                    # (old group rows minus changed keys) ∪ the
-                    # changed keys' head rows ∪ the groups' null-key
-                    # head rows (sourced fresh from the table's null
-                    # bucket each re-fold, so the projection stays
-                    # null-free and replay-simple) — nothing
-                    # full-table anywhere.
-                    cbks = store.batch_buckets(cname, affected)
-                    cslice = store.read_buckets(spark, cname, cbks)
-                    group_rows = cslice.join(
-                        F.broadcast(
-                            affected.withColumnRenamed(mkey, "__af")
-                        ),
-                        cslice[mkey].eqNullSafe(F.col("__af")),
-                        "left_semi",
-                    )
-                    keyed_rows = group_rows.join(
-                        F.broadcast(changed), key, "left_anti"
-                    ).unionByName(
-                        new_changed.where(F.col(key).isNotNull())
-                    )
-                    group_null_rows = _head_null_rows().join(
-                        F.broadcast(
-                            affected.withColumnRenamed(mkey, "__af")
-                        ),
-                        F.col(mkey).eqNullSafe(F.col("__af")),
-                        "left_semi",
-                    )
-                    fragment_input = keyed_rows.unionByName(
-                        group_null_rows
-                    )
-                    # the projection carries only keyed rows — null
-                    # rows re-read from the head each time
-                    store.replace_keys_manifest(
-                        spark, cname, affected, keyed_rows
-                    )
+
+                    def group_rows(affected):
+                        # O(affected groups) FRAGMENT RE-FOLD: without
+                        # the projection, rebuilding an affected group
+                        # scans new_tbl once per trigger (a group's
+                        # rows scatter across key-buckets whenever
+                        # fan_key != key). The cluster table holds the
+                        # head's NON-NULL-key rows bucketed BY fan_key,
+                        # maintained O(changes) by the same keyed
+                        # REPLACE machinery: the affected groups' rows
+                        # read via bucket path selection, the new
+                        # group state derives from (old group rows
+                        # minus changed keys) ∪ the changed keys' head
+                        # rows ∪ the groups' null-key head rows
+                        # (sourced fresh from the table's null bucket
+                        # each re-fold, so the projection stays
+                        # null-free and replay-simple) — nothing
+                        # full-table anywhere.
+                        cslice = store.read_buckets(
+                            spark, cname, store.batch_buckets(cname, affected)
+                        )
+                        keyed_rows = _in_groups(cslice, affected, mkey).join(
+                            F.broadcast(changed), key, "left_anti"
+                        ).unionByName(new_changed.where(F.col(key).isNotNull()))
+                        # the projection carries only keyed rows — null
+                        # rows re-read from the head each time
+                        store.replace_keys_manifest(
+                            spark, cname, affected, keyed_rows
+                        )
+                        return keyed_rows.unionByName(_head_null_rows())
                 else:
                     # no projection and fan_key != key: the re-fold
                     # scans the table once per trigger — correct, but
@@ -959,19 +964,10 @@ def stream_upsert(
                             "for O(affected groups) re-folds",
                             stacklevel=2,
                         )
-                    fragment_input = new_tbl.join(
-                        F.broadcast(
-                            affected.withColumnRenamed(mkey, "__chg_fan")
-                        ),
-                        new_tbl[mkey].eqNullSafe(F.col("__chg_fan")),
-                        "left_semi",
-                    )
-                if "build" in mart:
-                    fragment = mart["build"](fragment_input)
-                else:
-                    fragment = fragment_input.groupBy(mkey).agg(
-                        *mart["agg_exprs"]
-                    )
+                    group_rows = new_tbl
+                affected, fragment = mart_parts(
+                    old_changed, new_groups, group_rows, mkey, build
+                )
                 if m_buckets is not None:
                     # O(changes) mart WRITE: the affected groups +
                     # rebuilt fragment apply as a keyed REPLACE on the
@@ -982,15 +978,8 @@ def stream_upsert(
                         extra={"built_from": new_path},
                     )
                 else:
-                    kept = old_mart.join(
-                        F.broadcast(
-                            affected.withColumnRenamed(mkey, "__chg_grp")
-                        ),
-                        old_mart[mkey].eqNullSafe(F.col("__chg_grp")),
-                        "left_anti",
-                    )
                     store.write(
-                        kept.unionByName(fragment),
+                        apply_mart_parts(old_mart, affected, fragment, mkey),
                         mart["table"],
                         extra={"built_from": new_path},
                     )
@@ -1037,13 +1026,7 @@ def stream_upsert(
                         keep=retention,
                     )
 
-    q = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(events, _apply, checkpoint)
 
 
 def stream_interval_join(
@@ -1140,13 +1123,7 @@ def stream_distinct_sketches(
             )
         store.write(merged, table)
 
-    q = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(events, _apply, checkpoint)
 
 
 def gated_stream_upsert(
@@ -1191,13 +1168,50 @@ def gated_stream_upsert(
                 return  # batch rejected; published table untouched
         _merge_batch(store, table, key, batch)
 
-    q = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _drain_foreach(events, _apply, checkpoint)
+
+
+def _write_stamped(
+    store, table: str, fresh: DataFrame, merge, batch_id: int, checkpoint: str
+) -> None:
+    """Add one micro-batch's ADDITIVE sketch into ``table`` exactly
+    once: ``merge(prev, fresh)`` and the ``__last_batch``/``__ckpt``
+    replay stamp land in one atomic write; a replayed batch id of the
+    same checkpoint skips. A table without stamps (batch-seeded) or
+    stamped by another checkpoint (batch ids are checkpoint-scoped)
+    is refused with ``ValueError`` instead of double-counting."""
+    try:
+        prev = store.read(fresh.sparkSession, table)
+    except FileNotFoundError:
+        merged = fresh
+    else:
+        if "__ckpt" not in prev.columns or "__last_batch" not in prev.columns:
+            raise ValueError(
+                f"sketch table '{table}' exists without replay "
+                "stamps (__ckpt/__last_batch) — it was seeded by a "
+                "batch write, and ADDING stream batches to it "
+                "cannot be made replay-safe. Start the stream on a "
+                "fresh table (merge the batch-built sketch "
+                "afterwards) or rebuild."
+            )
+        head = prev.select("__ckpt", "__last_batch").first()
+        if head is not None and head["__ckpt"] != checkpoint:
+            raise ValueError(
+                f"sketch table '{table}' was built by checkpoint "
+                f"{head['__ckpt']!r}; merging batches from "
+                f"{checkpoint!r} would double-count (batch ids are "
+                "checkpoint-scoped). Rebuild the table or reuse the "
+                "original checkpoint."
+            )
+        if head is not None and head["__last_batch"] >= batch_id:
+            return  # same-checkpoint replayed batch — skip
+        merged = merge(prev.drop("__last_batch", "__ckpt"), fresh)
+    store.write(
+        merged.withColumn("__last_batch", F.lit(batch_id)).withColumn(
+            "__ckpt", F.lit(checkpoint)
+        ),
+        table,
     )
-    q.awaitTermination()
 
 
 def stream_histogram_sketch(
@@ -1239,52 +1253,14 @@ def stream_histogram_sketch(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
-        spark = batch.sparkSession
         fresh = histogram_sketch(
             batch, group_cols, value_col, bins_per_decade=bins_per_decade
         )
-        try:
-            prev = store.read(spark, table)
-        except FileNotFoundError:
-            merged = fresh
-        else:
-            if "__ckpt" not in prev.columns or "__last_batch" not in prev.columns:
-                raise ValueError(
-                    f"sketch table '{table}' exists without replay "
-                    "stamps (__ckpt/__last_batch) — it was seeded by a "
-                    "batch write, and ADDING stream batches to it "
-                    "cannot be made replay-safe. Start the stream on a "
-                    "fresh table (merge the batch-built sketch "
-                    "afterwards) or rebuild."
-                )
-            head = prev.select("__ckpt", "__last_batch").first()
-            if head is not None and head["__ckpt"] != checkpoint:
-                raise ValueError(
-                    f"sketch table '{table}' was built by checkpoint "
-                    f"{head['__ckpt']!r}; merging batches from "
-                    f"{checkpoint!r} would double-count (batch ids are "
-                    "checkpoint-scoped). Rebuild the table or reuse the "
-                    "original checkpoint."
-                )
-            if head is not None and head["__last_batch"] >= batch_id:
-                return  # same-checkpoint replayed batch — skip
-            merged = merge_histogram_sketches(
-                prev.drop("__last_batch", "__ckpt"), fresh
-            )
-        store.write(
-            merged.withColumn("__last_batch", F.lit(batch_id)).withColumn(
-                "__ckpt", F.lit(checkpoint)
-            ),
-            table,
+        _write_stamped(
+            store, table, fresh, merge_histogram_sketches, batch_id, checkpoint
         )
 
-    q = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(events, _apply, checkpoint)
 
 
 def stream_minhash_dedup(
@@ -1410,13 +1386,7 @@ def stream_minhash_dedup(
             # concurrent appender's in-flight dir
             minhash_index_vacuum(index_path, keep=1, orphan_grace_s=0)
 
-    q = (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(docs, _apply, checkpoint)
 
 
 def stream_kmv_sketches(
@@ -1438,7 +1408,7 @@ def stream_kmv_sketches(
     Replay-idempotent for the same reason the HLL union is: bottom-k
     of a union is insensitive to re-unioning the same values —
     min-like, not additive — so no replay stamp is needed (contrast
-    ``stream_histogram_sketches``, whose counter addition IS
+    :func:`stream_histogram_sketch`, whose counter addition IS
     additive and carries one)."""
     from rialto_airflow_spark.operators.sketches import kmv_merge, kmv_sketch
 
@@ -1457,13 +1427,7 @@ def stream_kmv_sketches(
             merged = kmv_merge(prev.unionByName(fresh), group_cols, k=k)
         store.write(merged, table)
 
-    q = (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(docs, _apply, checkpoint)
 
 
 def stream_cm_sketch(
@@ -1495,47 +1459,9 @@ def stream_cm_sketch(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
-        spark = batch.sparkSession
         fresh = cm_sketch(
             batch, key_col, width=width, depth=depth, weight_col=weight_col
         )
-        try:
-            prev = store.read(spark, table)
-        except FileNotFoundError:
-            merged = fresh
-        else:
-            if "__ckpt" not in prev.columns or "__last_batch" not in prev.columns:
-                raise ValueError(
-                    f"sketch table '{table}' exists without replay "
-                    "stamps (__ckpt/__last_batch) — it was seeded by a "
-                    "batch write, and ADDING stream batches to it "
-                    "cannot be made replay-safe. Start the stream on a "
-                    "fresh table (merge the batch-built sketch "
-                    "afterwards) or rebuild."
-                )
-            head = prev.select("__ckpt", "__last_batch").first()
-            if head is not None and head["__ckpt"] != checkpoint:
-                raise ValueError(
-                    f"sketch table '{table}' was built by checkpoint "
-                    f"{head['__ckpt']!r}; merging batches from "
-                    f"{checkpoint!r} would double-count (batch ids are "
-                    "checkpoint-scoped). Rebuild the table or reuse the "
-                    "original checkpoint."
-                )
-            if head is not None and head["__last_batch"] >= batch_id:
-                return  # same-checkpoint replayed batch — skip
-            merged = cm_merge(prev.drop("__last_batch", "__ckpt"), fresh)
-        store.write(
-            merged.withColumn("__last_batch", F.lit(batch_id)).withColumn(
-                "__ckpt", F.lit(checkpoint)
-            ),
-            table,
-        )
+        _write_stamped(store, table, fresh, cm_merge, batch_id, checkpoint)
 
-    q = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach(events, _apply, checkpoint)

@@ -224,17 +224,19 @@ def op_mart_incremental(spark, d):
     updated_at stamp only — the production shape, since M2's upsert
     stamps it on every touch; the wide all-column comparison is the
     correctness fallback, not the weekly path."""
+    from rialto_airflow_spark.operators.merge import apply_mart_parts
     from rialto_airflow_spark.plans.marts import (
-        incremental_mart_publications_by_author,
+        incremental_mart_publications_by_author_parts,
     )
 
     old_pubs, new_pubs, old_mart, edges, authors, fe, fu = _mart_inputs(
         spark, d
     )
-    return incremental_mart_publications_by_author(
-        old_pubs, new_pubs, old_mart, edges, authors, fe, fu,
+    parts = incremental_mart_publications_by_author_parts(
+        old_pubs, new_pubs, edges, authors, fe, fu,
         compare_cols=["updated_at"],
     )
+    return apply_mart_parts(old_mart, *parts, "doi")
 
 
 def op_mart_full_rebuild(spark, d):

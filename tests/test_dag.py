@@ -327,11 +327,20 @@ def test_incremental_mart_from_change_feed(spark, tmp_path):
     rebuilt incrementally from the table change feed equals the full
     recompute row-for-row — the reference's weekly full republish
     (dags/publish_to_reports.py:17-61) at delta cost."""
+    from rialto_airflow_spark.operators.merge import apply_mart_parts
     from rialto_airflow_spark.plans.marts import (
-        incremental_mart_publications_by_author,
+        incremental_mart_publications_by_author_parts,
         mart_publications_by_author,
     )
     from rialto_airflow_spark.storage import TableStore
+
+    def incremental_mart_publications_by_author(
+        old_pubs, new_pubs, old_mart, *dims, compare_cols=None
+    ):
+        parts = incremental_mart_publications_by_author_parts(
+            old_pubs, new_pubs, *dims, compare_cols=compare_cols
+        )
+        return apply_mart_parts(old_mart, *parts, "doi")
 
     store = TableStore(str(tmp_path / "tables"))
     authors = spark.createDataFrame(

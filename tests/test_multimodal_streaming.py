@@ -519,12 +519,12 @@ def test_stream_upsert_maintains_aggregate_mart_incrementally(
 ):
     """Streaming materialized-view maintenance (round 9): the opt-in
     ``mart`` config re-folds ONLY groups touched by each micro-batch
-    (incremental_group_agg between the pre/post-merge versions the
-    store already retains). After three drains — insert, cross-group
-    update, new group — the mart equals a full groupBy recompute of
-    the final table, and the incremental path (not a full refresh)
-    demonstrably ran: batch 2's update leaves untouched groups'
-    mart rows with their batch-1 content."""
+    (``operators.merge.mart_parts`` over the rows the batch changed,
+    against the version the mart was built from). After three drains
+    — insert, cross-group update, new group — the mart equals a full
+    groupBy recompute of the final table, and the incremental path
+    (not a full refresh) demonstrably ran: batch 2's update leaves
+    untouched groups' mart rows with their batch-1 content."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -1134,7 +1134,7 @@ def test_stream_upsert_maintains_join_mart_incrementally(spark, tmp_path):
     """Round-10 task #5: the JOIN-shaped mart twin of the group-agg
     maintenance — mart rows are a per-user fan-out join into a
     dimension table, and each micro-batch rebuilds only the touched
-    users' mart rows (incremental_join_mart through the same
+    users' mart rows (``operators.merge.mart_parts`` through the same
     built_from replay-safe hook). After every drain the mart equals
     the full mart definition over the final table."""
     import datetime

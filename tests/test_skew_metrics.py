@@ -230,7 +230,22 @@ def test_incremental_group_agg_equals_full_recompute(spark):
     and the result must equal the full groupBy over the new table."""
     from pyspark.sql import functions as F
 
-    from rialto_airflow_spark.operators.merge import incremental_group_agg
+    from rialto_airflow_spark.operators.merge import (
+        apply_mart_parts,
+        changed_rows,
+        mart_parts,
+    )
+
+    def incremental_group_agg(
+        old, new, old_mart, key, grp, aggs, compare_cols=None
+    ):
+        parts = mart_parts(
+            *changed_rows(old, new, key, compare_cols=compare_cols),
+            new,
+            grp,
+            lambda rows: rows.groupBy(grp).agg(*aggs),
+        )
+        return apply_mart_parts(old_mart, *parts, grp)
 
     schema = "k bigint, grp string, v double, updated_at timestamp"
     TS1, TS2 = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
