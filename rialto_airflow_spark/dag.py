@@ -3,19 +3,23 @@ job graphs (SURVEY §3; dags/harvest_incremental.py:46-227,
 dags/publish_to_reports.py:17-61, dags/publish_orcid_to_reports.py:
 21-52).
 
-Tasks are plain callables with explicit dependencies so the graph
-runs standalone (``run_dag``) or registers into a real Airflow
-deployment when the library is importable (``to_airflow``) — the
-engine itself never imports Airflow. Between-task state is
-DataFrames carried in the run context instead of Postgres tables;
-each stage is one Spark job, so the per-author/per-row loops of the
-reference collapse into the set-based plans in ``plans/``.
+Tasks are plain callables with explicit dependencies, run in
+dependency order by ``Dag.run``; the engine never imports Airflow.
+Between-task state is DataFrames carried in the run context instead
+of Postgres tables; each stage is one Spark job, so the
+per-author/per-row loops of the reference collapse into the
+set-based plans in ``plans/``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+
+# the manifest tables ``complete`` persists into
+_PUBS_TABLE = "publications"
+_AUTHOR_EDGES_TABLE = "pub_author_edges"
+_FUNDER_EDGES_TABLE = "pub_funder_edges"
 
 
 @dataclass
@@ -62,26 +66,6 @@ class Dag:
         for t in self.topo_order():
             t.fn(context)
         return context
-
-    def to_airflow(self, **dag_kwargs):
-        """Build a real airflow.DAG when Airflow is installed
-        (import-guarded; the engine has no hard dependency)."""
-        try:
-            from airflow import DAG  # type: ignore
-            from airflow.operators.python import PythonOperator  # type: ignore
-        except ImportError as e:  # pragma: no cover
-            raise RuntimeError("airflow is not installed") from e
-        dag = DAG(self.name, **dag_kwargs)
-        ops = {
-            t.name: PythonOperator(
-                task_id=t.name, python_callable=t.fn, op_args=[{}], dag=dag
-            )
-            for t in self.tasks.values()
-        }
-        for t in self.tasks.values():
-            for up in t.upstream:
-                ops[up] >> ops[t.name]
-        return dag
 
 
 def _cut_lineage(df):
@@ -132,7 +116,7 @@ def build_harvest_dag() -> Dag:
     dag = Dag("harvest_incremental")
 
     def _tracking(ctx) -> bool:
-        return "__touched_pub_ids" in ctx
+        return "pubs_store" in ctx and not ctx.get("is_full", False)
 
     @dag.task("setup")
     def setup(ctx):
@@ -142,18 +126,14 @@ def build_harvest_dag() -> Dag:
         # merge-stamped rows (updated_at >= the run start captured
         # here, in the session's own timestamp domain), dedupe losers
         # + survivors, removed orphans, and every edge insert — so the
-        # persist never has to READ the stored head to rediscover them
-        # via snapshot_diff. Tracking assumes the standard task graph
-        # mutates ctx['pubs'] (a caller rewriting it out-of-band must
-        # set track_changes=False) and that batch rows don't carry
-        # backdated updated_at stamps (payload batches never do —
-        # merge_on_key stamps every touched row ``now``). Full
-        # harvests re-bootstrap, so tracking is skipped there.
-        if (
-            "pubs_store" in ctx
-            and ctx.get("track_changes", True)
-            and not ctx.get("is_full", False)
-        ):
+        # persist never READS the stored head to rediscover them.
+        # Tracking assumes the standard task graph mutates ctx['pubs']
+        # (a caller rewriting it out-of-band must not set pubs_store)
+        # and that batch rows don't carry backdated updated_at stamps
+        # (payload batches never do — merge_on_key stamps every
+        # touched row ``now``). Full harvests re-bootstrap, so
+        # tracking is skipped there.
+        if _tracking(ctx):
             ctx["__run_started_at"] = (
                 ctx["spark"]
                 .range(1)
@@ -398,36 +378,28 @@ def build_harvest_dag() -> Dag:
     @dag.task("complete", upstream=("remove_orphans",))
     def complete(ctx):
         """Optionally persist the run's tables O(changes) (opt-in via
-        ``ctx['pubs_store']`` = a TableStore): the run recomputes its
-        frames lazily in memory, but at 100 TB what matters is that
-        the persist neither READS nor WRITES the stored table beyond
-        the changes — against a manifest head the run lands as a
-        keyed REPLACE over the run's OWN tracked key set (round 12:
-        the tracking the tasks above accumulate — merge-stamped rows,
-        dedupe losers+survivors, removed orphans, edge inserts —
-        replaces the per-run ``snapshot_diff`` over the stored head,
-        which survives only as the fallback when tracking is off).
-        Inserts, updates AND the run's deletes all apply through the
-        one affected-key set; rewrites touch only the files
-        containing those keys.
-
-        Publications persist by ``id`` (``pubs_table``, default
-        'publications'; ``pubs_compare_cols`` thins the FALLBACK diff
-        — ["updated_at"] is the production shape since every MERGE/
-        distill touch re-stamps it). BOTH edge tables persist too,
-        bucketed by ``publication_id`` (fallback: a PRESENCE diff —
-        edges are insert/delete-only, M4/M5, and carry no stamp):
-        ``pub_author_edges`` / ``pub_funder_edges`` by default.
+        ``ctx['pubs_store']`` = a TableStore): publications keyed by
+        ``id`` and BOTH edge tables keyed by ``publication_id``, each
+        through :func:`_persist_table` into its manifest table
+        (``publications``, ``pub_author_edges``, ``pub_funder_edges``;
+        ``pubs_manifest_buckets`` buckets at bootstrap, 64 by default).
+        The run recomputes its frames lazily in memory, but at 100 TB
+        what matters is that the persist neither READS nor WRITES the
+        stored table beyond the changes: an incremental run lands as a
+        keyed REPLACE over the run's OWN tracked key sets (round 12:
+        merge-stamped rows, dedupe losers+survivors, removed orphans,
+        edge inserts). Inserts, updates AND the run's deletes all apply
+        through the one affected-key set; rewrites touch only the files
+        containing those keys, and the stored head is never scanned.
 
         Full-harvest and schema-evolution runs RE-BOOTSTRAP with
-        ``write_manifest`` instead of diffing (round-10 ADVICE): a
-        full harvest re-stamps nearly every row, so the "diff" is the
-        table and the O(changes) path degenerates through its slowest
-        shape (and a corpus-sized changed-set broadcast risks the
-        driver); a run that added a column would leave rows whose
-        shared columns are unchanged out of the dirty set while the
-        replace widened the schema — the stored table would silently
-        diverge from the run's finished frame."""
+        ``write_manifest`` instead (round-10 ADVICE): a full harvest
+        re-stamps nearly every row, so the change set is the table and
+        the keyed REPLACE degenerates into its slowest shape; a run
+        that added a column must rewrite every row. File-COW layouts
+        come from the stored table: bootstrap it once with
+        ``write_manifest(..., sort_cols=...)`` and every later run,
+        re-bootstraps included, keeps that layout."""
         store = ctx.get("pubs_store")
         if store is not None:
             spark = ctx["pubs"].sparkSession
@@ -452,38 +424,22 @@ def build_harvest_dag() -> Dag:
                 changed_pub = ctx["pubs"].where(stamped).select("id")
                 for part in ctx["__touched_pub_ids"]:
                     changed_pub = changed_pub.unionByName(part)
-                changed_pub = changed_pub.distinct()
                 changed_edge = ctx["pubs"].select(
                     F.col("id").alias("publication_id")
                 ).limit(0)
                 for part in ctx["__touched_edge_pub_ids"]:
                     changed_edge = changed_edge.unionByName(part)
-                changed_edge = changed_edge.distinct()
-            _persist_keyed_table(
-                store, spark, ctx.get("pubs_table", "publications"),
-                ctx["pubs"], "id",
-                n_buckets=nb,
-                compare_cols=ctx.get("pubs_compare_cols"),
-                is_full=is_full,
-                sort_cols=ctx.get("pubs_sort_cols"),
-                max_file_rows=ctx.get("pubs_max_file_rows"),
-                changed_keys=changed_pub,
-            )
-            for default_tbl, ctx_key, other_col in (
-                ("pub_author_edges", "author_edges", "author_id"),
-                ("pub_funder_edges", "funder_edges", "funder_id"),
+            for table, new, key, changed in (
+                (_PUBS_TABLE, ctx["pubs"], "id", changed_pub),
+                (_AUTHOR_EDGES_TABLE, ctx["author_edges"],
+                 "publication_id", changed_edge),
+                (_FUNDER_EDGES_TABLE, ctx["funder_edges"],
+                 "publication_id", changed_edge),
             ):
-                if ctx_key in ctx:
-                    _persist_edge_table(
-                        store, spark,
-                        ctx.get(f"{ctx_key}_table", default_tbl),
-                        ctx[ctx_key],
-                        fan_key="publication_id",
-                        key_cols=["publication_id", other_col],
-                        n_buckets=ctx.get("edges_manifest_buckets", nb),
-                        is_full=is_full,
-                        changed_keys=changed_edge,
-                    )
+                _persist_table(
+                    store, spark, table, new, key, changed,
+                    n_buckets=nb, is_full=is_full,
+                )
         ctx["harvest_finished"] = True
 
     return dag
@@ -518,35 +474,29 @@ def _fragment_for(new, key, changed):
 
 
 def _persist_table(
-    store, spark, table, new, key, fallback_diff, *,
-    n_buckets, is_full, sort_cols=None, max_file_rows=None,
-    changed_keys=None,
+    store, spark, table, new, key, changed_keys, *, n_buckets, is_full
 ) -> None:
     """O(changes) persistence of run table ``new`` into manifest table
-    ``table`` bucketed by ``key`` (see ``complete``). Bootstrap,
-    full-harvest and schema-change runs take ``write_manifest``; the
-    first uses the caller's layout, the re-bootstraps PRESERVE the
-    stored table's recorded layout (bucket sizing may have grown via
-    split_buckets; sort_cols/max_file_rows carry the file-COW
-    behavior — ctx defaults here would silently degrade every later
-    incremental run to whole-bucket rewrites). A schema change must
-    re-bootstrap: a keyed replace would leave rows whose shared
-    columns are unchanged out of the dirty set while the write widened
-    the schema.
+    ``table`` bucketed by ``key`` (see ``complete``), in one of three
+    shapes:
 
-    Incremental runs apply a keyed REPLACE. ``changed_keys`` (one
-    ``key`` column — the run's own touched-key set, threaded from the
-    DAG's tracking) makes the persist O(changes) in READS too: the
-    stored head is never scanned, and deletes need no special casing
-    (a changed key absent from ``new`` simply has no fragment row).
-    Without it, ``fallback_diff(stored)`` returns the ``(affected
-    keys, fragment)`` pair from an O(table) read of the stored head."""
+    - bootstrap (no manifest head yet): ``write_manifest`` with
+      ``n_buckets`` buckets;
+    - full-harvest or schema-change run: a re-bootstrap that PRESERVES
+      the stored table's recorded layout (bucket sizing may have grown
+      via split_buckets; sort_cols/max_file_rows carry the file-COW
+      behavior, and dropping them would silently degrade every later
+      incremental run to whole-bucket rewrites). A schema change must
+      re-bootstrap: a keyed replace would leave rows whose shared
+      columns are unchanged out of the dirty set while the write
+      widened the schema;
+    - otherwise: a keyed REPLACE over ``changed_keys`` (one ``key``
+      column — the run's own touched-key set). The stored head is
+      never scanned, and deletes need no special casing (a changed key
+      absent from ``new`` simply has no fragment row)."""
     info = store.current_info(table)
     if info is None or "manifest" not in info:
-        store.write_manifest(
-            new, table, key, n_buckets=n_buckets,
-            sort_cols=sort_cols, max_file_rows=max_file_rows,
-        )
+        store.write_manifest(new, table, key, n_buckets=n_buckets)
         return
     if is_full or _stored_columns(store, spark, table, info) != set(
         new.columns
@@ -557,88 +507,11 @@ def _persist_table(
             max_file_rows=info.get("max_file_rows"),
         )
         return
-    if changed_keys is not None:
-        affected = changed_keys.select(key).distinct()
-        if not affected.limit(1).count():
-            return  # nothing touched — no version churn
-        fragment = _fragment_for(new, key, affected)
-    else:
-        affected, fragment = fallback_diff(store.read(spark, table))
-    store.replace_keys_manifest(spark, table, affected, fragment)
-
-
-def _keyed_diff(old, new, key, compare_cols):
-    """A key-unique table's fallback diff: ``snapshot_diff`` against
-    the stored head. The changed-set joins carry NO broadcast hint —
-    AQE picks the strategy from the measured size (round-10 ADVICE:
-    an unconditional hint turned corpus-sized changed sets into
-    out-of-memory broadcasts)."""
-    from rialto_airflow_spark.operators.merge import snapshot_diff
-
-    changed = (
-        snapshot_diff(old, new, key, compare_cols=compare_cols)
-        .select(key)
-        .distinct()
-    )
-    return changed, new.join(changed, key, "left_semi")
-
-
-def _edge_presence_diff(old, new, fan_key, key_cols):
-    """An association table's fallback diff, by PRESENCE (edges are
-    insert/delete-only and carry no stamp): ONE null-safe full-outer
-    join over the stored table — one read, and identical null-key
-    edges match instead of churning through affected every run; the
-    fragment semi-join is null-safe too, so a null-pub edge group
-    round-trips instead of being silently dropped (round-11 ADVICE)."""
-    from pyspark.sql import functions as F
-
-    o = old.select(*key_cols).withColumn("__o", F.lit(True)).alias("o")
-    nn = new.select(*key_cols).withColumn("__n", F.lit(True)).alias("n")
-    cond = F.lit(True)
-    for c in key_cols:
-        cond = cond & F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}"))
-    j = o.join(nn, cond, "full_outer")
-    affected = (
-        j.where(F.col("o.__o").isNull() | F.col("n.__n").isNull())
-        .select(
-            F.coalesce(
-                F.col(f"o.{fan_key}"), F.col(f"n.{fan_key}")
-            ).alias(fan_key)
-        )
-        .distinct()
-    )
-    return affected, _fragment_for(new, fan_key, affected)
-
-
-def _persist_keyed_table(
-    store, spark, table, new, key, *,
-    n_buckets, compare_cols, is_full,
-    sort_cols=None, max_file_rows=None, changed_keys=None,
-) -> None:
-    """Persist a key-unique run table (:func:`_persist_table`; the
-    fallback is :func:`_keyed_diff`)."""
-    _persist_table(
-        store, spark, table, new, key,
-        lambda old: _keyed_diff(old, new, key, compare_cols),
-        n_buckets=n_buckets, is_full=is_full, sort_cols=sort_cols,
-        max_file_rows=max_file_rows, changed_keys=changed_keys,
-    )
-
-
-def _persist_edge_table(
-    store, spark, table, new, *, fan_key, key_cols, n_buckets, is_full,
-    changed_keys=None,
-) -> None:
-    """Persist an association table (M4 shape) bucketed by the
-    publication-side ``fan_key``, as a keyed REPLACE of the affected
-    publications' whole edge groups (:func:`_persist_table`; the
-    fallback is :func:`_edge_presence_diff`). Full-harvest runs
-    re-bootstrap: M5 resets the edge table wholesale, the presence
-    diff would BE the table."""
-    _persist_table(
-        store, spark, table, new, fan_key,
-        lambda old: _edge_presence_diff(old, new, fan_key, key_cols),
-        n_buckets=n_buckets, is_full=is_full, changed_keys=changed_keys,
+    affected = changed_keys.select(key).distinct()
+    if not affected.limit(1).count():
+        return  # nothing touched — no version churn
+    store.replace_keys_manifest(
+        spark, table, affected, _fragment_for(new, key, affected)
     )
 
 

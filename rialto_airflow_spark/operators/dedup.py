@@ -818,6 +818,23 @@ def _pbucket(band_idx: Column, band_hash: Column, bands: int, buckets: int) -> C
     ).cast("int")
 
 
+def _fingerprint_rows(
+    docs: DataFrame, id_col: str, text_col: str, id_alias: str,
+    num_perm: int, bands: int, shingle_n: int, buckets: int,
+) -> DataFrame:
+    """``(id_alias, band_idx, band_hash, pbucket)`` rows: a batch's
+    banded MinHash signature in the index's row shape, shared by the
+    build, the append and the probe so all three fingerprint alike."""
+    return banded_rows(docs, id_col, text_col, num_perm, bands, shingle_n).select(
+        F.col(id_col).alias(id_alias),
+        "band_idx",
+        "band_hash",
+        _pbucket(F.col("band_idx"), F.col("band_hash"), bands, buckets).alias(
+            "pbucket"
+        ),
+    )
+
+
 def _minhash_store(path: str):
     """The index's shared versioned-store handle: commit-log layout
     under ``{path}/_commits`` (``commitlog.VersionedStore`` — one
@@ -897,13 +914,8 @@ def write_minhash_index(
         "num_perm int, bands int, shingle_n int, buckets int",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(base, "meta"))
 
-    rows = banded_rows(docs, id_col, text_col, num_perm, bands, shingle_n).select(
-        F.col(id_col).alias("index_id"),
-        "band_idx",
-        "band_hash",
-        _pbucket(F.col("band_idx"), F.col("band_hash"), bands, buckets).alias(
-            "pbucket"
-        ),
+    rows = _fingerprint_rows(
+        docs, id_col, text_col, "index_id", num_perm, bands, shingle_n, buckets
     )
     index_store.salted_write(
         rows, os.path.join(base, MINHASH.data), MINHASH.part, MINHASH.id_col,
@@ -941,13 +953,8 @@ def append_minhash_index(
         raise FileNotFoundError(f"no committed minhash index at {path}")
     rows_dir, meta_dir = cur
     num_perm, bands, shingle_n, buckets = _minhash_index_meta(spark, meta_dir)
-    rows = banded_rows(docs, id_col, text_col, num_perm, bands, shingle_n).select(
-        F.col(id_col).alias("index_id"),
-        "band_idx",
-        "band_hash",
-        _pbucket(F.col("band_idx"), F.col("band_hash"), bands, buckets).alias(
-            "pbucket"
-        ),
+    rows = _fingerprint_rows(
+        docs, id_col, text_col, "index_id", num_perm, bands, shingle_n, buckets
     )
     store = _minhash_store(path)
     index_store.append(
@@ -1050,15 +1057,8 @@ def minhash_dups_against_index(
     if cur is None:
         raise FileNotFoundError(f"no committed minhash index at {path}")
     num_perm, bands, shingle_n, buckets = _minhash_index_meta(spark, cur[1])
-    probe = banded_rows(
-        new_docs, id_col, text_col, num_perm, bands, shingle_n
-    ).select(
-        F.col(id_col).alias("new_id"),
-        "band_idx",
-        "band_hash",
-        _pbucket(F.col("band_idx"), F.col("band_hash"), bands, buckets).alias(
-            "pbucket"
-        ),
+    probe = _fingerprint_rows(
+        new_docs, id_col, text_col, "new_id", num_perm, bands, shingle_n, buckets
     )
     from pyspark import StorageLevel
 

@@ -45,7 +45,7 @@ def publications_for_author_from_store(
     sunet: str,
     spark,
     store,
-    pubs_table: str,
+    table: str,
     author_edges: DataFrame,
     authors: DataFrame,
     funder_edges: DataFrame,
@@ -68,7 +68,7 @@ def publications_for_author_from_store(
         F.broadcast(target), F.col("author_id") == F.col("__target_aid")
     ).select("publication_id").distinct()
     ids = [r["publication_id"] for r in pub_ids_df.collect()]
-    my_pubs = store.read_keys(spark, pubs_table, ids)
+    my_pubs = store.read_keys(spark, table, ids)
     # the collected ids feed the edge branches too, as one local
     # slice, so the author→edge join runs once per lookup
     pub_ids = local_df(

@@ -660,7 +660,7 @@ def stream_upsert(
     each re-fold (one pruned read), so the projection stays null-free
     and replay-simple. Without either (``fan_key != key`` and no
     ``cluster_buckets``) the re-fold scans the table once per trigger
-    — correct, and the sink warns once so the table-sized read is
+    — correct, and the sink warns at entry so the table-sized read is
     never silent.
 
     The first batch computes the mart in full. Adding
@@ -726,6 +726,18 @@ def stream_upsert(
             def build(rows: DataFrame) -> DataFrame:
                 return rows.groupBy(mkey).agg(*mart["agg_exprs"])
 
+        if mkey != key and mart.get("cluster_buckets") is None:
+            import warnings
+
+            warnings.warn(
+                f"streaming mart {mart['table']!r}: the fragment re-fold "
+                "scans the whole table each trigger because fan_key != "
+                "merge key and no cluster_buckets is set — add "
+                "'cluster_buckets': N to the mart config for "
+                "O(affected groups) re-folds",
+                stacklevel=2,
+            )
+
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
@@ -739,8 +751,6 @@ def stream_upsert(
             _apply_inner(batch, batch_id, spark)
         finally:
             batch.unpersist()
-
-    _warned_table_refold: list = []
 
     def _apply_inner(batch: DataFrame, batch_id: int, spark) -> None:
         _merge_batch(
@@ -951,19 +961,7 @@ def stream_upsert(
                     # no projection and fan_key != key: the re-fold
                     # scans the table once per trigger — correct, but
                     # the one remaining table-sized read on this path
-                    if not _warned_table_refold:
-                        _warned_table_refold.append(True)
-                        import warnings
-
-                        warnings.warn(
-                            f"streaming mart {mart['table']!r}: the "
-                            "fragment re-fold scans the whole table "
-                            "each trigger because fan_key != merge "
-                            "key and no cluster_buckets is set — add "
-                            "'cluster_buckets': N to the mart config "
-                            "for O(affected groups) re-folds",
-                            stacklevel=2,
-                        )
+                    # (warned once at sink entry)
                     group_rows = new_tbl
                 affected, fragment = mart_parts(
                     old_changed, new_groups, group_rows, mkey, build

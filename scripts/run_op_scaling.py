@@ -391,10 +391,6 @@ def _dag_stores(spark, d):
         return _DAG_SETUP[d]
     import tempfile
 
-    from rialto_airflow_spark.dag import (
-        _persist_edge_table,
-        _persist_keyed_table,
-    )
     from rialto_airflow_spark.storage import TableStore
 
     root = tempfile.mkdtemp(prefix="rspark_dagscale_")
@@ -404,22 +400,13 @@ def _dag_stores(spark, d):
         F.col("id").alias("publication_id"),
         F.explode(F.array(F.lit(1), F.lit(2))).alias("author_id"),
     )
-    _persist_keyed_table(
-        st, spark, "publications", pubs, "id",
-        n_buckets=256, compare_cols=None, is_full=False,
+    st.write_manifest(
+        pubs, "publications", "id", n_buckets=256,
         sort_cols=["id"], max_file_rows=25,
     )
-    _persist_edge_table(
-        st, spark, "pub_author_edges", edges,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=256, is_full=False,
-    )
-    _persist_edge_table(
-        st, spark, "pub_funder_edges", edges.limit(0),
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=256, is_full=False,
+    st.write_manifest(edges, "pub_author_edges", "publication_id", n_buckets=256)
+    st.write_manifest(
+        edges.limit(0), "pub_funder_edges", "publication_id", n_buckets=256
     )
     _DAG_SETUP[d] = (st, pubs, edges)
     return _DAG_SETUP[d]
@@ -434,10 +421,7 @@ def wop_dag_incremental_persist(spark, d):
     changed-key set threaded in (the production DAG tracking shape) —
     the stored head is never read, so SECONDS stay ~flat across the
     size spread, not just bytes written."""
-    from rialto_airflow_spark.dag import (
-        _persist_edge_table,
-        _persist_keyed_table,
-    )
+    from rialto_airflow_spark.dag import _persist_table
 
     st, pubs, edges = _dag_stores(spark, d)
     new_pubs = pubs.withColumn(
@@ -459,29 +443,16 @@ def wop_dag_incremental_persist(spark, d):
         t: (st.current_info(t) or {}).get("path")
         for t in ("publications", "pub_author_edges", "pub_funder_edges")
     }
-    _persist_keyed_table(
-        st, spark, "publications", new_pubs, "id",
-        n_buckets=256, compare_cols=["updated_at"], is_full=False,
-        changed_keys=spark.range(10).select(F.col("id")),
-    )
-    _persist_edge_table(
-        st, spark, "pub_author_edges", new_edges,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=256, is_full=False,
-        changed_keys=spark.range(5).select(
-            F.col("id").alias("publication_id")
-        ),
-    )
-    _persist_edge_table(
-        st, spark, "pub_funder_edges", edges.limit(0),
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=256, is_full=False,
-        changed_keys=spark.range(0).select(
-            F.col("id").alias("publication_id")
-        ),
-    )
+    for table, new, key, changed in (
+        ("publications", new_pubs, "id", spark.range(10)),
+        ("pub_author_edges", new_edges, "publication_id", spark.range(5)),
+        ("pub_funder_edges", edges.limit(0), "publication_id", spark.range(0)),
+    ):
+        _persist_table(
+            st, spark, table, new, key,
+            changed.withColumnRenamed("id", key),
+            n_buckets=256, is_full=False,
+        )
     total = 0
     for t, old in before.items():
         cur = (st.current_info(t) or {}).get("path")
@@ -626,10 +597,11 @@ def rop_dag_persist_read(spark, d):
     READS per run. Threaded path = only the files/buckets containing
     the run's changed keys (pubs are file-COW → read_keys resolves
     the exact file set the replace rewrites; edges are bucket-form →
-    the dirty buckets' leaves). Fallback = the snapshot_diff /
-    presence-diff shape's full read of all three stored tables. Fixed
-    10-key change set: threaded bytes must stay ~flat, fallback bytes
-    grow with the table."""
+    the dirty buckets' leaves). Fallback = the full read of all three
+    stored tables that the pre-round-12 stored-head diff took (since
+    removed; kept here as the contrast). Fixed 10-key change set:
+    threaded bytes must stay ~flat, fallback bytes grow with the
+    table."""
     st, pubs, edges = _dag_stores(spark, d)
     ekeys = spark.range(5).select(F.col("id").alias("publication_id"))
     threaded = (

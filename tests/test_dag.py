@@ -938,26 +938,24 @@ def test_persist_helpers_full_harvest_and_schema_evolution(spark, tmp_path):
     broadcast is a driver hazard), and a run whose frame GAINED a column
     also re-bootstraps (snapshot_diff only compares shared columns, so
     new-column-only changes would silently miss the dirty set)."""
-    from rialto_airflow_spark.dag import _persist_edge_table, _persist_keyed_table
+    from rialto_airflow_spark.dag import _persist_table
     from rialto_airflow_spark.storage import TableStore
 
     store = TableStore(str(tmp_path))
     t1 = spark.createDataFrame(
         [(i, i * 10) for i in range(50)], "id long, v long"
     )
-    _persist_keyed_table(
-        store, spark, "t", t1, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
-    )
+    _persist_table(store, spark, "t", t1, "id", None, n_buckets=8, is_full=False)
     assert "manifest" in store.current_info("t")
 
     # incremental: one changed row -> keyed replace, most entries carried
     t2 = spark.createDataFrame(
         [(i, i * 10 if i != 3 else -1) for i in range(50)], "id long, v long"
     )
-    _persist_keyed_table(
+    _persist_table(
         store, spark, "t", t2, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
+        spark.createDataFrame([(3,)], "id long"),
+        n_buckets=8, is_full=False,
     )
     info = store.current_info("t")
     carriers = {
@@ -968,33 +966,28 @@ def test_persist_helpers_full_harvest_and_schema_evolution(spark, tmp_path):
     assert {r["v"] for r in store.read_keys(spark, "t", [3]).collect()} == {-1}
 
     # full harvest: same frame, is_full=True -> ONE fresh version holds all
-    _persist_keyed_table(
-        store, spark, "t", t2, "id",
-        n_buckets=8, compare_cols=None, is_full=True,
-    )
+    _persist_table(store, spark, "t", t2, "id", None, n_buckets=8, is_full=True)
     info = store.current_info("t")
     assert len(set(info["manifest"].values())) == 1
 
     # schema evolution: new column, SHARED columns unchanged -> must
     # still land (re-bootstrap), and the stored table equals the frame
     t3 = t2.withColumn("w", F.col("id") + 1000)
-    _persist_keyed_table(
-        store, spark, "t", t3, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
+    _persist_table(
+        store, spark, "t", t3, "id", spark.range(0),
+        n_buckets=8, is_full=False,
     )
     got = store.read(spark, "t")
     assert set(got.columns) == {"id", "v", "w"}
     assert got.where(F.col("w").isNull()).count() == 0
 
-    # edge helper: presence diff -> replace of affected pubs only
+    # edge table: replace of the affected pubs' edge groups only
     e1 = spark.createDataFrame(
         [(p, a) for p in range(20) for a in (1, 2)],
         "publication_id long, author_id long",
     )
-    _persist_edge_table(
-        store, spark, "edges", e1,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
+    _persist_table(
+        store, spark, "edges", e1, "publication_id", None,
         n_buckets=8, is_full=False,
     )
     v_boot = store.current_info("edges")["path"]
@@ -1002,10 +995,9 @@ def test_persist_helpers_full_harvest_and_schema_evolution(spark, tmp_path):
     e2 = e1.where(F.col("publication_id") != 7).unionByName(
         spark.createDataFrame([(3, 9)], "publication_id long, author_id long")
     )
-    _persist_edge_table(
-        store, spark, "edges", e2,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
+    _persist_table(
+        store, spark, "edges", e2, "publication_id",
+        spark.createDataFrame([(3,), (7,)], "publication_id long"),
         n_buckets=8, is_full=False,
     )
     info = store.current_info("edges")
@@ -1100,27 +1092,22 @@ def test_persist_full_harvest_preserves_recorded_layout(spark, tmp_path):
     sort_cols/max_file_rows), not the ctx defaults — otherwise one
     full harvest silently degrades every later incremental run to
     whole-bucket rewrites."""
-    from rialto_airflow_spark.dag import _persist_keyed_table
+    from rialto_airflow_spark.dag import _persist_table
     from rialto_airflow_spark.storage import TableStore
 
     store = TableStore(str(tmp_path))
     t1 = spark.createDataFrame(
         [(i, i * 10) for i in range(50)], "id long, v long"
     )
-    _persist_keyed_table(
-        store, spark, "t", t1, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
-        sort_cols=["id"], max_file_rows=10,
+    store.write_manifest(
+        t1, "t", "id", n_buckets=8, sort_cols=["id"], max_file_rows=10
     )
     store.split_buckets(spark, "t", factor=2)
     assert store.current_info("t")["n_buckets"] == 16
 
-    # full harvest with DIFFERENT ctx defaults (the default 64 / no
-    # sort_cols) — the stored layout must survive
-    _persist_keyed_table(
-        store, spark, "t", t1, "id",
-        n_buckets=64, compare_cols=None, is_full=True,
-    )
+    # full harvest with a DIFFERENT ctx default (the default 64) — the
+    # stored layout must survive
+    _persist_table(store, spark, "t", t1, "id", None, n_buckets=64, is_full=True)
     info = store.current_info("t")
     assert info["n_buckets"] == 16
     assert info.get("sort_cols") == ["id"]
@@ -1132,11 +1119,12 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     spark, tmp_path, monkeypatch
 ):
     """Round-12 task #1 (helper level): with a threaded changed-key
-    set, BOTH persist helpers never read the stored head at all — the
-    replace rewrites only the files containing those keys. Pinned by
-    poisoning snapshot_diff AND TableStore.read for the whole call."""
+    set, persisting a keyed table or an edge table never reads the
+    stored head at all — the replace rewrites only the files containing
+    those keys. Pinned by poisoning snapshot_diff AND TableStore.read
+    for the whole call."""
     from rialto_airflow_spark import storage as storage_mod
-    from rialto_airflow_spark.dag import _persist_edge_table, _persist_keyed_table
+    from rialto_airflow_spark.dag import _persist_table
     from rialto_airflow_spark.operators import merge as merge_mod
     from rialto_airflow_spark.storage import TableStore
 
@@ -1144,20 +1132,16 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     t1 = spark.createDataFrame(
         [(i, i * 10) for i in range(50)], "id long, v long"
     )
-    _persist_keyed_table(
-        store, spark, "t", t1, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
-        sort_cols=["id"], max_file_rows=10,
+    store.write_manifest(
+        t1, "t", "id", n_buckets=8, sort_cols=["id"], max_file_rows=10
     )
     e1 = spark.createDataFrame(
         [(p, a) for p in range(20) for a in (1, 2)]
         + [(None, 77)],  # a null-pub edge group must round-trip
         "publication_id long, author_id long",
     )
-    _persist_edge_table(
-        store, spark, "edges", e1,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
+    _persist_table(
+        store, spark, "edges", e1, "publication_id", None,
         n_buckets=8, is_full=False,
     )
     v_pub_boot = store.current_info("t")["path"]
@@ -1178,10 +1162,8 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     changed = spark.createDataFrame(
         [(3,), (7,), (60,), (None,)], "id long"
     )
-    _persist_keyed_table(
-        store, spark, "t", t2, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
-        changed_keys=changed,
+    _persist_table(
+        store, spark, "t", t2, "id", changed, n_buckets=8, is_full=False
     )
     monkeypatch.undo()
     got = {(r["id"], r["v"]) for r in store.read(spark, "t").collect()}
@@ -1200,10 +1182,9 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     v_before = store.current_info("t")["path"]
     monkeypatch.setattr(merge_mod, "snapshot_diff", _poison)
     monkeypatch.setattr(storage_mod.TableStore, "read", _poison)
-    _persist_keyed_table(
-        store, spark, "t", t2, "id",
-        n_buckets=8, compare_cols=None, is_full=False,
-        changed_keys=changed.limit(0),
+    _persist_table(
+        store, spark, "t", t2, "id", changed.limit(0),
+        n_buckets=8, is_full=False,
     )
     assert store.current_info("t")["path"] == v_before
 
@@ -1223,12 +1204,9 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     changed_e = spark.createDataFrame(
         [(3,), (7,), (None,)], "publication_id long"
     )
-    _persist_edge_table(
-        store, spark, "edges", e2,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
+    _persist_table(
+        store, spark, "edges", e2, "publication_id", changed_e,
         n_buckets=8, is_full=False,
-        changed_keys=changed_e,
     )
     monkeypatch.undo()
     got_e = {
@@ -1242,67 +1220,6 @@ def test_persist_helpers_changed_keys_skip_stored_read(
     assert any(
         e == v_edge_boot for e in info_e["manifest"].values()
     )  # untouched buckets carried
-
-
-def test_persist_edge_fallback_single_read_null_safe(spark, tmp_path):
-    """Round-12 task #7 + ADVICE: the presence-diff FALLBACK (no key
-    set in hand) reads the stored edge table ONCE (one null-safe
-    full-outer join), identical null-pub edges stop churning through
-    `affected`, and a null-pub edge group survives the replace."""
-    from rialto_airflow_spark.dag import _persist_edge_table
-    from rialto_airflow_spark.storage import TableStore
-
-    store = TableStore(str(tmp_path))
-    e1 = spark.createDataFrame(
-        [(p, a) for p in range(10) for a in (1, 2)] + [(None, 50)],
-        "publication_id long, author_id long",
-    )
-    _persist_edge_table(
-        store, spark, "edges", e1,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=8, is_full=False,
-    )
-    v1 = store.current_info("edges")["path"]
-
-    # identical frame → presence diff finds nothing; the null edge
-    # must NOT land in affected (the old anti-join pair re-replaced
-    # the null group every run, and its inner-equality fragment
-    # dropped the rows — silent data loss)
-    _persist_edge_table(
-        store, spark, "edges", e1,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=8, is_full=False,
-    )
-    got = {
-        (r["publication_id"], r["author_id"])
-        for r in store.read(spark, "edges").collect()
-    }
-    assert (None, 50) in got and len(got) == 21
-
-    # a real change incl. a new null-pub edge round-trips
-    e2 = e1.unionByName(
-        spark.createDataFrame(
-            [(None, 51), (3, 9)], "publication_id long, author_id long"
-        )
-    )
-    _persist_edge_table(
-        store, spark, "edges", e2,
-        fan_key="publication_id",
-        key_cols=["publication_id", "author_id"],
-        n_buckets=8, is_full=False,
-    )
-    got = {
-        (r["publication_id"], r["author_id"])
-        for r in store.read(spark, "edges").collect()
-    }
-    assert got == {
-        (r["publication_id"], r["author_id"]) for r in e2.collect()
-    }
-    assert any(
-        e == v1 for e in store.current_info("edges")["manifest"].values()
-    )
 
 
 def test_harvest_dag_threads_changed_keys(spark, tmp_path, monkeypatch):
