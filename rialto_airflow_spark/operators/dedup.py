@@ -681,7 +681,6 @@ def semantic_dedup(
         centroids = kmeans_centroids(
             df, id_col, vec_col, k=k, max_iters=max_iters
         )
-    cids, cmat, cnorms = centroids
     # localCheckpoint: the assignment's mapInPandas pass (the most
     # expensive map over the corpus) feeds BOTH sides of the pair
     # self-join and the final flags output — materialize it once, the
@@ -689,7 +688,7 @@ def semantic_dedup(
     # apply (the operator is eager anyway: CC iterates to a collected
     # convergence flag)
     assigned = _centroid_assign(
-        df, id_col, vec_col, "__sid", 1, cids, cmat, cnorms
+        df, id_col, vec_col, "__sid", 1, centroids
     ).localCheckpoint()
     # the pair stage IS embedding_near_dups' blocked join (zero-norm
     # rows excluded there — their NaN cosine would otherwise pass any

@@ -24,7 +24,9 @@ shrink stored vectors to int8 codes + a per-vector scale.
 
 Cosine runs in double precision with deterministic summation order so
 the DuckDB oracle reproduces scores exactly; ranks tie-break on the
-neighbor id to stay stable under float jitter.
+neighbor id to stay stable under float jitter. Each search generates
+its own candidates; scoring and ranking are one shared path
+(``_cos``, ``_scored``, ``_collapse``, ``_top_k``).
 """
 
 from __future__ import annotations
@@ -69,8 +71,7 @@ def index_data_dir(path: str, name: str = "lists") -> str:
     the supported way to read index internals (tests, ops tooling).
     Resolves the commit log; legacy in-place layouts fall back to
     ``{path}/{name}``. For LSH indexes the rows live under
-    ``name="buckets"``; legacy LSH wrote the partitioned rows at
-    ``path`` itself, which ``name=""`` resolves."""
+    ``name="buckets"``."""
     import os
 
     base = _index_store(path).current_path()
@@ -166,6 +167,125 @@ def _load_centroids(spark, index_path: str):
     )
 
 
+# -- the shared search pipeline: every top-k search below is candidate
+# generation (its own) + these scoring and ranking steps (shared) ------
+
+
+def _cos(qv: str, qn: str, cv: str, cn: str) -> Column:
+    """The one score of every search: the cosine of two vector columns
+    from their precomputed norms, rounded to 6 places so the DuckDB
+    oracles reproduce it exactly."""
+    return F.round(dot(F.col(qv), F.col(cv)) / (F.col(qn) * F.col(cn)), 6)
+
+
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, s: str, *extra: Column
+) -> DataFrame:
+    """A search side as ``(out_id, __{s}v, __{s}n, *extra)`` — ``s`` is
+    ``"q"`` for the query side, ``"c"`` for the corpus side."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(out_id),
+        v.alias(f"__{s}v"),
+        norm(v).alias(f"__{s}n"),
+        *extra,
+    )
+
+
+def _assigned(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    s: str,
+    top_n: int,
+    centroids,
+) -> DataFrame:
+    """The centroid-assigned search side: each vector's ``top_n``
+    nearest inverted lists as ``(out_id, centroid_id, __{s}v,
+    __{s}n)``."""
+    top_n = min(top_n, len(centroids[0]))
+    return _centroid_assign(df, id_col, vec_col, out_id, top_n, centroids).select(
+        out_id,
+        "centroid_id",
+        F.col("__v").alias(f"__{s}v"),
+        F.col("__vn").alias(f"__{s}n"),
+    )
+
+
+def _lsh_probes(
+    queries: DataFrame, id_col: str, vec_col: str, bits: int, nprobe: int
+) -> DataFrame:
+    """The LSH query side: one row per (query, probed bucket ``__qb``)
+    — small by contract (the query batch × nprobe), so it broadcasts."""
+    probes = F.explode(probe_buckets(F.col(vec_col), bits, nprobe)).alias("__qb")
+    return _vectors(queries, id_col, vec_col, "query_id", "q", probes)
+
+
+def _probed(q: DataFrame, col: str) -> list:
+    """The distinct bucket or list ids a query side probes — at most
+    |queries| × nprobe ints, so they collect to the driver and become a
+    literal partition filter on the index read."""
+    return [r[col] for r in q.select(col).distinct().collect()]
+
+
+def _scored(
+    q: DataFrame,
+    c: DataFrame,
+    on: Column | None = None,
+    query_col: str = "query_id",
+    cv: str = "__cv",
+    cn: str = "__cn",
+) -> DataFrame:
+    """Score every candidate pair matching ``on`` — never a query
+    against itself — as ``(query_col, neighbor_id, score)``."""
+    not_self = F.col(query_col) != F.col("neighbor_id")
+    return q.join(c, not_self if on is None else on & not_self).select(
+        query_col, "neighbor_id", _cos("__qv", "__qn", cv, cn).alias("score")
+    )
+
+
+def _collapse(scored: DataFrame) -> DataFrame:
+    """One row per (query, neighbor) before ranking: duplicate index
+    rows (re-applied appends, pre-compaction) must not burn k slots —
+    ``row_number`` would give them consecutive ranks. Duplicates carry
+    identical stored values, so max(score) is exact. groupBy, not
+    dropDuplicates: Spark 4.1's optimizer miscompiles
+    dropDuplicates-under-rank-window inside exceptAll
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), and the aggregate gets
+    map-side partial combining anyway."""
+    return scored.groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score"))
+
+
+def _top_k(scored: DataFrame, k: int, query_col: str = "query_id") -> DataFrame:
+    """The one rank contract: per query, ``rank`` 1..k by score
+    descending, ties broken on ascending ``neighbor_id``, output
+    ``(query_col, rank, neighbor_id, score)``. One shuffle, on the
+    query column."""
+    w = Window.partitionBy(query_col).orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_col, "rank", "neighbor_id", "score")
+    )
+
+
+def _probe_topk(
+    q: DataFrame, idx: DataFrame, on: Column, k: int, quantized: bool | None
+) -> DataFrame:
+    """Top-k of the (broadcast) query side against a pruned index read.
+    ``quantized=None`` auto-detects int8 rows (``qvec``), which
+    dequantize in the scorer; scores use the stored ``vec_norm``."""
+    if quantized is None:
+        quantized = "qvec" in idx.columns
+    if quantized:
+        idx = idx.withColumn("vec", dequant())
+    scored = _scored(F.broadcast(q), idx, on, cv="vec", cn="vec_norm")
+    return _top_k(_collapse(scored), k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -178,33 +298,9 @@ def brute_force_topk(
     queries is expected to be small → broadcast; the corpus streams
     through map partitions; one shuffle for the per-query top-k window.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
-    )
-    sim = F.round(
-        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
-    )
-    scored = (
-        q.join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    q = F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "q"))
+    c = _vectors(ensure_parallelism(corpus), id_col, vec_col, "neighbor_id", "c")
+    return _top_k(_scored(q, c), k)
 
 
 def ivf_topk(
@@ -251,53 +347,17 @@ def ivf_topk(
     before ranking to keep assignment identical (ties then break on
     centroid_id ascending via the stable sort, as the oracle does).
     """
-    cids, cmat, cnorms = centroids or _pick_centroids(
-        corpus, id_col, vec_col, n_centroids
-    )
-    top = min(nprobe, len(cids))
-
-    def assign(side: DataFrame, out_id: str, top_n: int) -> DataFrame:
-        return _centroid_assign(
-            side, id_col, vec_col, out_id, top_n, cids, cmat, cnorms
-        )
-
+    cents = centroids or _pick_centroids(corpus, id_col, vec_col, n_centroids)
     # no ensure_parallelism here: the assignment is batch-vectorized
     # (one matmul per Arrow batch), so per-row CPU is negligible and a
     # repartition would only add a shuffle + N tiny Python crossings;
     # at real scale the parquet layout already provides parallelism
-    c = assign(corpus, "neighbor_id", 1).select(
-        "neighbor_id",
-        "centroid_id",
-        F.col("__v").alias("__cv"),
-        F.col("__vn").alias("__cn"),
-    )
-    q = F.broadcast(
-        assign(queries, "query_id", top).select(
-            "query_id",
-            "centroid_id",
-            F.col("__v").alias("__qv"),
-            F.col("__vn").alias("__qn"),
-        )
-    )
-    sim = F.round(
-        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
-    )
+    c = _assigned(corpus, id_col, vec_col, "neighbor_id", "c", 1, cents)
+    q = F.broadcast(_assigned(queries, id_col, vec_col, "query_id", "q", nprobe, cents))
     # no dedup needed: each corpus vector lives in exactly ONE inverted
     # list (top_n=1) and a query's nprobe probes hit distinct centroids,
     # so every (query, neighbor) pair matches at most once by construction
-    scored = q.join(
-        c,
-        (q["centroid_id"] == c["centroid_id"])
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).select("query_id", "neighbor_id", sim.alias("score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _top_k(_scored(q, c, q["centroid_id"] == c["centroid_id"]), k)
 
 
 def probe_buckets(vec: Column, bits: int = 8, nprobe: int = 1) -> Column:
@@ -349,41 +409,12 @@ def lsh_topk(
     corpus-persisted scale the complementary move is bucketBy(bucket)
     on write so probes become partition-pruned lookups.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col)).alias("__qn"),
-            F.explode(
-                probe_buckets(F.col(vec_col), bits, nprobe)
-            ).alias("__qb"),
-        )
-    )
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
+    q = F.broadcast(_lsh_probes(queries, id_col, vec_col, bits, nprobe))
+    c = _vectors(
+        ensure_parallelism(corpus), id_col, vec_col, "neighbor_id", "c",
         sign_bucket(F.col(vec_col), bits).alias("__cb"),
     )
-    sim = F.round(
-        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
-    )
-    scored = (
-        q.join(
-            c,
-            (F.col("__qb") == F.col("__cb"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select("query_id", "neighbor_id", sim.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _top_k(_scored(q, c, F.col("__qb") == F.col("__cb")), k)
 
 
 def write_lsh_index(
@@ -469,57 +500,11 @@ def lsh_topk_indexed(
     the scan — the plan test pins this). Scoring then reuses the
     broadcast-probe join shape of lsh_topk, so the index side is
     never shuffled either."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col)).alias("__qn"),
-            F.explode(
-                probe_buckets(F.col(vec_col), bits, nprobe)
-            ).alias("__qb"),
-        )
+    q = _lsh_probes(queries, id_col, vec_col, bits, nprobe)
+    idx = spark.read.parquet(index_data_dir(index_path, "buckets")).where(
+        F.col("bucket").isin(_probed(q, "__qb"))
     )
-    probed = [
-        r["__qb"] for r in q.select("__qb").distinct().collect()
-    ]  # driver-side-small by contract (query batch × nprobe)
-    rows_base = _index_store(index_path).current_path()
-    rows_dir = f"{rows_base}/buckets" if rows_base else index_path  # legacy: in-place
-    idx = spark.read.parquet(rows_dir).where(F.col("bucket").isin(probed))
-    if quantized is None:
-        quantized = "qvec" in idx.columns
-    if quantized:
-        idx = idx.withColumn("vec", dequant())
-    sim = F.round(
-        dot(F.col("__qv"), F.col("vec")) / (F.col("__qn") * F.col("vec_norm")),
-        6,
-    )
-    scored = (
-        q.join(
-            idx,
-            (F.col("__qb") == F.col("bucket"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select("query_id", "neighbor_id", sim.alias("score"))
-        # duplicate index rows (re-applied appends, pre-compaction)
-        # must not burn k slots: collapse the pair before ranking —
-        # duplicates carry identical stored values so max(score) is
-        # exact (round-9 fix; the old claim that ranking dedups was
-        # wrong: row_number gives duplicates consecutive ranks).
-        # groupBy, not dropDuplicates: Spark 4.1's optimizer
-        # miscompiles dropDuplicates-under-rank-window inside
-        # exceptAll (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) and the agg
-        # gets map-side partial combining anyway
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _probe_topk(q, idx, F.col("__qb") == F.col("bucket"), k, quantized)
 
 
 def _pick_centroids(corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int):
@@ -561,13 +546,12 @@ def _centroid_assign(
     vec_col: str,
     out_id: str,
     top_n: int,
-    cids,
-    cmat,
-    cnorms,
+    centroids,
 ) -> DataFrame:
-    """Vectorized inverted-list assignment: one numpy matmul + stable
-    argsort per Arrow batch (mapInPandas), emitting each vector's
-    ``top_n`` nearest centroids. Map-only — the input never shuffles.
+    """Vectorized inverted-list assignment under a (cids, cmat, cnorms)
+    ``centroids`` triple: one numpy matmul + stable argsort per Arrow
+    batch (mapInPandas), emitting each vector's ``top_n`` nearest
+    centroids. Map-only — the input never shuffles.
     NaN scores (zero-norm vectors) map to +inf so ranking matches the
     SQL oracles' NaN-first DESC order. Ids must be integral
     (:func:`_require_integral_ids`) — a lossy long cast would NULL
@@ -576,6 +560,7 @@ def _centroid_assign(
     import numpy as np
     import pandas as pd
 
+    cids, cmat, cnorms = centroids
     inp = side.select(
         F.col(id_col).cast("long").alias(out_id),
         F.col(vec_col).cast("array<double>").alias("__v"),
@@ -619,9 +604,8 @@ def _ivf_list_rows(
     (``vec_norm`` from the DEQUANTIZED vector), or PQ codes + true
     norm — shared by the build and the append so both always encode
     alike."""
-    cids, cmat, cnorms = centroids
     rows = _centroid_assign(
-        corpus, id_col, vec_col, "neighbor_id", 1, cids, cmat, cnorms
+        corpus, id_col, vec_col, "neighbor_id", 1, centroids
     ).select(
         "neighbor_id",
         F.col("__v").alias("vec"),
@@ -760,58 +744,10 @@ def ivf_topk_indexed(
     round-trip through Python), and scores are exact cosines of the
     reconstructed vectors, so ranking error is bounded by the
     quantizer's ≤ scale/2 elementwise reconstruction error."""
-    cids, cmat, cnorms = _load_centroids(spark, index_path)
-
-    q = F.broadcast(
-        _centroid_assign(
-            queries,
-            id_col,
-            vec_col,
-            "query_id",
-            min(nprobe, len(cids)),
-            cids,
-            cmat,
-            cnorms,
-        ).select(
-            "query_id",
-            "centroid_id",
-            F.col("__v").alias("__qv"),
-            F.col("__vn").alias("__qn"),
-        )
-    )
-    probed = [
-        r["centroid_id"] for r in q.select("centroid_id").distinct().collect()
-    ]  # |queries| × nprobe ids at most — driver-side small by contract
-    idx = _read_lists(spark, index_path, probed)
-    if quantized is None:
-        quantized = "qvec" in idx.columns
-    if quantized:
-        idx = idx.withColumn("vec", dequant())
-    sim = F.round(
-        dot(F.col("__qv"), F.col("vec")) / (F.col("__qn") * F.col("vec_norm")),
-        6,
-    )
-    scored = (
-        q.join(
-            idx,
-            (q["centroid_id"] == idx["centroid_id"])
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select("query_id", "neighbor_id", sim.alias("score"))
-        # collapse duplicate index rows before ranking (see
-        # lsh_topk_indexed — appended-twice entries otherwise occupy
-        # consecutive ranks and push real neighbors out of top-k)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    cents = _load_centroids(spark, index_path)
+    q = _assigned(queries, id_col, vec_col, "query_id", "q", nprobe, cents)
+    idx = _read_lists(spark, index_path, _probed(q, "centroid_id"))
+    return _probe_topk(q, idx, q["centroid_id"] == idx["centroid_id"], k, quantized)
 
 
 def append_ivf_index(
@@ -923,16 +859,9 @@ def ivf_pq_topk_indexed(
     nprobe/n_centroids of files that are themselves 64× smaller than
     float lists."""
     books = _load_pq_codebooks(spark, index_path)
-    cids, cmat, cnorms = _load_centroids(spark, index_path)
-
-    qa = _centroid_assign(
-        queries, id_col, vec_col, "query_id", min(nprobe, len(cids)),
-        cids, cmat, cnorms,
-    )
-    probed = [
-        r["centroid_id"] for r in qa.select("centroid_id").distinct().collect()
-    ]  # driver-small by contract
-    lists = _read_lists(spark, index_path, probed).select(
+    cents = _load_centroids(spark, index_path)
+    q = _assigned(queries, id_col, vec_col, "query_id", "q", nprobe, cents)
+    lists = _read_lists(spark, index_path, _probed(q, "centroid_id")).select(
         F.col("neighbor_id").alias("pq_id"), "pq_codes"
     )
     return pq_topk(lists, queries, id_col, vec_col, books, k=k)
@@ -1257,9 +1186,12 @@ def pq_topk(
             denom = qnorms[:, None] * rn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(denom > 0, dots / denom, 0.0)
-            cos = np.where(qids[:, None] == ids[None, :], -np.inf, cos)
+            cos = np.where(qids[:, None] == ids[None, :], -np.inf, np.round(cos, 6))
             t = min(take, n)
-            top = np.argpartition(-cos, t - 1, axis=1)[:, :t]
+            # each query's best t in the rank contract's own order
+            # (score desc, id asc): a tie at the cut keeps the lowest
+            # ids, as the final ranking would
+            top = np.lexsort((np.broadcast_to(ids, cos.shape), -cos))[:, :t]
             rows_q = np.repeat(np.arange(nq), t)
             rows_i = top.reshape(-1)
             keep = np.isfinite(cos[rows_q, rows_i])
@@ -1267,28 +1199,14 @@ def pq_topk(
                 {
                     "query_id": qids[rows_q[keep]],
                     "neighbor_id": ids[rows_i[keep]],
-                    "score": np.round(cos[rows_q[keep], rows_i[keep]], 6),
+                    "score": cos[rows_q[keep], rows_i[keep]],
                 }
             )
 
-    scored = (
-        corpus_codes.select("pq_id", "pq_codes")
-        .mapInPandas(
-            batches, "query_id long, neighbor_id long, score double"
-        )
-        # collapse duplicate index rows before ranking (see
-        # lsh_topk_indexed) — ADC scores of duplicates are identical
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
+    scored = corpus_codes.select("pq_id", "pq_codes").mapInPandas(
+        batches, "query_id long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _top_k(_collapse(scored), k)
 
 
 def quantize_embeddings(
@@ -1542,14 +1460,7 @@ def mine_hard_negatives(
     """
     q = F.broadcast(
         positives.select(F.col(query_col)).distinct()
-        .join(
-            corpus.select(
-                F.col(id_col).alias(query_col),
-                F.col(vec_col).alias("__qv"),
-                norm(F.col(vec_col)).alias("__qn"),
-            ),
-            query_col,
-        )
+        .join(_vectors(corpus, id_col, vec_col, query_col, "q"), query_col)
         .where(F.col("__qn") > 0)
     )
     pos = F.broadcast(
@@ -1557,27 +1468,13 @@ def mine_hard_negatives(
             F.col(query_col), F.col(pos_col).alias("neighbor_id")
         ).distinct()
     )
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
+    c = _vectors(
+        ensure_parallelism(corpus), id_col, vec_col, "neighbor_id", "c"
     ).where(F.col("__cn") > 0)
-    sim = F.round(
-        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
+    scored = _scored(q, c, query_col=query_col).join(
+        pos, [query_col, "neighbor_id"], "left_anti"
     )
-    scored = (
-        q.join(c, F.col(query_col) != F.col("neighbor_id"))
-        .select(query_col, "neighbor_id", sim.alias("score"))
-        .join(pos, [query_col, "neighbor_id"], "left_anti")
-    )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_col, "rank", "neighbor_id", "score")
-    )
+    return _top_k(scored, k, query_col)
 
 
 def ivf_drift_stats(
@@ -1638,7 +1535,9 @@ def ivf_drift_stats(
         F.count(F.lit(1)).alias("n_index"),
     )
 
-    assigned = _centroid_assign(batch, id_col, vec_col, "__bid", 1, cids, cmat, cnorms)
+    assigned = _centroid_assign(
+        batch, id_col, vec_col, "__bid", 1, (cids, cmat, cnorms)
+    )
     bcos = dot(F.col("__v"), F.col("__ctr")) / (F.col("__vn") * F.col("__ctrn"))
     batch_side = assigned.join(cent, "centroid_id").agg(
         F.avg(bcos).alias("batch_mean_cos"),

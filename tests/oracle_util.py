@@ -34,12 +34,15 @@ def duckdb_run(sql: str, sf_dir: str):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    cur = con.execute(sql)
+    # execute the oracle once (some take minutes); rows and the pandas
+    # frame both read the materialized result
+    con.execute(f"CREATE TEMP TABLE __oracle AS {sql}")
+    cur = con.execute("SELECT * FROM __oracle")
     cols = [d[0] for d in cur.description]
     rows = cur.fetchall()
     pdf = None
     try:
-        pdf = con.execute(sql).df()
+        pdf = con.execute("SELECT * FROM __oracle").df()
     except Exception:
         pass
     con.close()

@@ -1932,6 +1932,81 @@ def test_mine_hard_negatives_excludes_zero_norm_vectors(spark):
     assert top["neighbor_id"] == 2, rows
 
 
+def test_topk_searches_share_the_rank_contract(spark, tmp_path):
+    """Every top-k search — in-memory, indexed (float and int8), PQ and
+    hard-negative mining — returns exactly (query col, rank,
+    neighbor_id, score), ranks 1..k, breaks exact score ties on
+    ascending neighbor_id and never returns the query itself. Ids 1,
+    3, 5, 7, 9 carry one identical vector (more ties than k), listed
+    in DESCENDING id order in one partition, so a cut that keeps the
+    first ties it meets instead of the lowest ids shows."""
+    import numpy as np
+
+    v = [1.0, 0.5, -0.25, 2.0, -1.0, 0.75, 0.1, -0.6]
+    tied = [9, 7, 5, 3, 1]
+    others = []
+    for i, oid in enumerate((2, 4, 6, 8)):
+        w = [-x for x in v]
+        w[i] += 0.3
+        others.append((oid, w))
+    corpus = spark.createDataFrame(
+        [(t, v) for t in tied] + others, "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    queries = corpus.where(F.col("vec_id").isin(1, 3))
+    k = 3
+    want = {q: sorted(set(tied) - {q})[:k] for q in (1, 3)}
+    # hand-built PQ codebooks: code 0 reconstructs v's half exactly
+    half = np.array(v).reshape(2, 4)
+    books = np.stack([np.stack([h, -h]) for h in half])
+    codes = S.pq_encode(corpus, "vec_id", "embedding", books)
+
+    paths = {}
+    for name, kw in (("lsh", {}), ("lsh8", {"quantize": True})):
+        paths[name] = str(tmp_path / name)
+        S.write_lsh_index(corpus, paths[name], "vec_id", "embedding", **kw)
+    for name, kw in (
+        ("ivf", {}), ("ivf8", {"quantize": True}), ("ivfpq", {"pq_codebooks": books})
+    ):
+        paths[name] = str(tmp_path / name)
+        S.write_ivf_index(
+            corpus, paths[name], "vec_id", "embedding", n_centroids=2, **kw
+        )
+    positives = spark.createDataFrame(
+        [(1, 2), (3, 4)], "query_id long, positive_id long"
+    )
+    args = ("vec_id", "embedding")
+    searches = {
+        "brute_force_topk": S.brute_force_topk(corpus, queries, *args, k=k),
+        "ivf_topk": S.ivf_topk(corpus, queries, *args, k=k, n_centroids=2),
+        "lsh_topk": S.lsh_topk(corpus, queries, *args, k=k),
+        "pq_topk": S.pq_topk(codes, queries, *args, books, k=k),
+        "mine_hard_negatives": S.mine_hard_negatives(
+            corpus, positives, *args, k=k
+        ),
+        "ivf_pq_topk_indexed": S.ivf_pq_topk_indexed(
+            spark, paths["ivfpq"], queries, *args, k=k
+        ),
+    }
+    for name in ("lsh", "lsh8"):
+        searches[f"lsh_topk_indexed[{name}]"] = S.lsh_topk_indexed(
+            spark, paths[name], queries, *args, k=k
+        )
+    for name in ("ivf", "ivf8"):
+        searches[f"ivf_topk_indexed[{name}]"] = S.ivf_topk_indexed(
+            spark, paths[name], queries, *args, k=k
+        )
+    for name, df in searches.items():
+        assert df.columns == ["query_id", "rank", "neighbor_id", "score"], name
+        got = {}
+        for r in sorted(df.collect()):
+            got.setdefault(r.query_id, []).append(r)
+        assert sorted(got) == [1, 3], (name, got)
+        for q, rows in got.items():
+            assert [r.rank for r in rows] == list(range(1, k + 1)), (name, rows)
+            assert [r.neighbor_id for r in rows] == want[q], (name, rows)
+            assert len({r.score for r in rows}) == 1, (name, rows)
+
+
 def test_weighted_sample_u_zero_row_still_drawable(spark, monkeypatch):
     """Round-6 "wrong" #1 regression: hash_uniform can return exactly
     0 (p = 2^-32 per row); F.log(0) is NULL and NULLs sort out of
