@@ -518,7 +518,14 @@ def _persist_table(
 def build_publish_dag() -> Dag:
     """publish_to_reports task graph (publish_to_reports.py:17-61):
     check_harvest_complete (short-circuit) → the four marts →
-    download files."""
+    download files.
+
+    The marts share their intermediates (plans.marts): the base —
+    covered publications with their federal flag — is built and cut
+    once in ``publish_publications``, the author fan-out of that base
+    once in ``publish_by_school``, and each mart is its projection +
+    dropDuplicates over one of the two, the same composition as its
+    public ``mart_*`` function."""
     from rialto_airflow_spark.operators.merge import apply_mart_parts
     from rialto_airflow_spark.plans import marts as M
     from rialto_airflow_spark.plans import watermark as W
@@ -532,31 +539,34 @@ def build_publish_dag() -> Dag:
     @dag.task("publish_publications", upstream=("check_harvest_complete",))
     def pubs_mart(ctx):
         if ctx["publish_ok"]:
-            # each mart is consumed 2-3x (store snapshot, download
-            # CSV, caller asserts); cut so each consumer neither
-            # replans nor recomputes the mart chain (_cut_lineage)
-            ctx["mart_publications"] = _cut_lineage(M.mart_publications(
-                ctx["pubs"], ctx["funder_edges"], ctx["funders"]
-            ))
+            # the base feeds all four marts and the fan-out three: cut
+            # each once so no mart re-plans or recomputes them; each
+            # mart is consumed 2-3x (store snapshot, download CSV,
+            # caller asserts), so it is cut too (_cut_lineage)
+            ctx["__mart_base"] = _cut_lineage(
+                M._base(ctx["pubs"], ctx["funder_edges"], ctx["funders"])
+            )
+            ctx["mart_publications"] = _cut_lineage(
+                M._publications(ctx["__mart_base"])
+            )
 
     @dag.task("publish_by_school", upstream=("publish_publications",))
     def school(ctx):
         if ctx["publish_ok"]:
-            ctx["mart_by_school"] = _cut_lineage(
-                M.mart_publications_by_school(
-                    ctx["pubs"], ctx["author_edges"], ctx["authors"],
-                    ctx["funder_edges"], ctx["funders"],
+            ctx["__mart_fan_out"] = _cut_lineage(
+                M._author_join(
+                    ctx["__mart_base"], ctx["author_edges"], ctx["authors"]
                 )
+            )
+            ctx["mart_by_school"] = _cut_lineage(
+                M._by_school(ctx["__mart_fan_out"])
             )
 
     @dag.task("publish_by_department", upstream=("publish_by_school",))
     def dept(ctx):
         if ctx["publish_ok"]:
             ctx["mart_by_department"] = _cut_lineage(
-                M.mart_publications_by_department(
-                    ctx["pubs"], ctx["author_edges"], ctx["authors"],
-                    ctx["funder_edges"], ctx["funders"],
-                )
+                M._by_department(ctx["__mart_fan_out"])
             )
 
     @dag.task("publish_by_author", upstream=("publish_by_department",))
@@ -595,10 +605,7 @@ def build_publish_dag() -> Dag:
                 )
             else:
                 ctx["mart_by_author"] = _cut_lineage(
-                    M.mart_publications_by_author(
-                        ctx["pubs"], ctx["author_edges"], ctx["authors"],
-                        ctx["funder_edges"], ctx["funders"],
-                    )
+                    M._by_author(ctx["__mart_fan_out"])
                 )
 
     @dag.task("publish_to_store", upstream=("publish_by_author",))

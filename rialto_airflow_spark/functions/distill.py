@@ -14,6 +14,15 @@ sulpub_json, wos_json, pubmed_json, crossref_json) and returns the
 frame with every distilled column added. Column dependency order
 (apc needs types/pub_year/open_access — harvest_incremental/
 distill.py:42-55) is honored inside.
+
+Shared nodes are parsed once: the WoS name list and the PubMed author
+list (each author's ORCID extracted with it) are private columns of one
+projection that every distiller reads, and ``types``, the author names
+and the ISSN union are computed once in the tier before the outputs.
+A dict-or-list node written inline in N expressions would otherwise be
+parsed N times per row: CollapseProject keeps a projected column only
+when its consumers reference it more than once, and inlines it
+everywhere else.
 """
 
 from __future__ import annotations
@@ -22,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rialto_airflow_spark.functions.normalize import normalize_orcid, piped
+from rialto_airflow_spark.functions.perf import bind_once
 from rialto_airflow_spark.functions.rules import (
     capitalize,
     dict_or_list,
@@ -36,14 +46,22 @@ from rialto_airflow_spark.schemas import PAYLOAD_DDL
 
 SRC = ("openalex", "dim", "sulpub", "wos", "pubmed", "crossref")
 
+# private columns distill() adds and drops again: the shared XML nodes
+# (parsed once, read by every distiller) and the tier-2 values that
+# later columns depend on
+_WOS_NAMES = "__wos_names"
+_PUBMED_AUTHORS = "__pubmed_authors"
+_TYPES = "__types"
+_NAMES = "__names"
+_ISSNS = "__issns"
+
 
 def parse_payloads(df: DataFrame) -> DataFrame:
     """Parse the six raw JSON payload columns into typed structs
     (schemas.PAYLOAD_DDL). Raw columns are preserved losslessly."""
-    out = df
-    for src in SRC:
-        out = out.withColumn(src, F.from_json(F.col(f"{src}_json"), PAYLOAD_DDL[src]))
-    return out
+    return df.withColumns(
+        {src: F.from_json(F.col(f"{src}_json"), PAYLOAD_DDL[src]) for src in SRC}
+    )
 
 
 # --- payload fragment helpers ----------------------------------------------
@@ -60,11 +78,20 @@ def _wos_names() -> Column:
 
 
 def _pubmed_authors() -> Column:
-    """PubMed AuthorList.Author normalized to an array; Identifier
-    stays raw (itself dict-or-list)."""
-    return dict_or_list(
+    """PubMed AuthorList.Author normalized to an array of (ForeName,
+    LastName, orcid): each author's ORCID is extracted from its
+    dict-or-list Identifier node here, once."""
+    authors = dict_or_list(
         F.col("pubmed.MedlineCitation.Article.AuthorList.Author"),
         "ForeName: string, LastName: string, Identifier: string",
+    )
+    return F.transform(
+        authors,
+        lambda a: F.struct(
+            a["ForeName"].alias("ForeName"),
+            a["LastName"].alias("LastName"),
+            _pubmed_author_orcid(a).alias("orcid"),
+        ),
     )
 
 
@@ -292,8 +319,8 @@ def journal_issns() -> Column:
 
 def journal_issn() -> Column:
     """D7 — pipe-joined, empty union → null
-    (journal_issn.py:27-31)."""
-    issns = journal_issns()
+    (journal_issn.py:27-31); reads the union distill() computes once."""
+    issns = F.col(_ISSNS)
     return F.when(F.size(issns) > 0, piped(issns))
 
 
@@ -303,31 +330,40 @@ def journal_issn() -> Column:
 def _openalex_abstract() -> Column:
     """Inverted-index rebuild (distiller/abstract.py:64-94): place
     each word at its positions (later entries overwrite earlier),
-    unset positions are empty strings, space-join."""
+    unset positions are empty strings, space-join.
+
+    One sort of the (pos, entry_order, word) triples puts each slot's
+    entries side by side, the highest entry order last: the last
+    entry of a slot is its word, and the first entry of a slot
+    carries the separator, one space per position since the previous
+    slot (a gap of k positions is k spaces, as joining k-1 empty
+    strings gives). Negative and NULL positions are dropped; an index
+    with no position left is NULL, like an empty or missing one."""
     idx = F.col("openalex.abstract_inverted_index")
-    # (pos, entry_order, word) triples; max entry order wins a slot,
-    # matching dict-iteration overwrite semantics
-    entries = F.map_entries(idx)
     triples = F.flatten(
         F.transform(
-            entries,
+            F.map_entries(idx),
             lambda e, i: F.transform(
                 e["value"], lambda p: F.struct(p.alias("pos"), i.alias("ord"), e["key"].alias("word"))
             ),
         )
     )
-    max_pos = F.array_max(F.transform(triples, lambda t: t["pos"]))
-    words = F.transform(
-        F.sequence(F.lit(0), max_pos),
-        lambda i: F.coalesce(
-            F.get(
-                F.reverse(F.array_sort(F.filter(triples, lambda t: t["pos"] == i))),
-                0,
-            )["word"],
-            F.lit(""),
-        ),
-    )
-    return F.when(idx.isNotNull() & (F.size(entries) > 0), F.array_join(words, " "))
+    placed = F.array_sort(F.filter(triples, lambda t: t["pos"] >= 0))
+
+    def rebuild(s: Column) -> Column:
+        def piece(t: Column, j: Column) -> Column:
+            prev, nxt = F.get(s, j - 1)["pos"], F.get(s, j + 1)["pos"]
+            gap = t["pos"] - F.coalesce(prev, F.lit(0))
+            return F.concat(
+                F.when(F.coalesce(prev != t["pos"], F.lit(True)), F.repeat(F.lit(" "), gap))
+                .otherwise(F.lit("")),
+                F.when(F.coalesce(nxt != t["pos"], F.lit(True)), t["word"])
+                .otherwise(F.lit("")),
+            )
+
+        return F.when(F.size(s) > 0, F.array_join(F.transform(s, piece), ""))
+
+    return bind_once(placed, rebuild)
 
 
 def _pubmed_abstract() -> Column:
@@ -399,9 +435,9 @@ def author_list_names() -> Column:
         lambda a: F.concat(a["first_name"], F.lit(" "), a["last_name"]),
     )
     pubmed = F.transform(
-        _pubmed_authors(), lambda a: F.concat_ws(" ", a["ForeName"], a["LastName"])
+        F.col(_PUBMED_AUTHORS), lambda a: F.concat_ws(" ", a["ForeName"], a["LastName"])
     )
-    wos = F.transform(_wos_names(), lambda n: n["display_name"])
+    wos = F.transform(F.col(_WOS_NAMES), lambda n: n["display_name"])
     crossref = F.transform(
         F.col("crossref.author"), lambda a: F.concat_ws(" ", a["given"], a["family"])
     )
@@ -450,8 +486,8 @@ def author_list_orcids() -> Column:
         F.col("openalex.authorships"), lambda a: a["author"]["orcid"]
     )
     dim = F.flatten(F.transform(F.col("dim.authors"), lambda a: a["orcid"]))
-    pubmed = F.transform(_pubmed_authors(), _pubmed_author_orcid)
-    wos = F.transform(_wos_names(), lambda n: n["orcid_id"])
+    pubmed = F.transform(F.col(_PUBMED_AUTHORS), lambda a: a["orcid"])
+    wos = F.transform(F.col(_WOS_NAMES), lambda n: n["orcid_id"])
     crossref = F.transform(F.col("crossref.author"), lambda a: a["ORCID"])
     arr = F.array().cast("array<string>")
     for leg in (openalex, dim, pubmed, wos, crossref):
@@ -467,8 +503,8 @@ def _positional_orcid(pos: int) -> Column:
     (pos=1 first author, pos=-1 last), normalized."""
     openalex = F.try_element_at(F.col("openalex.authorships"), F.lit(pos))["author"]["orcid"]
     dim = F.get(F.try_element_at(F.col("dim.authors"), F.lit(pos))["orcid"], 0)
-    pubmed = _pubmed_author_orcid(F.try_element_at(_pubmed_authors(), F.lit(pos)))
-    wos = F.try_element_at(_wos_names(), F.lit(pos))["orcid_id"]
+    pubmed = F.try_element_at(F.col(_PUBMED_AUTHORS), F.lit(pos))["orcid"]
+    wos = F.try_element_at(F.col(_WOS_NAMES), F.lit(pos))["orcid_id"]
     crossref = F.try_element_at(F.col("crossref.author"), F.lit(pos))["ORCID"]
     raw = first_of(openalex, dim, pubmed, wos, crossref)
     return F.when(raw.isNotNull(), normalize_orcid(raw))
@@ -580,24 +616,38 @@ def distill(
     issn_source_dim: (issn, display_name, host_organization_name) —
         materialized ISSN→OpenAlex-Source lookup (S10); broadcast-
         joined for the publisher/journal_name fallbacks.
+
+    One ``withColumns`` per dependency tier: the six payload structs;
+    the shared XML nodes (WoS names, PubMed authors with their
+    ORCIDs); ``types``, the author names and the ISSN union, which
+    later columns read; then the sixteen outputs in their column
+    order. A column already in ``df`` keeps its position.
     """
-    out = parse_payloads(df)
-    out = out.withColumn("types", types())
-    out = out.withColumn("title", title())
-    out = out.withColumn("pub_year", pub_year())
-    out = out.withColumn("open_access", open_access(F.col("types")))
-    out = out.withColumn("journal_issn", journal_issn())
-    out = out.withColumn("abstract", abstract())
-    out = out.withColumn("citation_count", citation_count())
-    out = out.withColumn("author_list_names", author_list_names())
-    out = out.withColumn("first_author_name", first_author_name(F.col("author_list_names")))
-    out = out.withColumn("last_author_name", last_author_name(F.col("author_list_names")))
-    out = out.withColumn("author_list_orcids", author_list_orcids())
-    out = out.withColumn("first_author_orcid", first_author_orcid())
-    out = out.withColumn("last_author_orcid", last_author_orcid())
-    out = out.withColumn("pages", pages())
-    out = out.withColumn("issue", issue())
-    out = out.withColumn("volume", volume())
+    out = parse_payloads(df).withColumns(
+        {_WOS_NAMES: _wos_names(), _PUBMED_AUTHORS: _pubmed_authors()}
+    )
+    out = out.withColumns(
+        {_TYPES: types(), _NAMES: author_list_names(), _ISSNS: journal_issns()}
+    )
+    names = F.col(_NAMES)
+    out = out.withColumns({
+        "types": F.col(_TYPES),
+        "title": title(),
+        "pub_year": pub_year(),
+        "open_access": open_access(F.col(_TYPES)),
+        "journal_issn": journal_issn(),
+        "abstract": abstract(),
+        "citation_count": citation_count(),
+        "author_list_names": names,
+        "first_author_name": first_author_name(names),
+        "last_author_name": last_author_name(names),
+        "author_list_orcids": author_list_orcids(),
+        "first_author_orcid": first_author_orcid(),
+        "last_author_orcid": last_author_orcid(),
+        "pages": pages(),
+        "issue": issue(),
+        "volume": volume(),
+    })
 
     # --- ISSN→source fallback for publisher / journal_name (S10) ---
     if issn_source_dim is not None:
@@ -605,7 +655,7 @@ def distill(
         # the first ISSN (in sorted piped order) that has a dim entry
         exploded = out.select(
             F.col(id_col).alias("__pid"),
-            F.posexplode_outer(journal_issns()).alias("__pos", "__issn"),
+            F.posexplode_outer(F.col(_ISSNS)).alias("__pos", "__issn"),
         )
         hit = (
             exploded.join(F.broadcast(issn_source_dim), F.col("__issn") == F.col("issn"))
@@ -627,16 +677,15 @@ def distill(
         )
         out = out.join(hit, out[id_col] == hit["__pid"], "left").drop("__pid")
     else:
-        out = out.withColumn("__issn_journal", F.lit(None).cast("string"))
-        out = out.withColumn("__issn_publisher", F.lit(None).cast("string"))
+        out = out.withColumns({
+            "__issn_journal": F.lit(None).cast("string"),
+            "__issn_publisher": F.lit(None).cast("string"),
+        })
 
-    out = out.withColumn(
-        "publisher", first_of(_openalex_publisher(), F.col("__issn_publisher"))
-    )
-    out = out.withColumn(
-        "journal_name", first_of(_openalex_journal_name(), F.col("__issn_journal"))
-    )
-    out = out.drop("__issn_journal", "__issn_publisher")
+    out = out.withColumns({
+        "publisher": first_of(_openalex_publisher(), F.col("__issn_publisher")),
+        "journal_name": first_of(_openalex_journal_name(), F.col("__issn_journal")),
+    }).drop("__issn_journal", "__issn_publisher")
 
     # --- APC (D8): dataset lookup keyed by each dim ISSN in payload
     # order, first dataset row in dataset order (apc/__init__.py:14-27)
@@ -674,4 +723,4 @@ def distill(
         "apc", apc_final(apc_first, F.col("types"), F.col("open_access"))
     ).drop("__apc_dataset")
 
-    return out.drop(*SRC)
+    return out.drop(*SRC, _WOS_NAMES, _PUBMED_AUTHORS, _TYPES, _NAMES, _ISSNS)

@@ -207,6 +207,9 @@ def link_funders(
 
     Returns (funder_dim_out, funder_edges_out). Funder upsert is a
     MERGE on grid_id (M3); edge insert is union+dropDuplicates (M4).
+    Both read the resolved (publication, funder) rows, which are
+    materialized once (``materialize_cut``), so the explodes and the
+    broadcast joins run once rather than once per output.
     """
     unlinked = pubs_parsed.join(
         funder_edges,
@@ -283,6 +286,7 @@ def link_funders(
         resolved = dim_resolved.unionByName(oa_resolved)
     else:
         resolved = dim_resolved
+    resolved = materialize_cut(resolved)
 
     # --- M3 funder MERGE on grid_id + M4 edge union ---
     new_funders = (

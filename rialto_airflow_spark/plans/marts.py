@@ -55,38 +55,114 @@ def _with_federal(pubs: DataFrame, funder_edges: DataFrame, funders: DataFrame) 
     )
 
 
-def mart_publications(
-    pubs: DataFrame, funder_edges: DataFrame, funders: DataFrame
-) -> DataFrame:
-    """publications — 1 row per publication
-    (publish/publication.py:40-118). Expects distilled columns."""
-    return (
-        _with_federal(pubs.where(source_coverage()), funder_edges, funders)
-        .select(
-            "doi",
-            "pub_year",
-            "apc",
-            piped("author_list_names").alias("author_list_names"),
-            "open_access",
-            piped("types").alias("types"),
-            "publisher",
-            "journal_name",
-            "title",
-            "federally_funded",
-            "academic_council_authored",
-            "faculty_authored",
-        )
-        .dropDuplicates()
-    )
-
-
 def _author_join(pubs: DataFrame, author_edges: DataFrame, authors: DataFrame) -> DataFrame:
+    """The author fan-out: one row per (pub, linked author)."""
     return pubs.join(
         author_edges, pubs["id"] == author_edges["publication_id"]
     ).join(authors.select(
         F.col("id").alias("__aid"), "sunet", "orcid", "role", "academic_council",
         "primary_school", "primary_dept",
     ), F.col("author_id") == F.col("__aid"))
+
+
+# Each mart is one composition: the base (covered publications with
+# their federal flag), for the three author-grain marts the author
+# fan-out of that base, then the mart's projection + dropDuplicates.
+# The public mart_* functions compose the three steps; the publish DAG
+# builds the base and the fan-out once and projects all four marts
+# from them.
+
+
+def _base(pubs: DataFrame, funder_edges: DataFrame, funders: DataFrame) -> DataFrame:
+    """P2 + A1: the publications every mart reads, each with its
+    federally_funded flag."""
+    return _with_federal(pubs.where(source_coverage()), funder_edges, funders)
+
+
+def _publications(base: DataFrame) -> DataFrame:
+    return base.select(
+        "doi",
+        "pub_year",
+        "apc",
+        piped("author_list_names").alias("author_list_names"),
+        "open_access",
+        piped("types").alias("types"),
+        "publisher",
+        "journal_name",
+        "title",
+        "federally_funded",
+        "academic_council_authored",
+        "faculty_authored",
+    ).dropDuplicates()
+
+
+def _by_school(fan_out: DataFrame) -> DataFrame:
+    return fan_out.select(
+        "academic_council_authored",
+        "apc",
+        "doi",
+        "faculty_authored",
+        "federally_funded",
+        "open_access",
+        "primary_school",
+        "pub_year",
+        piped("types").alias("types"),
+    ).dropDuplicates()
+
+
+def _by_department(fan_out: DataFrame) -> DataFrame:
+    return fan_out.select(
+        "academic_council_authored",
+        "apc",
+        "doi",
+        "faculty_authored",
+        "federally_funded",
+        "open_access",
+        "primary_school",
+        F.col("primary_dept").alias("primary_department"),
+        "pub_year",
+        piped("types").alias("types"),
+    ).dropDuplicates()
+
+
+def _by_author(fan_out: DataFrame) -> DataFrame:
+    return fan_out.select(
+        "abstract",
+        piped("author_list_names").alias("author_list_names"),
+        piped("author_list_orcids").alias("author_list_orcids"),
+        F.col("academic_council").alias("academic_council"),
+        "apc",
+        "citation_count",
+        "doi",
+        "federally_funded",
+        "first_author_name",
+        "first_author_orcid",
+        "issue",
+        "last_author_name",
+        "last_author_orcid",
+        "journal_name",
+        "open_access",
+        "orcid",
+        "pages",
+        "primary_school",
+        F.col("primary_dept").alias("primary_department"),
+        "publisher",
+        "role",
+        "sunet",
+        "pub_year",
+        "title",
+        piped("types").alias("types"),
+        "volume",
+        F.lit(None).cast("string").alias("grant_ids"),
+    ).dropDuplicates(["doi", "sunet"])
+
+
+def mart_publications(
+    pubs: DataFrame, funder_edges: DataFrame, funders: DataFrame
+) -> DataFrame:
+    """publications — 1 row per publication
+    (publish/publication.py:40-118). Expects distilled columns."""
+    return _publications(_base(pubs, funder_edges, funders))
 
 
 def mart_publications_by_school(
@@ -98,21 +174,8 @@ def mart_publications_by_school(
 ) -> DataFrame:
     """publications_by_school — 1 row per (pub, distinct author
     primary_school) (publish/publication.py:120-181)."""
-    base = _with_federal(pubs.where(source_coverage()), funder_edges, funders)
-    return (
-        _author_join(base, author_edges, authors)
-        .select(
-            "academic_council_authored",
-            "apc",
-            "doi",
-            "faculty_authored",
-            "federally_funded",
-            "open_access",
-            "primary_school",
-            "pub_year",
-            piped("types").alias("types"),
-        )
-        .dropDuplicates()
+    return _by_school(
+        _author_join(_base(pubs, funder_edges, funders), author_edges, authors)
     )
 
 
@@ -125,22 +188,8 @@ def mart_publications_by_department(
 ) -> DataFrame:
     """publications_by_department — 1 row per (pub, primary_school,
     primary_dept) (publish/publication.py:184-246)."""
-    base = _with_federal(pubs.where(source_coverage()), funder_edges, funders)
-    return (
-        _author_join(base, author_edges, authors)
-        .select(
-            "academic_council_authored",
-            "apc",
-            "doi",
-            "faculty_authored",
-            "federally_funded",
-            "open_access",
-            "primary_school",
-            F.col("primary_dept").alias("primary_department"),
-            "pub_year",
-            piped("types").alias("types"),
-        )
-        .dropDuplicates()
+    return _by_department(
+        _author_join(_base(pubs, funder_edges, funders), author_edges, authors)
     )
 
 
@@ -160,39 +209,8 @@ def mart_publications_by_author(
     values), so this mart is a pure projection. grant_ids exists in
     the schema but is never populated (reports.py:85) — kept null.
     """
-    base = _with_federal(pubs.where(source_coverage()), funder_edges, funders)
-    return (
-        _author_join(base, author_edges, authors)
-        .select(
-            "abstract",
-            piped("author_list_names").alias("author_list_names"),
-            piped("author_list_orcids").alias("author_list_orcids"),
-            F.col("academic_council").alias("academic_council"),
-            "apc",
-            "citation_count",
-            "doi",
-            "federally_funded",
-            "first_author_name",
-            "first_author_orcid",
-            "issue",
-            "last_author_name",
-            "last_author_orcid",
-            "journal_name",
-            "open_access",
-            "orcid",
-            "pages",
-            "primary_school",
-            F.col("primary_dept").alias("primary_department"),
-            "publisher",
-            "role",
-            "sunet",
-            "pub_year",
-            "title",
-            piped("types").alias("types"),
-            "volume",
-            F.lit(None).cast("string").alias("grant_ids"),
-        )
-        .dropDuplicates(["doi", "sunet"])
+    return _by_author(
+        _author_join(_base(pubs, funder_edges, funders), author_edges, authors)
     )
 
 

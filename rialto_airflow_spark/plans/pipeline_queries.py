@@ -1008,9 +1008,14 @@ _SPAN_DISCLAIMER = (
 
 @register(
     "q47_curation_pipeline",
+    # edges is MATERIALIZED: DuckDB inlines a CTE at every reference,
+    # and the survivors chain below reaches `walk` by 24 reference
+    # paths, so each inlined copy of the recursion re-ran the whole
+    # MinHash chain (sf0.001: 553 s inlined, 10 s materialized, same
+    # rows)
     oracle=f"""
     WITH RECURSIVE {minhash_pair_ctes()},
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs

@@ -317,3 +317,107 @@ def test_empty_everything(spark, dims):
     assert r["author_list_orcids"] == []
     assert r["journal_issn"] is None
     assert r["apc"] is None
+
+
+def reference_abstract(index):
+    """Pure-Python copy of the OpenAlex rebuild (distiller/abstract.py
+    :64-94): a list as long as the highest position + 1, each word
+    written at its positions in index order (a later entry overwrites
+    an earlier one), unset slots empty, space-joined. A missing or
+    empty index has no abstract."""
+    if not index:
+        return None
+    positions = [p for ps in index.values() for p in ps]
+    if not positions:
+        return None
+    words = [""] * (max(positions) + 1)
+    for word, ps in index.items():
+        for p in ps:
+            words[p] = word
+    return " ".join(words)
+
+
+def seeded_indexes(seed=11, n=120):
+    """Inverted indexes with gaps, shared slots (two words at one
+    position), repeated positions within a list and empty lists."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(40)]
+    out = []
+    for _ in range(n):
+        length = rng.randint(1, 60)
+        index = {}
+        for word in rng.sample(vocab, rng.randint(1, 25)):
+            k = rng.choice((0, 1, 1, 2, 3))
+            index[word] = [rng.randrange(length) for _ in range(k)]
+        out.append(index)
+    return out
+
+
+def test_abstract_rebuild_matches_reference(spark):
+    """The one-sort rebuild equals the pure-Python rebuild on seeded
+    indexes and on the edge shapes; where the Python copy cannot run
+    (a NULL position list, an index whose every list is empty, only
+    negative positions) the Spark result is pinned by name."""
+    edge = [
+        {"a": [0, 3], "b": [1]},                 # gap of two slots
+        {"a": [2], "b": [2], "c": [0]},          # later entry wins slot 2
+        {"a": [1, 1], "b": [1]},                 # repeated position
+        {"a": [], "b": [1]},                     # empty list, leading gap
+        {"x": [0], "y": [7], "z": [3, 5]},
+        {},                                      # empty map
+        None,                                    # missing index
+    ]
+    indexes = seeded_indexes() + edge
+    # assert the seeded set covers what the docstring claims
+    assert any(
+        len({w for w, ps in ix.items() if p in ps}) > 1
+        for ix in indexes if ix for p in range(60)
+    )
+    assert any(ix and any(ps == [] for ps in ix.values()) for ix in indexes)
+
+    pinned = {
+        "null_positions": ({"a": None, "b": [0]}, None),
+        "all_lists_empty": ({"a": [], "b": []}, None),
+        # OpenAlex never emits a negative position; such slots are
+        # dropped, so an index with only negative positions has none
+        "only_negative": ({"a": [-1]}, None),
+    }
+    rows = [
+        (i, json.dumps({"abstract_inverted_index": ix} if ix is not None else {}))
+        for i, ix in enumerate(indexes + [ix for ix, _ in pinned.values()])
+    ]
+    df = spark.createDataFrame(rows, "id bigint, openalex_json string")
+    for s in ("dim", "sulpub", "wos", "pubmed", "crossref"):
+        df = df.withColumn(f"{s}_json", F.lit(None).cast("string"))
+    got = {r["id"]: r["abstract"] for r in distill(df).select("id", "abstract").collect()}
+
+    for i, ix in enumerate(indexes):
+        assert got[i] == reference_abstract(ix), (ix, got[i])
+    for j, (name, (_ix, want)) in enumerate(pinned.items()):
+        assert got[len(indexes) + j] == want, name
+
+
+def test_shared_nodes_parse_once(spark, dims):
+    """The WoS name list and the PubMed author list (with each author's
+    Identifier node) are parsed in one projection that every distiller
+    reads: each dict-or-list node's two from_json forms (list, then
+    singleton) appear once in the optimized plan, so CollapseProject
+    did not inline them back into their consumers."""
+    apc, issn = dims
+    df = distill(
+        make_pub(spark, openalex=OPENALEX, wos=WOS_LIST, pubmed=PUBMED),
+        apc_dim=apc, issn_source_dim=issn,
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for fields in (
+        ("display_name", "orcid_id"),
+        ("ForeName", "LastName"),
+        ("@Source", "#text"),
+    ):
+        a, b = (f"StructField({f},StringType,true)" for f in fields)
+        assert plan.count(f"from_json(ArrayType(StructType({a},{b}") == 1, fields
+        assert plan.count(f"from_json({a}, {b}") == 1, fields
+    r = df.collect()[0]
+    assert r["author_list_orcids"] == ["0000-0001-0000-0001", "0000-0001-0000-0003"]

@@ -11,6 +11,7 @@ import random
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from rialto_airflow_spark.plans import harvest as H
 
@@ -246,3 +247,58 @@ def test_cli_from_store_reads_only_the_authors_edges(spark, tmp_path):
             break
         subtree.append(_node(line))
     assert any(n.startswith("Join LeftSemi") for n in subtree), subtree
+
+
+def test_link_funders_outputs_read_the_materialized_resolution(spark):
+    """Both link_funders outputs plan against the resolved (pub,
+    funder) rows materialized once: neither re-plans the payload
+    explodes (no Generate), and the rows are the expected ones."""
+    from rialto_airflow_spark.sources.dims import federal_funders
+
+    pubs = spark.createDataFrame(
+        [
+            (1, json.dumps({"funders": [
+                {"id": "grid.1", "name": "National Institutes of Health (NIH)"},
+                {"id": "grid.2", "name": "Acme Foundation"},
+                {"id": None, "name": "No Grid"},
+            ]}), json.dumps({"grants": [{"funder": "F9"}]})),
+            (2, None, json.dumps({"grants": [{"funder": "F9"}, {"funder": None}]})),
+            (3, json.dumps({"funders": [{"id": "grid.3", "name": "Linked"}]}), None),
+        ],
+        "id bigint, dim_json string, openalex_json string",
+    )
+    funders = spark.createDataFrame(
+        [], "grid_id string, name string, federal boolean, ror_id string, "
+            "openalex_id string, id bigint",
+    )
+    funder_edges = spark.createDataFrame(
+        [(3, 77)], "publication_id bigint, funder_id bigint"
+    )
+    federal = federal_funders(spark.createDataFrame(
+        [("National Institutes of Health (NIH)", "grid.x")], "name string, id string"
+    ))
+    oa_dim = spark.createDataFrame(
+        [("F9", "ror.9", "grid.9", "Nine Fund", True)],
+        "openalex_id string, ror_id string, grid_id string, name string, "
+        "federal boolean",
+    )
+    funders_out, edges_out = H.link_funders(
+        pubs, funders, funder_edges, federal, oa_dim
+    )
+    for out in (funders_out, edges_out):
+        gens = [l for l in _plan_lines(out) if re.match(r"Generate\b", _node(l))]
+        assert gens == [], gens
+    got = {r["grid_id"]: (r["name"], r["federal"]) for r in funders_out.collect()}
+    assert got == {
+        "grid.1": ("National Institutes of Health (NIH)", True),
+        "grid.2": ("Acme Foundation", False),
+        "grid.9": ("Nine Fund", True),
+    }
+    fid = {g: H.funder_surrogate_id(F.lit(g)) for g in got}
+    want = spark.range(1).select(
+        *[c.alias(g) for g, c in fid.items()]
+    ).collect()[0].asDict()
+    assert {tuple(r) for r in edges_out.collect()} == {
+        (3, 77), (1, want["grid.1"]), (1, want["grid.2"]),
+        (1, want["grid.9"]), (2, want["grid.9"]),
+    }
