@@ -777,8 +777,7 @@ class VersionedStore:
 
     * :meth:`new_version_path` names a fresh immutable version dir —
       write data there with Spark, then :meth:`commit` it.
-    * :meth:`current` resolves the live version (legacy single-file
-      pointers from the pre-log layout still resolve, read-only).
+    * :meth:`current` resolves the live version: the log's head.
     * :meth:`restore` is just another commit pointing at an old dir.
     * :meth:`vacuum` reclaims superseded/orphaned version dirs by
       count and/or age, never the current one.
@@ -797,12 +796,10 @@ class VersionedStore:
         root: str,
         backend: CommitBackend | None = None,
         version_prefix: str = "v",
-        legacy_pointer: str | None = None,
     ):
         self.root = root
         self.backend = backend or default_backend()
         self.version_prefix = version_prefix
-        self.legacy_pointer = legacy_pointer
         self.log = CommitLog(os.path.join(root, self.LOG_DIR), self.backend)
 
     # -- write side -------------------------------------------------
@@ -823,22 +820,16 @@ class VersionedStore:
     # -- read side --------------------------------------------------
     def current(self) -> dict | None:
         """Payload of the live commit (carries at least ``path`` and
-        ``committed_at``), or the legacy pointer's payload, or None."""
+        ``committed_at``), or None before the first commit."""
         head = self.log.head()
-        if head is not None:
-            return head[1]
-        if self.legacy_pointer:
-            raw = PosixBackend().read(self.legacy_pointer)
-            if raw is not None:
-                return json.loads(raw.decode("utf-8"))
-        return None
+        return head[1] if head is not None else None
 
     def current_path(self) -> str | None:
         cur = self.current()
         return cur["path"] if cur else None
 
     def current_seq(self) -> int | None:
-        """Head seq for CAS commits; None on an empty/legacy-only log."""
+        """Head seq for CAS commits; None on an empty log."""
         head = self.log.head()
         return head[0] if head else None
 
@@ -876,11 +867,7 @@ class VersionedStore:
                         current
                         and _canon(p) == _canon(current)
                     ),
-                    "committed": p in first_seq
-                    or bool(
-                        current
-                        and _canon(p) == _canon(current)
-                    ),
+                    "committed": p in first_seq,
                 }
             )
         out.sort(
@@ -910,16 +897,6 @@ class VersionedStore:
             name = name[len(self.version_prefix):]
         stem = name.split("-", 1)[0]
         return int(stem) / 1000.0 if stem.isdigit() else None
-
-    def _version_committed_at(self, path: str) -> float | None:
-        """When ``path`` FIRST went live, from the log; legacy dirs
-        fall back to the name-embedded timestamp."""
-        for _seq, payload in self.log.history():
-            if payload.get("path") == path:
-                ts = payload.get("committed_at")
-                if ts is not None:
-                    return float(ts)
-        return self._name_timestamp(path)
 
     def vacuum(
         self,

@@ -68,32 +68,6 @@ class Dag:
         return context
 
 
-def _cut_lineage(df):
-    """Bound plan growth at a chain fan-out point.
-
-    The dedupe and every merge reference their input MORE THAN ONCE
-    (candidates+anti, join+semi), so a lazily chained run's logical plan
-    doubles per stage — Catalyst analysis/physical planning over the
-    resulting tree is exponential in chain length (measured: the tiny
-    end-to-end DAG fixture spent ~6 min of pure driver CPU planning
-    the four mart writes). Truncating at each fan-out point keeps the
-    plan linear; the data cost is one materialization of a frame every
-    downstream consumer was going to execute (repeatedly) anyway.
-
-    Local mode: ``localCheckpoint`` (executor-local blocks are safe
-    there) replaces the logical plan outright. Cluster: ``persist`` +
-    eager count — consumers swap the cached subtree for
-    InMemoryRelation before the optimizer runs, bounding planner cost
-    per consumer while keeping recoverable lineage, and the eager
-    build stops AQE's concurrently-submitted consumer stages from
-    racing to compute the uncached prefix twice (round-12 finding;
-    shared with the query-side multi-consumer persists via
-    functions.perf.materialize_cut)."""
-    from rialto_airflow_spark.functions.perf import materialize_cut
-
-    return materialize_cut(df)
-
-
 def build_harvest_dag() -> Dag:
     """harvest_incremental task graph (harvest_incremental.py:46-227):
 
@@ -109,6 +83,7 @@ def build_harvest_dag() -> Dag:
     """
     from pyspark.sql import functions as F
 
+    from rialto_airflow_spark.functions.perf import materialize_cut
     from rialto_airflow_spark.plans import harvest as H
     from rialto_airflow_spark.plans import watermark as W
     from rialto_airflow_spark.sources.ingest import read_payload_batch
@@ -246,9 +221,13 @@ def build_harvest_dag() -> Dag:
         )
         # the three outputs plan against the already-materialized
         # loser map; cut them anyway so distill/link/orphans/marts
-        # plan against shallow frames instead of re-planning the
-        # upstream merge chain (see _cut_lineage)
-        pubs, ae, fe = _cut_lineage(pubs), _cut_lineage(ae), _cut_lineage(fe)
+        # plan against shallow frames. Each merge references its input
+        # more than once, so a lazily chained run's plan doubles per
+        # stage: uncut, the tiny end-to-end fixture spent ~6 min of
+        # driver CPU planning the four mart writes
+        pubs, ae, fe = (
+            materialize_cut(pubs), materialize_cut(ae), materialize_cut(fe)
+        )
         ctx["pubs"], ctx["author_edges"], ctx["funder_edges"] = pubs, ae, fe
         if _tracking(ctx):
             # losers are the run's pub deletes; survivors gain the
@@ -324,8 +303,8 @@ def build_harvest_dag() -> Dag:
         # dedupe-truncated chain in BOTH union branches, and every
         # downstream consumer (orphan removal, funder linking, four
         # marts, snapshot publish) would otherwise recompute it twice
-        # per action (trade-offs in _cut_lineage)
-        ctx["pubs"] = _cut_lineage(out)
+        # per action
+        ctx["pubs"] = materialize_cut(out)
 
     @dag.task("link_funders", upstream=("dedupe",))
     def link(ctx):
@@ -341,9 +320,9 @@ def build_harvest_dag() -> Dag:
             )
             # the link references pubs + both funder frames several
             # times and feeds four marts + complete(): cut here so
-            # each consumer replans a shallow frame (see _cut_lineage)
+            # each consumer replans a shallow frame
             ctx["funders"], ctx["funder_edges"] = (
-                _cut_lineage(funders), _cut_lineage(fe)
+                materialize_cut(funders), materialize_cut(fe)
             )
             if _tracking(ctx):
                 # pubs that JUST gained funder edges (P7 only processes
@@ -445,16 +424,6 @@ def build_harvest_dag() -> Dag:
     return dag
 
 
-def _stored_columns(store, spark, table, info) -> set[str]:
-    """Column names of the stored head: the commit payload's recorded
-    schema (a METADATA check, no data read), or the read's schema for
-    a payload that predates schema tracking."""
-    st = store._schema_of(info)
-    if st is None:
-        return set(store.read(spark, table).columns)
-    return set(st.fieldNames())
-
-
 def _fragment_for(new, key, changed):
     """Rows of ``new`` whose key is in ``changed`` — null-SAFE semi
     join, because the run's inserts can carry a null key (payload
@@ -498,7 +467,8 @@ def _persist_table(
     if info is None or "manifest" not in info:
         store.write_manifest(new, table, key, n_buckets=n_buckets)
         return
-    if is_full or _stored_columns(store, spark, table, info) != set(
+    # the recorded schema is a METADATA check: no stored data is read
+    if is_full or set(store._schema_of(info).fieldNames()) != set(
         new.columns
     ):
         store.write_manifest(
@@ -526,6 +496,7 @@ def build_publish_dag() -> Dag:
     once in ``publish_by_school``, and each mart is its projection +
     dropDuplicates over one of the two, the same composition as its
     public ``mart_*`` function."""
+    from rialto_airflow_spark.functions.perf import materialize_cut
     from rialto_airflow_spark.operators.merge import apply_mart_parts
     from rialto_airflow_spark.plans import marts as M
     from rialto_airflow_spark.plans import watermark as W
@@ -542,30 +513,30 @@ def build_publish_dag() -> Dag:
             # the base feeds all four marts and the fan-out three: cut
             # each once so no mart re-plans or recomputes them; each
             # mart is consumed 2-3x (store snapshot, download CSV,
-            # caller asserts), so it is cut too (_cut_lineage)
-            ctx["__mart_base"] = _cut_lineage(
+            # caller asserts), so it is cut too
+            ctx["__mart_base"] = materialize_cut(
                 M._base(ctx["pubs"], ctx["funder_edges"], ctx["funders"])
             )
-            ctx["mart_publications"] = _cut_lineage(
+            ctx["mart_publications"] = materialize_cut(
                 M._publications(ctx["__mart_base"])
             )
 
     @dag.task("publish_by_school", upstream=("publish_publications",))
     def school(ctx):
         if ctx["publish_ok"]:
-            ctx["__mart_fan_out"] = _cut_lineage(
+            ctx["__mart_fan_out"] = materialize_cut(
                 M._author_join(
                     ctx["__mart_base"], ctx["author_edges"], ctx["authors"]
                 )
             )
-            ctx["mart_by_school"] = _cut_lineage(
+            ctx["mart_by_school"] = materialize_cut(
                 M._by_school(ctx["__mart_fan_out"])
             )
 
     @dag.task("publish_by_department", upstream=("publish_by_school",))
     def dept(ctx):
         if ctx["publish_ok"]:
-            ctx["mart_by_department"] = _cut_lineage(
+            ctx["mart_by_department"] = materialize_cut(
                 M._by_department(ctx["__mart_fan_out"])
             )
 
@@ -604,7 +575,7 @@ def build_publish_dag() -> Dag:
                     inc["prev_mart_by_author"], *parts, "doi"
                 )
             else:
-                ctx["mart_by_author"] = _cut_lineage(
+                ctx["mart_by_author"] = materialize_cut(
                     M._by_author(ctx["__mart_fan_out"])
                 )
 

@@ -837,17 +837,10 @@ def _fingerprint_rows(
 def _minhash_store(path: str):
     """The index's shared versioned-store handle: commit-log layout
     under ``{path}/_commits`` (``commitlog.VersionedStore`` — one
-    object-store-safe commit protocol for every store in the engine),
-    with the pre-log ``INDEX.json`` pointer as read-only legacy."""
-    import os
-
+    object-store-safe commit protocol for every store in the engine)."""
     from ..commitlog import VersionedStore
 
-    return VersionedStore(
-        path,
-        version_prefix="v",
-        legacy_pointer=os.path.join(path, "INDEX.json"),
-    )
+    return VersionedStore(path, version_prefix="v")
 
 
 def minhash_index_current(path: str) -> tuple[str, str] | None:
@@ -856,17 +849,14 @@ def minhash_index_current(path: str) -> tuple[str, str] | None:
     the ``_commits`` log names the live one — the shared
     ``commitlog.VersionedStore`` discipline, so a REBUILD (compaction,
     retrain) publishes atomically while live probes keep reading the
-    snapshot they resolved. (Legacy ``INDEX.json`` pointers and bare
-    ``{path}/rows`` layouts still resolve, read-compatibly.)"""
+    snapshot they resolved. The log is the only record read: a
+    directory that no commit names does not resolve."""
     import os
 
     base = _minhash_store(path).current_path()
-    if base is not None:
-        return os.path.join(base, "rows"), os.path.join(base, "meta")
-    legacy = os.path.join(path, "rows")
-    if os.path.isdir(legacy):
-        return legacy, os.path.join(path, "meta")
-    return None
+    if base is None:
+        return None
+    return os.path.join(base, "rows"), os.path.join(base, "meta")
 
 
 def _minhash_index_meta(spark, meta_dir: str) -> tuple[int, int, int, int]:

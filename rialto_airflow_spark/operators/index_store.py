@@ -62,10 +62,9 @@ def salted_write(df: DataFrame, dest: str, part: str, salt_col: str, mode: str) 
     )
 
 
-def _data_dir(store, layout: IndexLayout, payload: dict) -> str:
-    """The data dir of the version ``payload`` names; pre-log layouts
-    keep it directly under the index root."""
-    return os.path.join(payload.get("path") or store.root, layout.data)
+def _data_dir(layout: IndexLayout, payload: dict) -> str:
+    """The data dir of the version ``payload`` names."""
+    return os.path.join(payload["path"], layout.data)
 
 
 def _carried(layout: IndexLayout, payload: dict) -> dict:
@@ -82,10 +81,12 @@ def read(
     ``keys`` (driver-small) prunes to those partition values: path
     selection on a manifest head, PartitionFilters otherwise."""
     if payload is None:
-        payload = store.current() or {}
+        payload = store.current()
+        if payload is None:
+            raise FileNotFoundError(f"no committed index at {store.root}")
     manifest = payload.get(layout.manifest_key)
     if manifest is None:
-        df = spark.read.parquet(_data_dir(store, layout, payload))
+        df = spark.read.parquet(_data_dir(layout, payload))
         return df if keys is None else df.where(F.col(layout.part).isin(list(keys)))
     sel = set(manifest) if keys is None else {str(k) for k in keys} & set(manifest)
     by_base: dict[str, set[int]] = {}
@@ -101,7 +102,7 @@ def read(
     if not parts:
         # empty selection: keep the index's schema (its id type, not
         # the caller's), so the empty case types like the others
-        return spark.read.parquet(_data_dir(store, layout, payload)).limit(0)
+        return spark.read.parquet(_data_dir(layout, payload)).limit(0)
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -188,13 +189,12 @@ def compact(
     rewrite and the commit. Returns the new version dir."""
     while True:
         head_seq = store.current_seq()
-        payload = store.current() or {}
-        old = payload.get("path")
-        if head_seq is None or old is None:
+        payload = store.current()
+        if head_seq is None or payload is None:
             raise FileNotFoundError(
-                f"no committed index at {store.root} (legacy layouts: "
-                "rebuild the index first)"
+                f"no committed index at {store.root}: build the index first"
             )
+        old = payload["path"]
         manifest = payload.get(layout.manifest_key)
         keys = None
         if max_files is not None:

@@ -58,9 +58,8 @@ def _index_store(path: str):
     ``commitlog.VersionedStore`` commit protocol (put-if-absent log,
     object-store-safe), same layer as TableStore and the MinHash
     index. A rebuild lands in a fresh ``{path}/v...`` dir and one
-    commit makes lists + centroids + codebooks live TOGETHER; the
-    pre-log in-place layout (lists/centroids directly under ``path``)
-    still resolves read-only via :func:`index_data_dir`."""
+    commit makes lists + centroids + codebooks live TOGETHER; readers
+    resolve that dir through the log (:func:`index_data_dir`)."""
     from ..commitlog import VersionedStore
 
     return VersionedStore(path, version_prefix="v")
@@ -69,14 +68,14 @@ def _index_store(path: str):
 def index_data_dir(path: str, name: str = "lists") -> str:
     """Current version's ``name`` data dir for a persisted index —
     the supported way to read index internals (tests, ops tooling).
-    Resolves the commit log; legacy in-place layouts fall back to
-    ``{path}/{name}``. For LSH indexes the rows live under
+    Resolves the commit log; an index with no committed version
+    raises FileNotFoundError. For LSH indexes the rows live under
     ``name="buckets"``."""
     import os
 
     base = _index_store(path).current_path()
     if base is None:
-        base = path
+        raise FileNotFoundError(f"no committed index at {path}")
     return os.path.join(base, name) if name else base
 
 

@@ -123,9 +123,11 @@ def q35_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q36_dedup_clusters",
+    # edges is MATERIALIZED, as in q47: DuckDB inlines a CTE at every
+    # reference, so the recursion re-ran the inlined MinHash chain
     oracle=f"""
     WITH RECURSIVE {minhash_pair_ctes()},
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -443,9 +445,8 @@ def q38_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"rialto_q38_ivf_{sf_dir.strip('/').replace('/', '_')}"
         f"_{int(st.st_mtime)}_{st.st_size}",
     )
-    # resolve through the commit log (index_data_dir): a committed
-    # version's lists dir exists; an absent/uncommitted index doesn't
-    if not os.path.isdir(S.index_data_dir(path, "lists")):
+    # built = the index's commit log names a live version
+    if S._index_store(path).current() is None:
         S.write_ivf_index(emb, path, "vec_id", "embedding", n_centroids=8)
     shortlist = S.ivf_topk_indexed(
         spark,

@@ -58,9 +58,9 @@ class TableStore:
     """Versioned parquet tables under a root directory.
 
     ``write`` lands a new version and atomically commits; ``read``
-    follows the commit log. Old versions are retained for time
-    travel / debugging until ``vacuum``. Pre-commit-log layouts
-    (``{name}.version.json`` pointer files) still resolve, read-only.
+    follows the commit log, the one record of which version is live.
+    Old versions are retained for time travel / debugging until
+    ``vacuum``.
     """
 
     def __init__(self, root: str, backend: CommitBackend | None = None):
@@ -86,7 +86,6 @@ class TableStore:
             os.path.join(self.root, name),
             backend=self.backend,
             version_prefix="",
-            legacy_pointer=os.path.join(self.root, f"{name}.version.json"),
         )
 
     def current_version(self, name: str) -> str | None:
@@ -999,17 +998,14 @@ class TableStore:
         the stored rows don't live in (and union coercion widens
         written rows to the recorded type anyway)."""
         key = info["bucket_key"]
-        st = self._schema_of(info)
-        if st is not None and key in st.fieldNames():
-            return F.col(key).cast(st[key].dataType)
-        return F.col(key)
+        return F.col(key).cast(self._schema_of(info)[key].dataType)
 
     @staticmethod
     def _null_bucket_id(spark: SparkSession, ktype, n_buckets: int) -> int:
         """The bucket a NULL key of type ``ktype`` hashes into —
         xxhash64 of a typed NULL, run through Spark so it matches the
         writers bit-for-bit."""
-        lit = F.lit(None).cast(ktype) if ktype is not None else F.lit(None)
+        lit = F.lit(None).cast(ktype)
         return (
             spark.range(1)
             .select(
@@ -1046,10 +1042,9 @@ class TableStore:
     def _read_paths(spark: SparkSession, st, paths: list[str]) -> DataFrame:
         """Read parquet ``paths`` under the commit-recorded schema
         ``st`` — carriers written before a column was added read it as
-        null (see :meth:`_read_manifest`); footer inference only for
-        pre-schema-tracking commits."""
-        reader = spark.read.schema(st) if st is not None else spark.read
-        return reader.parquet(*paths)
+        null (see :meth:`_read_manifest`). No file footer is consulted
+        for the schema."""
+        return spark.read.schema(st).parquet(*paths)
 
     def _cas_manifest(self, name: str, attempt):
         """Run one manifest read-modify-write and commit it CAS against
@@ -1111,12 +1106,14 @@ class TableStore:
 
     @staticmethod
     def _schema_of(payload: dict):
-        """The logical table schema a manifest commit recorded, or None
-        for pre-schema-tracking commits (read falls back to footer
-        inference — correct only while every carrier shares one
-        schema)."""
+        """The logical table schema a manifest commit recorded. Every
+        manifest writer records one; a payload without it is malformed
+        and raises."""
         if "schema" not in payload:
-            return None
+            raise ValueError(
+                f"manifest commit for {payload.get('path')!r} records no "
+                "schema — malformed commit payload"
+            )
         import json
 
         from pyspark.sql.types import StructType
@@ -1130,8 +1127,6 @@ class TableStore:
         change would make the recorded schema lie about carried files
         — fail loudly and point at the rebuild path instead of letting
         a later read error (or a silent parquet coercion) surface it."""
-        if old_st is None:
-            return
         old = {f.name: f.dataType for f in old_st.fields}
         for f in new_st.fields:
             if f.name in old and f.dataType != old[f.name]:
@@ -1154,12 +1149,7 @@ class TableStore:
         st = self._schema_of(payload)
         paths = self._manifest_paths(payload)
         if not paths:  # a committed empty table
-            if st is not None:
-                return spark.createDataFrame([], st)
-            raise FileNotFoundError(
-                "manifest version holds no buckets (empty table with no "
-                "recorded schema)"
-            )
+            return spark.createDataFrame([], st)
         return self._read_paths(spark, st, paths)
 
     def _write_buckets(
@@ -1317,8 +1307,6 @@ class TableStore:
             info["manifest"], info["n_buckets"], info["bucket_key"]
         )
         st = self._schema_of(info)
-        if st is None or key not in st.fieldNames():
-            return self._filter_keys(self.read(spark, name), key, vals)
         ktype = st[key].dataType
         probe = _local_df(
             spark, [(v,) for v in vals], f"`{key}` {ktype.simpleString()}"
@@ -1473,8 +1461,7 @@ class TableStore:
         them (e.g. the streaming mart's null-group re-fold) reads one
         bucket, never the table."""
         info = self._manifest_head(name)
-        st = self._schema_of(info)
-        ktype = st[info["bucket_key"]].dataType if st is not None else None
+        ktype = self._schema_of(info)[info["bucket_key"]].dataType
         return self._null_bucket_id(spark, ktype, info["n_buckets"])
 
     def read_buckets(
@@ -1552,7 +1539,7 @@ class TableStore:
         # fine file-form entries + a key set: read only the files whose
         # range can hold one of the keys. A requested NULL key is never
         # inside a range, so its bucket's files read whole.
-        prune = prune_keys is not None and st is not None
+        prune = prune_keys is not None
         null_b = None
         if prune and prune_keys.where(F.col(kcol).isNull()).limit(1).count():
             null_b = self._null_bucket_id(spark, st[kcol].dataType, n_v)
@@ -1577,12 +1564,7 @@ class TableStore:
                     "vacuumed — its carrier data is gone"
                 )
         if not paths:
-            if st is not None:
-                return spark.createDataFrame([], st)
-            raise FileNotFoundError(
-                f"table {name}: none of the requested buckets exist and "
-                "the version records no schema"
-            )
+            return spark.createDataFrame([], st)
         out = self._read_paths(spark, st, paths)
         if exact_filter:
             # coarse remnants / modulus translation pull in neighbor
@@ -1650,15 +1632,6 @@ class TableStore:
             )
 
             def rebuild(existing):
-                if existing is None:
-                    # legacy manifest with no recorded schema: an empty
-                    # slice shaped like the table (or, for an empty
-                    # table, the batch)
-                    existing = (
-                        self._read_manifest(spark, info).limit(0)
-                        if info["manifest"]
-                        else batch.limit(0)
-                    )
                 merged = merge_on_key(
                     existing,
                     batch,
@@ -1785,8 +1758,6 @@ class TableStore:
                 return hit
 
             def rebuild(slice_df):
-                if slice_df is None:
-                    slice_df = fragment.limit(0)
                 kept = slice_df.join(
                     F.broadcast(keys.withColumnRenamed(key, "__rk")),
                     slice_df[key].eqNullSafe(F.col("__rk")),
@@ -1819,16 +1790,11 @@ class TableStore:
         )
         carried: dict[int, list[list]] = {}
         if file_entries:
-            st = self._schema_of(info)
-            ktype = st[info["bucket_key"]].dataType if st is not None else None
-            if ktype is None or not self._file_cow_active(info):
-                # no recorded schema to cast ranges through (or the
-                # table config dropped file COW): read the dirty
-                # buckets whole — correct, coarser, self-healing back
-                # to the config's entry form
-                hit = {p for _b, fs in file_entries for p, _mn, _mx in fs}
-            else:
-                hit = file_hits(file_entries, ktype)
+            # file-form entries only exist under a file-COW config:
+            # every writer lands entries in, and carries, its head's
+            # config
+            ktype = self._schema_of(info)[info["bucket_key"]].dataType
+            hit = file_hits(file_entries, ktype)
             for b, fs in file_entries:
                 paths.extend(f[0] for f in fs if f[0] in hit)
                 keep = [f for f in fs if f[0] not in hit]
@@ -1849,9 +1815,8 @@ class TableStore:
     ) -> tuple[str, dict]:
         """One keyed O(changes) rewrite against head ``info``: read the
         ``dirty`` buckets' slice (:meth:`_dirty_slice`), ``rebuild`` it
-        into those buckets' new rows (it gets None for a legacy
-        schema-less table with nothing to read), write them into a
-        fresh version dir, and return ``(vdir, payload)`` for the CAS
+        into those buckets' new rows, write them into a fresh version
+        dir, and return ``(vdir, payload)`` for the CAS
         commit. Clean buckets are never read or written — they carry
         into the new manifest by reference."""
         st = self._schema_of(info)
@@ -1859,13 +1824,11 @@ class TableStore:
         paths, carried, remnants = self._dirty_slice(info, dirty, file_hits)
         if paths:
             existing = self._read_paths(spark, st, paths)
-        elif st is not None:
+        else:
             # brand-new buckets only (or an empty bootstrap — e.g. a
             # stream whose first micro-batch was empty): empty slice
             # with the recorded table schema
             existing = spark.createDataFrame([], st)
-        else:
-            existing = None
         out = rebuild(existing)
         self._check_schema_evolution(st, out.schema, name)
         vdir = store.new_version_path()
@@ -1913,12 +1876,8 @@ class TableStore:
             e = new_manifest.get(fk)
             if e is None:
                 continue  # emptied or dissolved: floor gone with it
-            if isinstance(e, str):
-                # dir-form entry (file counts unknown here): keep —
-                # the config is file-COW for floors to exist at all,
-                # so this is a legacy carrier about to self-heal
-                out[fk] = fl
-                continue
+            # floors exist only under a file-COW config, whose writers
+            # land file-form entries
             n_files = len(e["files"])
             if n_files <= thresh:
                 continue  # back under threshold: no floor needed
@@ -2185,8 +2144,6 @@ class TableStore:
             chosen_keys = self._dissolve_closure(
                 manifest, {k for _j, ks in chosen for k in ks}, n, n2
             )
-            if not chosen_keys and self._schema_of(info) is None:
-                return None  # nothing to move, no schema to stamp
             return self._rebucketed(spark, store, info, chosen_keys, n2)
 
         res = self._cas_manifest(name, attempt)

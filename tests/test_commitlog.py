@@ -9,7 +9,6 @@ loud error) — never serve a half-published version."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -310,7 +309,15 @@ def test_vacuum_prunes_log_entries_below_retained(tmp_path):
         f.write(b"garbage")
     store.commit(vs[2])  # seq 4
     store.commit(vs[3])  # seq 5
-    ts_keep = {v: store._version_committed_at(v) for v in vs[2:]}
+
+    def committed_at(path):
+        # when ``path`` FIRST went live, from the log
+        return next(
+            p["committed_at"] for _s, p in store.log.history()
+            if p["path"] == path
+        )
+
+    ts_keep = {v: committed_at(v) for v in vs[2:]}
 
     removed = store.vacuum(keep=2)
     assert set(removed) == set(vs[:2])
@@ -320,7 +327,7 @@ def test_vacuum_prunes_log_entries_below_retained(tmp_path):
     assert store.current_path() == vs[3]
     assert not os.path.exists(os.path.join(store.log.dir, f"{3:020d}.json"))
     # lineage of retained versions is intact
-    assert {v: store._version_committed_at(v) for v in vs[2:]} == ts_keep
+    assert {v: committed_at(v) for v in vs[2:]} == ts_keep
     # keep=1 collapses to just the head entry — never past it
     store.vacuum(keep=1)
     assert [s for s, _p in store.log.history()] == [5]
@@ -508,27 +515,6 @@ def test_prune_sweeps_crashed_writer_tmp_files(tmp_path):
     assert ".put.deadbeef.tmp" not in names  # corpse swept
     assert ".put.cafebabe.tmp" in names  # live writer untouched
     assert log.head()[0] == 2
-
-
-def test_legacy_pointer_layout_still_resolves(spark, tmp_path):
-    """Pre-commit-log tables (a {name}.version.json pointer) keep
-    reading; the first WRITE through the new layer upgrades them to
-    the log (legacy pointer becomes inert, not corrupted)."""
-    from rialto_airflow_spark.storage import TableStore
-
-    root = tmp_path / "t"
-    store = TableStore(str(root))
-    # forge the legacy layout by hand
-    legacy_dir = root / "tbl" / "123-old"
-    spark.range(7).write.parquet(str(legacy_dir))
-    with open(root / "tbl.version.json", "w") as f:
-        json.dump({"path": str(legacy_dir), "written_at": 0}, f)
-
-    assert store.read(spark, "tbl").count() == 7
-    store.write(spark.range(2), "tbl")
-    assert store.read(spark, "tbl").count() == 2
-    # legacy data dir still listed for time travel
-    assert any(v["path"] == str(legacy_dir) for v in store.versions("tbl"))
 
 
 def test_hadoop_fs_backend_end_to_end(spark, tmp_path):

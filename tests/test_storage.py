@@ -403,3 +403,78 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert pruned.count() == 250
     assert "pub_year=2001" in plan or "PartitionFilters" in plan
+
+
+def test_manifest_writers_record_schema_and_stray_pointer_does_not_resolve(
+    spark, tmp_path
+):
+    """The commit log is the one record a store reads: every manifest
+    writer commits a payload carrying the table's ``schema`` (reads
+    never fall back to a file footer), a manifest payload without one
+    is rejected, and a ``{name}.version.json`` file beside a table
+    that has no commit does not resolve."""
+    import json
+    import os
+
+    root = tmp_path / "t"
+    store = TableStore(str(root))
+    cols = ["k", "v"]
+
+    def schema_cols(name):
+        info = store.current_info(name)
+        assert "manifest" in info and "schema" in info, info
+        return TableStore._schema_of(info).fieldNames()
+
+    # a stray pre-log pointer naming real data: nothing commits it
+    stray = root / "tbl" / "123-old"
+    spark.range(7).write.parquet(str(stray))
+    with open(root / "tbl.version.json", "w") as f:
+        json.dump({"path": str(stray)}, f)
+    assert store.current_info("tbl") is None
+    with pytest.raises(FileNotFoundError):
+        store.read(spark, "tbl")
+
+    # empty bootstrap: the schema is all there is to read
+    store.write_manifest(
+        spark.createDataFrame([], "k bigint, v string"), "e", "k", n_buckets=4
+    )
+    assert schema_cols("e") == cols
+    assert store.read(spark, "e").columns == cols
+
+    rows = spark.createDataFrame([(i, f"r{i}") for i in range(20)], "k bigint, v string")
+    store.write_manifest(rows, "m", "k", n_buckets=4)
+    assert schema_cols("m") == cols
+    first = store.versions("m")[0]["version"]
+    store.upsert_manifest(
+        spark, "m", spark.createDataFrame([(3, "u"), (40, "n")], "k bigint, v string")
+    )
+    assert schema_cols("m") == cols
+    store.replace_keys_manifest(
+        spark, "m", spark.createDataFrame([(5,)], "k bigint"),
+        spark.createDataFrame([(5, "x")], "k bigint, v string"),
+    )
+    assert schema_cols("m") == cols
+    assert store.compact_buckets(spark, "m", max_carriers=1) is not None
+    assert schema_cols("m") == cols
+    assert store.split_buckets(spark, "m", factor=2) is not None
+    assert schema_cols("m") == cols
+    assert store.merge_buckets(spark, "m", factor=2) is not None
+    assert schema_cols("m") == cols
+    got = {(r["k"], r["v"]) for r in store.read(spark, "m").collect()}
+    assert (3, "u") in got and (40, "n") in got and (5, "x") in got
+    assert len(got) == 21
+    store.restore("m", first)
+    assert schema_cols("m") == cols
+    assert store.read(spark, "m").count() == 20
+
+    store.write(rows, "p")
+    store.migrate_to_manifest(spark, "p", "k", n_buckets=4)
+    assert schema_cols("p") == cols
+
+    # a manifest payload without a schema is malformed input
+    bad = store._store("bad")
+    vdir = bad.new_version_path()
+    os.makedirs(vdir)
+    bad.commit(vdir, extra={"manifest": {}, "n_buckets": 4, "bucket_key": "k"})
+    with pytest.raises(ValueError, match="records no schema"):
+        store.read(spark, "bad")
